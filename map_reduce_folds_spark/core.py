@@ -16,20 +16,25 @@ pipelined narrow stages + shuffle + whole-stage codegen:
     reduce  ->  .agg(e1, ..., eN)         (ReduceFold, Core.hs:181; the
                                            applicative N-aggregates-one-
                                            shuffle fusion, Core.hs:211-218)
-                .applyInPandas(fn)        (whole-group Reduce, Core.hs:180,
-                                           and non-compilable custom folds)
+                repartition(k...)         (whole-group Reduce, Core.hs:180,
+                .sortWithinPartitions(k)   and non-compilable custom folds:
+                .mapInArrow(fn)            whole groups batched per Arrow
+                                           batch — see _grouped_map)
 
 Scale notes
 -----------
 * The ``.agg`` path gets map-side partial aggregation, AQE partition
   coalescing and skew handling for free — this is the 100 TB path.
 * Custom folds WITH ``merge`` run as two-stage pandas aggregation
-  (partition-local fold via mapInPandas, then per-key merge): still does
-  partial aggregation, so no group ever materializes on one executor.
-* Custom folds WITHOUT ``merge`` must see the whole group
-  (``applyInPandas``) — exactly the reference's limitation (its foldl folds
-  have no merge either, SURVEY §4) — documented as the non-scalable escape
-  hatch.
+  (partition-local fold via mapInPandas, then per-key merge in the batched
+  group-map): still does partial aggregation, so no group ever
+  materializes on one executor.
+* Custom folds WITHOUT ``merge`` must see the whole group (the batched
+  group-map, ``_grouped_map``: one key shuffle, then whole groups per
+  Arrow batch) — exactly the reference's limitation (its foldl folds have
+  no merge either, SURVEY §4) — documented as the non-scalable escape
+  hatch.  A group is still materialized whole in one task; batching only
+  removes the per-group Arrow stream and pandas conversion.
 """
 
 from __future__ import annotations
@@ -38,6 +43,8 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Mapping, Sequence
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -208,6 +215,178 @@ class Reduce:
         raise NotImplementedError
 
 
+def _key_fields(df: DataFrame, key_names: Sequence[str]) -> list[str]:
+    """DDL fields of the key columns (none for a global reduce)."""
+    return [f"{f.name} {f.dataType.simpleString()}"
+            for f in df.schema.fields if f.name in key_names]
+
+
+def _key_breaks(left: Sequence[Any], right: Sequence[Any]) -> Any:
+    """Boolean array: True where row i of the ``right`` key columns differs
+    from row i of the ``left`` ones, with Spark's grouping equality (null
+    equals null, NaN equals NaN)."""
+    brk = None
+    for a, b in zip(left, right):
+        d = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
+                   pc.xor(pc.is_null(a), pc.is_null(b)))
+        if pa.types.is_floating(a.type):
+            both_nan = pc.and_(pc.fill_null(pc.is_nan(a), False),
+                               pc.fill_null(pc.is_nan(b), False))
+            d = pc.and_(d, pc.invert(both_nan))
+        brk = d if brk is None else pc.or_(brk, d)
+    return brk
+
+
+def _grouped_map(df: DataFrame, key_names: Sequence[str],
+                 fn: Callable[[tuple, pd.DataFrame], Any],
+                 schema: str) -> DataFrame:
+    """The effectful reduce (Core.hs:179-181) as one batched Arrow map:
+    ``fn(key_tuple, group_pdf)`` runs once per whole group, as under
+    PySpark's pandas grouped map, but whole groups share Arrow batches
+    instead of each group travelling as its own Arrow stream.
+
+    Plan: ``repartition(*keys)`` (``repartition(1)`` with no keys) — the
+    same one ``Exchange`` a grouped map plans — then
+    ``sortWithinPartitions(*keys)`` and ``mapInArrow``.  Each sorted batch
+    is split into per-key runs; a batch's last run is carried into the
+    next batch as a list of slices until its key changes.
+
+    ``fn`` sees exactly what the pandas grouped map gives it: each batch is
+    converted once with PySpark's own grouped-map serializer (session time
+    zone, dates as objects), and only the columns holding nulls in that
+    batch are re-converted per group, so a group without nulls keeps its
+    integer/bool dtypes and exact values.  ``fn`` returns a DataFrame or
+    one row as a dict; a batch's results go back as one Arrow batch,
+    columns matched by name, through the same serializer's casts."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    conf = df.sparkSession.conf
+    timezone = conf.get("spark.sql.session.timeZone")
+
+    def flag(name: str, default: str) -> bool:
+        return conf.get(name, default).lower() == "true"
+
+    by_name = flag(
+        "spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName",
+        "true")
+    ser_args = (
+        timezone,
+        flag("spark.sql.execution.pandas.convertToArrowArraySafely", "false"),
+        by_name,
+        flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled",
+             "false"),
+    )
+    out_type = StructType.fromDDL(schema)
+    out_arrow = to_arrow_schema(out_type)
+    out_struct = pa.struct(list(out_arrow))
+    knames = list(key_names)
+    key_idx = [df.columns.index(k) for k in knames]
+
+    def run(batches: Iterable[Any]) -> Iterable[Any]:
+        import numpy as np
+        from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+        from pyspark.worker import verify_pandas_result
+
+        ser = GroupPandasUDFSerializer(*ser_args)
+
+        def to_pandas(table: Any) -> pd.DataFrame:
+            return pd.concat([ser.arrow_to_pandas(c, i)
+                              for i, c in enumerate(table.itercolumns())], axis=1)
+
+        def call(pdf: pd.DataFrame) -> Any:
+            # the key tuple as the grouped map builds it: each key series' [0]
+            return fn(tuple(pdf.iloc[:, i][0] for i in key_idx), pdf)
+
+        def to_batch(results: list) -> Any:
+            rows = [r for r in results if isinstance(r, dict)]
+            frames = [r for r in results if not isinstance(r, dict)]
+            for f in frames:
+                verify_pandas_result(f, out_type, by_name, False)
+            if rows:
+                rf = pd.DataFrame(rows)
+                for fld in out_arrow:
+                    # a null among integers makes pandas widen the column to
+                    # float64; keep the exact ints as objects instead
+                    if (pa.types.is_integer(fld.type) and fld.name in rf
+                            and rf[fld.name].dtype.kind == "f"):
+                        rf[fld.name] = pd.Series(
+                            [r.get(fld.name) for r in rows], dtype=object)
+                frames.append(rf)
+            frames = [f for f in frames if len(f)]
+            if not frames:
+                return None
+            # one conversion for the batch when every result has the same
+            # columns and dtypes; otherwise one per result, so no result's
+            # values are widened by another's dtype
+            if len({tuple(f.dtypes.items()) for f in frames}) == 1:
+                frames = [pd.concat(frames, ignore_index=True)]
+            arr = pa.concat_arrays([ser._create_struct_array(f, out_struct)
+                                    for f in frames])
+            return pa.RecordBatch.from_struct_array(arr)
+
+        def groups(batch: Any) -> list[tuple[int, int]]:
+            """(start, end) of each key run in a sorted batch."""
+            n = batch.num_rows
+            if not key_idx:
+                return [(0, n)]
+            keys = [batch.column(i) for i in key_idx]
+            brk = _key_breaks([k.slice(0, n - 1) for k in keys],
+                              [k.slice(1) for k in keys])
+            starts = [0, *(np.flatnonzero(
+                brk.to_numpy(zero_copy_only=False)) + 1).tolist()]
+            return list(zip(starts, [*starts[1:], n]))
+
+        def continues(last: Any, batch: Any) -> bool:
+            """Does ``batch`` open with the key ``last`` ended on?"""
+            if not key_idx:
+                return True
+            return not _key_breaks(
+                [last.column(i).slice(last.num_rows - 1) for i in key_idx],
+                [batch.column(i).slice(0, 1) for i in key_idx])[0].as_py()
+
+        pending: list = []  # slices of the group still open at a batch end
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            runs = groups(batch)
+            results: list = []
+            if pending and continues(pending[-1], batch):
+                s, e = runs.pop(0)
+                pending.append(batch.slice(s, e - s))
+            if pending and runs:
+                results.append(call(to_pandas(pa.Table.from_batches(pending))))
+                pending = []
+            if runs:
+                # the batch's last run may continue into the next batch
+                s, _ = runs.pop()
+                pending = [batch.slice(s)]
+            if runs:
+                table = pa.Table.from_batches([batch])
+                pdf = to_pandas(table)
+                nulls = [i for i, c in enumerate(table.itercolumns())
+                         if c.null_count]
+                for s, e in runs:
+                    g = pdf.iloc[s:e].reset_index(drop=True)
+                    for i in nulls:
+                        g.isetitem(i, ser.arrow_to_pandas(
+                            table.column(i).slice(s, e - s), i))
+                    results.append(call(g))
+            out = to_batch(results)
+            if out is not None:
+                yield out
+        if pending:
+            out = to_batch([call(to_pandas(pa.Table.from_batches(pending)))])
+            if out is not None:
+                yield out
+
+    if knames:
+        parted = df.repartition(*knames).sortWithinPartitions(*knames)
+    else:
+        parted = df.repartition(1)
+    return parted.mapInArrow(run, schema=out_type)
+
+
 @dataclass
 class FoldReduce(Reduce):
     """Per-group folds — ``ReduceFold`` (Core.hs:181).
@@ -219,8 +398,9 @@ class FoldReduce(Reduce):
     If every fold is Catalyst-compilable → builtin aggregate path.
     Else if every non-compilable fold has ``merge`` → two-stage pandas path
     (partition-local partial fold, then merge per key: map-side combine).
-    Else → whole-group ``applyInPandas`` (escape hatch, reference-equivalent
-    semantics, not scalable to giant groups).
+    Else → whole-group pandas folds in the batched group-map
+    (:func:`_grouped_map`; escape hatch, reference-equivalent semantics,
+    not scalable to giant groups).
     """
 
     folds: Mapping[str, Fold]
@@ -286,19 +466,14 @@ class FoldReduce(Reduce):
         import json
 
         folds = dict(self.folds)
-        key_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields if f.name in key_names
-        )
+        key_fields = _key_fields(df, key_names)
         value_names = [c for c in df.columns if c not in key_names]
         # states travel as JSON strings — schema-free, and custom fold
         # states are tiny by definition (they summarize a partition)
-        part_schema = key_schema + ", " + ", ".join(
-            f"__st_{i} string" for i in range(len(folds))
-        )
-        out_schema = key_schema + ", " + ", ".join(
-            f"{n} {f.dtype}" for n, f in folds.items()
-        )
+        part_schema = ", ".join(
+            key_fields + [f"__st_{i} string" for i in range(len(folds))])
+        out_schema = ", ".join(
+            key_fields + [f"{n} {f.dtype}" for n, f in folds.items()])
         fold_list = list(folds.values())
         knames = list(key_names)
 
@@ -327,7 +502,7 @@ class FoldReduce(Reduce):
                 ]
                 yield pd.DataFrame(out)
 
-        def merge_extract(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_extract(keys: tuple, pdf: pd.DataFrame) -> dict:
             row = dict(zip(knames, keys))
             for i, (name, f) in enumerate(folds.items()):
                 states = [json.loads(s) for s in pdf[f"__st_{i}"]]
@@ -335,29 +510,24 @@ class FoldReduce(Reduce):
                 for s in states[1:]:
                     acc = f.merge(acc, s)
                 row[name] = f.extract(acc)
-            return pd.DataFrame([row])
+            return row
 
         partials = df.mapInPandas(partial, schema=part_schema)
-        return partials.groupBy(*knames).applyInPandas(merge_extract, schema=out_schema)
+        return _grouped_map(partials, knames, merge_extract, out_schema)
 
     def _pandas_path(self, df: DataFrame, key_names: Sequence[str]) -> DataFrame:
         folds = dict(self.folds)
-        key_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields if f.name in key_names
-        )
-        out_schema = key_schema + ", " + ", ".join(
-            f"{n} {f.dtype}" for n, f in folds.items()
-        )
+        out_schema = ", ".join(_key_fields(df, key_names) + [
+            f"{n} {f.dtype}" for n, f in folds.items()])
 
-        def reduce_group(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def reduce_group(keys: tuple, pdf: pd.DataFrame) -> dict:
             vals = pdf.drop(columns=list(key_names))
             row = dict(zip(key_names, keys))
             for n, f in folds.items():
                 row[n] = f.pandas_agg(vals)
-            return pd.DataFrame([row])
+            return row
 
-        return df.groupBy(*key_names).applyInPandas(reduce_group, schema=out_schema)
+        return _grouped_map(df, key_names, reduce_group, out_schema)
 
 
 @dataclass
@@ -366,9 +536,10 @@ class GroupReduce(Reduce):
     (Core.hs:180) / ``processAndLabel`` (Simple.hs:126-141), and the
     key-dependent fold ``k -> Fold c d`` (Core.hs:181).
 
-    ``fn(key_tuple, pdf) -> pd.DataFrame`` runs per group via
-    ``applyInPandas``; ``schema`` is the output DDL (must include any key
-    columns you emit).
+    ``fn(key_tuple, pdf) -> pd.DataFrame`` runs once per whole group in the
+    batched group-map (:func:`_grouped_map`), seeing the key tuple and
+    frame a pandas grouped map would give it; ``schema`` is the output DDL
+    (must include any key columns you emit; columns match by name).
 
     ``order_by`` opts into the reference's group-internal encounter order
     (``Seq c``, Engines/List.hs:70-79): the group's rows are sorted by the
@@ -391,7 +562,7 @@ class GroupReduce(Reduce):
             run = ordered_fn
         else:
             run = fn
-        return df.groupBy(*key_names).applyInPandas(run, schema=self.schema)
+        return _grouped_map(df, key_names, run, self.schema)
 
 
 # ---------------------------------------------------------------------------

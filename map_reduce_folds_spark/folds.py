@@ -19,7 +19,8 @@ Every builtin fold carries two backends:
 * ``spark_agg`` — a Catalyst aggregate expression (JVM-side, whole-stage
   codegen, map-side partial aggregation: the scale path)
 * ``pandas_agg`` — a pandas reduction, used only when a fold that Catalyst
-  cannot express forces the whole reduce onto the ``applyInPandas`` path
+  cannot express forces the whole reduce onto the whole-group pandas path
+  (``core._grouped_map``: whole groups batched per Arrow batch)
 
 Custom folds (the reference's ``FL.Fold step begin done`` — Streamly.hs:140-141
 shows the triple explicitly) are built with :func:`fold_from_steps` (row-at-a-
@@ -54,7 +55,8 @@ class Fold:
     A fold consumes the value columns of a group and produces one output
     column.  ``compilable`` is True when it can run as Catalyst aggregate
     expressions (preferred); otherwise the enclosing reduce falls back to
-    ``applyInPandas`` and uses :meth:`pandas_agg`.
+    the whole-group pandas path (``core._grouped_map``) and uses
+    :meth:`pandas_agg`.
     """
 
     #: DDL type of the result, used when the pandas fallback path must build

@@ -106,7 +106,8 @@ _DERIVING_NODES = (
     "HashAggregate", "ObjectHashAggregate", "SortAggregate", "Window",
     "Generate", "Expand", "SortMergeJoin", "BroadcastHashJoin",
     "ShuffledHashJoin", "FlatMapGroupsInPandas", "MapInPandas",
-    "ArrowEvalPython", "BatchEvalPython", "Union", "AggregateInPandas",
+    "MapInArrow", "ArrowEvalPython", "BatchEvalPython", "Union",
+    "AggregateInPandas",
 )
 
 

@@ -235,7 +235,7 @@ def mr_first_last_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mr_product_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product fold + vectorized pandas fold, BOTH in one reduce — the
     applicative composition on the effectful path (Applicative ReduceM,
-    Core.hs:211-218): two non-Catalyst folds share one applyInPandas pass.
+    Core.hs:211-218): two non-Catalyst folds share one whole-group pass.
     Per-order groups are ≤7 rows of values ≤50, so the double product
     (≤50⁷ < 2⁵³) and the median are exact in both engines."""
     li = load_table(spark, sf_dir, "lineitem").filter("l_orderkey % 20 = 0")

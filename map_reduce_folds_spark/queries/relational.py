@@ -4510,6 +4510,7 @@ def _confseq_stream_stateful_impl(spark: SparkSession,
     on both sides.  Final per-cohort state = the max-n_cum emission
     (monotone per key under update mode)."""
     import os
+    import shutil
     import tempfile
     import time
 
@@ -4524,27 +4525,33 @@ def _confseq_stream_stateful_impl(spark: SparkSession,
     cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
     src = tempfile.mkdtemp(prefix="mrf_confseq_stream_")
     stage = tempfile.mkdtemp(prefix="mrf_confseq_stage_")
-    t0 = time.time()
-    for i, (half, cond) in enumerate(
-            (("a", F.col("ts") <= F.lit(cut)),
-             ("b", F.col("ts") > F.lit(cut)))):
-        d = os.path.join(stage, half)
-        ev.where(cond).select("bucket", "succ").coalesce(1) \
-            .write.mode("overwrite").parquet(d)
-        n = 0
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                tgt = os.path.join(d, f)
-                os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                os.symlink(tgt, os.path.join(src, f"{half}_{n}.parquet"))
-                n += 1
-    stream = read_parquet_stream(
-        spark, src, "bucket bigint, succ bigint", max_files_per_trigger=1)
-    out = stream_confseq(stream, "bucket", "succ")
-    got = run_to_memory(out, "confseq_stream_stateful_q",
-                        timeout_s=300, output_mode="update",
-                        state_partitions=adaptive_state_partitions(
-                            spark, staged_parquet_rows(src)))
+    try:
+        t0 = time.time()
+        for i, (half, cond) in enumerate(
+                (("a", F.col("ts") <= F.lit(cut)),
+                 ("b", F.col("ts") > F.lit(cut)))):
+            d = os.path.join(stage, half)
+            ev.where(cond).select("bucket", "succ").coalesce(1) \
+                .write.mode("overwrite").parquet(d)
+            n = 0
+            for f in sorted(os.listdir(d)):
+                if f.endswith(".parquet"):
+                    tgt = os.path.join(d, f)
+                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
+                    os.symlink(tgt, os.path.join(src, f"{half}_{n}.parquet"))
+                    n += 1
+        stream = read_parquet_stream(
+            spark, src, "bucket bigint, succ bigint", max_files_per_trigger=1)
+        out = stream_confseq(stream, "bucket", "succ")
+        # the memory sink holds the rows once this returns, so the staged
+        # files can go without a checkpoint of the result
+        got = run_to_memory(out, "confseq_stream_stateful_q",
+                            timeout_s=300, output_mode="update",
+                            state_partitions=adaptive_state_partitions(
+                                spark, staged_parquet_rows(src)))
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
     return (got.groupBy("bucket")
             .agg(F.max_by(F.struct("n_cum", "s_cum", "rate", "radius",
                                    "lo", "hi"), "n_cum").alias("s"))

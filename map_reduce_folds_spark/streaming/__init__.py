@@ -137,16 +137,23 @@ def adaptive_state_partitions(spark: SparkSession, input_rows: int) -> int:
 def staged_parquet_rows(src_dir: str) -> int:
     """Exact row count of a staged replay directory from parquet FOOTERS
     (no Spark job, no data read) — the input-size probe
-    :func:`adaptive_state_partitions` wants."""
+    :func:`adaptive_state_partitions` wants.  Directory entries (a
+    Spark-written ``x.parquet/`` of part files, or a symlink to one) are
+    counted recursively; ``_``/``.``-prefixed metadata files are skipped,
+    as Spark skips them."""
     import os as _os
 
     import pyarrow.parquet as _pq
 
     total = 0
     for f in _os.listdir(src_dir):
-        if f.endswith(".parquet"):
-            total += _pq.ParquetFile(
-                _os.path.join(src_dir, f)).metadata.num_rows
+        if f.startswith(("_", ".")):
+            continue
+        path = _os.path.join(src_dir, f)
+        if _os.path.isdir(path):  # follows symlinks
+            total += staged_parquet_rows(path)
+        elif f.endswith(".parquet"):
+            total += _pq.ParquetFile(path).metadata.num_rows
     return total
 
 

@@ -117,7 +117,7 @@ def test_mapinpandas_unpack(ints10):
 
 
 def test_custom_fold_pandas_path(ints10):
-    """Non-compilable fold → applyInPandas fallback; mixes with builtins."""
+    """Non-compilable fold → whole-group pandas fallback; mixes with builtins."""
     sum_sq = folds.fold_from_pandas(lambda p: float((p["v"] ** 2).sum()), dtype="double")
     mr = MapReduce(
         unpack=Filter("x % 2 = 0"),
@@ -211,9 +211,15 @@ def test_merge_path_distributed_custom_fold(spark):
     for x in range(1, 1001):
         exp[x % 3] = exp.get(x % 3, 0) + x * x
     assert got == {k: float(v) for k, v in exp.items()}
-    # the plan's shuffle input is the partial-state stream, not raw rows
+    # the plan's shuffle input is the partial-state stream, not raw rows:
+    # one key Exchange, fed by the partial fold, read by the merge
     plan = mr.run(df)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    nodes = [ln.lstrip(" :+-") for ln in plan.splitlines()]
+    ex = [i for i, n in enumerate(nodes) if n.startswith("Exchange hashpartitioning")]
+    assert len(ex) == 1, plan
+    assert nodes[ex[0]].startswith("Exchange hashpartitioning(k#"), plan
+    assert nodes[ex[0] + 1].startswith("MapInPandas partial("), plan
+    assert any(n.startswith("MapInArrow") for n in nodes[:ex[0]]), plan
 
 
 def test_assign_udf(spark):

@@ -596,6 +596,42 @@ def test_scale_audit_fat_sort_rule(spark):
             spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
+def test_bucketed_join_rule_skips_grouped_reduce_side(spark):
+    """A grouped reduce (``GroupReduce`` runs as ``MapInArrow`` over a key
+    shuffle) derives its relation: a shuffle join fed by it must not be
+    reported as a bare-scan shuffle that bucketing could remove."""
+    import pandas as pd
+
+    from map_reduce_folds_spark.core import Assign, GroupReduce, MapReduce
+    from map_reduce_folds_spark.sources import load_table
+
+    def per_order(key, pdf):
+        return pd.DataFrame([{"k": key[0], "n": len(pdf)}])
+
+    g = MapReduce(
+        assign=Assign(keys={"k": "l_orderkey"}, values={"v": "l_quantity"}),
+        reduce=GroupReduce(per_order, schema="k bigint, n bigint"),
+    ).run(load_table(spark, SF_DIR, "lineitem"))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold",
+                             None)
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        j = g.alias("a").join(g.alias("b"), "k")
+        j.collect()
+        plan = P.executed_plan(j)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        if old_aqe is not None:
+            spark.conf.set(
+                "spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
+        else:
+            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    assert "SortMergeJoin" in plan and "MapInArrow" in plan, plan
+    assert "k" not in P._bucketable_shuffle_joins(plan), plan
+
+
 def test_sorted_neighborhood_no_cartesian(spark):
     """The SNB positional join must stay an equi-join: a condition mixing
     left and right columns (p + d = pb) degrades to CartesianProduct —

@@ -1605,3 +1605,42 @@ def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path_factory):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     rows = {r["k"]: (r["n_cum"], r["s_cum"]) for r in got.collect()}
     assert rows == {1: (2, 1), 2: (1, 1)}
+
+
+def test_staged_parquet_rows_directory_shaped(spark, tmp_path):
+    """A Spark-written ``x.parquet/`` directory of part files counts by its
+    part footers, reached directly or through a symlink in a staged replay
+    directory (the sessionize staging shape)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_folds_spark.streaming import staged_parquet_rows
+
+    ev = str(tmp_path / "events.parquet")
+    spark.range(23).repartition(3).write.mode("overwrite").parquet(ev)
+    assert os.path.isdir(ev)
+    assert staged_parquet_rows(ev) == 23
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.table({"id": pa.array([-1], pa.int64())}),
+                   str(src / "sentinel_0.parquet"))
+    os.symlink(ev, str(src / "events.parquet"))
+    assert staged_parquet_rows(str(src)) == 24
+
+
+def test_confseq_stream_stateful_removes_staging_dirs(spark, tmp_path,
+                                                      monkeypatch):
+    """The confseq replay removes both staging directories before it
+    returns; its result is still readable afterwards (the memory sink holds
+    the rows) and covers every event."""
+    import tempfile
+
+    from map_reduce_folds_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = QUERIES["confseq_stream_stateful"](spark, SF_DIR)
+    assert not [f for f in os.listdir(tmp_path)
+                if f.startswith("mrf_confseq_")]
+    rows = out.collect()
+    n_events = load_table(spark, SF_DIR, "events").count()
+    assert rows and sum(r["n_cum"] for r in rows) == n_events
