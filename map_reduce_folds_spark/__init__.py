@@ -22,38 +22,46 @@ share one pass and applicative reduces share one grouping
 ``.agg`` with N aggregate expressions, i.e. one shuffle.
 """
 
-from map_reduce_folds_spark.core import (
-    Assign,
-    AssignUDF,
-    Filter,
-    FoldReduce,
-    GroupReduce,
-    Keep,
-    MapInPandas,
-    MapReduce,
-    Melt,
-    Transform,
-    concat,
-    shared_scan,
-)
-from map_reduce_folds_spark import folds
-from map_reduce_folds_spark.session import get_spark
+import importlib
 
-__all__ = [
-    "Assign",
-    "AssignUDF",
-    "Filter",
-    "FoldReduce",
-    "GroupReduce",
-    "Keep",
-    "MapInPandas",
-    "MapReduce",
-    "Melt",
-    "Transform",
-    "concat",
-    "folds",
-    "get_spark",
-    "shared_scan",
-]
+# name -> submodule it lives in.  Resolved on first access (PEP 562), so
+# importing the package — as ``python -m map_reduce_folds_spark.pyworker``
+# does before PySpark's daemon forks its workers — loads no pandas, pyarrow
+# or Spark session code.
+_EXPORTS = {
+    "Assign": "core",
+    "AssignUDF": "core",
+    "Filter": "core",
+    "FoldReduce": "core",
+    "GroupReduce": "core",
+    "Keep": "core",
+    "MapInPandas": "core",
+    "MapReduce": "core",
+    "Melt": "core",
+    "Transform": "core",
+    "concat": "core",
+    "shared_scan": "core",
+    "folds": None,
+    "get_spark": "session",
+}
+
+__all__ = sorted(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    sub = _EXPORTS[name]
+    if sub is None:
+        value = importlib.import_module(f"{__name__}.{name}")
+    else:
+        value = getattr(importlib.import_module(f"{__name__}.{sub}"), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list[str]:
+    return sorted(set(globals()) | set(_EXPORTS))
+
 
 __version__ = "0.1.0"

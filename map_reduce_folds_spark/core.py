@@ -25,8 +25,8 @@ Scale notes
 -----------
 * The ``.agg`` path gets map-side partial aggregation, AQE partition
   coalescing and skew handling for free — this is the 100 TB path.
-* Custom folds WITH ``merge`` run as two-stage pandas aggregation
-  (partition-local fold via mapInPandas, then per-key merge in the batched
+* Custom folds WITH ``merge`` run as two-stage aggregation
+  (partition-local fold via mapInArrow, then per-key merge in the batched
   group-map): still does partial aggregation, so no group ever
   materializes on one executor.
 * Custom folds WITHOUT ``merge`` must see the whole group (the batched
@@ -237,6 +237,31 @@ def _key_breaks(left: Sequence[Any], right: Sequence[Any]) -> Any:
     return brk
 
 
+def _rows(columns: Sequence[Iterable[Any]], n: int) -> Iterable[tuple]:
+    """The ``n`` rows of ``columns`` as tuples (``n`` empty ones if there
+    are no columns)."""
+    return zip(*columns) if columns else [()] * n
+
+
+def _group_serializer_args(df: DataFrame) -> tuple:
+    """Arguments of PySpark's ``GroupPandasUDFSerializer`` under the
+    session's conf, as a pandas grouped map builds it: time zone, safe
+    casts, columns by name, int-to-decimal coercion."""
+    conf = df.sparkSession.conf
+
+    def flag(name: str, default: str) -> bool:
+        return conf.get(name, default).lower() == "true"
+
+    return (
+        conf.get("spark.sql.session.timeZone"),
+        flag("spark.sql.execution.pandas.convertToArrowArraySafely", "false"),
+        flag("spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName",
+             "true"),
+        flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled",
+             "false"),
+    )
+
+
 def _grouped_map(df: DataFrame, key_names: Sequence[str],
                  fn: Callable[[tuple, pd.DataFrame], Any],
                  schema: str) -> DataFrame:
@@ -261,22 +286,8 @@ def _grouped_map(df: DataFrame, key_names: Sequence[str],
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    conf = df.sparkSession.conf
-    timezone = conf.get("spark.sql.session.timeZone")
-
-    def flag(name: str, default: str) -> bool:
-        return conf.get(name, default).lower() == "true"
-
-    by_name = flag(
-        "spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName",
-        "true")
-    ser_args = (
-        timezone,
-        flag("spark.sql.execution.pandas.convertToArrowArraySafely", "false"),
-        by_name,
-        flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled",
-             "false"),
-    )
+    ser_args = _group_serializer_args(df)
+    by_name = ser_args[2]
     out_type = StructType.fromDDL(schema)
     out_arrow = to_arrow_schema(out_type)
     out_struct = pa.struct(list(out_arrow))
@@ -458,8 +469,9 @@ class FoldReduce(Reduce):
 
     def _merge_path(self, df: DataFrame, key_names: Sequence[str]) -> DataFrame:
         """Distributed custom folds: partition-local partial fold
-        (mapInPandas) → shuffle only (key, state) rows → per-key merge +
-        extract.  This is the map-side combine the reference cannot do
+        (mapInArrow, keys read exactly from the Arrow columns) → shuffle
+        only (key, state) rows → per-key merge + extract.  This is the
+        map-side combine the reference cannot do
         (foldl folds lack ``merge`` — SURVEY §4 'notably absent'): shuffle
         volume is #partitions × #keys, not #rows, and no group ever
         materializes in one task."""
@@ -470,37 +482,49 @@ class FoldReduce(Reduce):
         value_names = [c for c in df.columns if c not in key_names]
         # states travel as JSON strings — schema-free, and custom fold
         # states are tiny by definition (they summarize a partition)
-        part_schema = ", ".join(
-            key_fields + [f"__st_{i} string" for i in range(len(folds))])
+        st_names = [f"__st_{i}" for i in range(len(folds))]
+        part_schema = ", ".join(key_fields + [f"{s} string" for s in st_names])
         out_schema = ", ".join(
             key_fields + [f"{n} {f.dtype}" for n, f in folds.items()])
         fold_list = list(folds.values())
         knames = list(key_names)
+        # the partial batch's key columns in the order of ``key_fields``
+        key_idx = [i for i, c in enumerate(df.columns) if c in key_names]
+        part_names = [df.columns[i] for i in key_idx] + st_names
+        val_idx = [df.columns.index(v) for v in value_names]
+        ser_args = _group_serializer_args(df)
 
-        def partial(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
+        def partial(batches: Iterable[Any]) -> Iterable[Any]:
+            from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+
+            ser = GroupPandasUDFSerializer(*ser_args)
+            for batch in batches:
+                n = batch.num_rows
+                if n == 0:
                     continue
+                # keys come exactly from the Arrow columns (pandas would
+                # widen a bigint key with a null to float64); values reach
+                # ``step`` as the group-map's converter gives them
+                keys = _rows([batch.column(i).to_pylist() for i in key_idx], n)
+                vals = _rows([ser.arrow_to_pandas(batch.column(i), i)
+                              for i in val_idx], n)
                 accs: dict[tuple, list] = {}
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    key = tuple(d[k] for k in knames)
+                first: list[int] = []  # row where each key first appears
+                for r, (key, v) in enumerate(zip(keys, vals)):
                     st = accs.get(key)
                     if st is None:
                         st = [f.init() if callable(f.init) else f.init
                               for f in fold_list]
                         accs[key] = st
-                    vals = tuple(d[v] for v in value_names)
-                    arg = vals if len(vals) > 1 else vals[0]
+                        first.append(r)
+                    arg = v if len(v) > 1 else v[0]
                     for i, f in enumerate(fold_list):
                         st[i] = f.step(st[i], arg)
-                out = [
-                    dict(zip(knames, key), **{
-                        f"__st_{i}": json.dumps(st[i]) for i in range(len(fold_list))
-                    })
-                    for key, st in accs.items()
-                ]
-                yield pd.DataFrame(out)
+                at = pa.array(first, pa.int64())
+                cols = [batch.column(i).take(at) for i in key_idx]
+                cols += [pa.array([json.dumps(st[i]) for st in accs.values()],
+                                  pa.string()) for i in range(len(fold_list))]
+                yield pa.RecordBatch.from_arrays(cols, names=part_names)
 
         def merge_extract(keys: tuple, pdf: pd.DataFrame) -> dict:
             row = dict(zip(knames, keys))
@@ -512,7 +536,7 @@ class FoldReduce(Reduce):
                 row[name] = f.extract(acc)
             return row
 
-        partials = df.mapInPandas(partial, schema=part_schema)
+        partials = df.mapInArrow(partial, schema=part_schema)
         return _grouped_map(partials, knames, merge_extract, out_schema)
 
     def _pandas_path(self, df: DataFrame, key_names: Sequence[str]) -> DataFrame:

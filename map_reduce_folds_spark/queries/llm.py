@@ -10,6 +10,9 @@ against the brute-force baseline instead).
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4162,20 +4165,24 @@ def _curation_v3_from(d: DataFrame, boundaries: bool = True) -> DataFrame:
         # stages share no state), so results are bit-identical.
         good_fut = _branch_pool().submit(
             lambda: good_lazy.localCheckpoint(eager=True))
-    marked = _nb_marked_df(d)
-    nb = Q.nb_classify(marked, "lang", F.expr(_NB_TRAIN_SQL),
-                       n_buckets=_NB_B, alpha=_NB_ALPHA)
-    agree = cut(nb.join(d.select("doc_id", "lang"), "doc_id")
-                .where(F.col("pred") == F.col("lang")).select("doc_id"))
-    s1 = d.join(agree, "doc_id", "left_semi")
-    pairs = T.winnow_overlap_pairs(s1, k=_WIN_K, w=_WIN_W,
-                                   min_shared=2, max_df=10)
-    drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    if boundaries:
-        drop = drop.localCheckpoint(eager=True)  # runs ∥ good_fut
-        good = good_fut.result()
-    else:
-        good = good_lazy
+    try:
+        marked = _nb_marked_df(d)
+        nb = Q.nb_classify(marked, "lang", F.expr(_NB_TRAIN_SQL),
+                           n_buckets=_NB_B, alpha=_NB_ALPHA)
+        agree = cut(nb.join(d.select("doc_id", "lang"), "doc_id")
+                    .where(F.col("pred") == F.col("lang")).select("doc_id"))
+        s1 = d.join(agree, "doc_id", "left_semi")
+        pairs = T.winnow_overlap_pairs(s1, k=_WIN_K, w=_WIN_W,
+                                       min_shared=2, max_df=10)
+        drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        if boundaries:
+            drop = drop.localCheckpoint(eager=True)  # runs ∥ good_fut
+            good = good_fut.result()
+        else:
+            good = good_lazy
+    finally:
+        if boundaries:
+            _settle(good_fut)
     s2 = s1.join(drop, "doc_id", "left_anti")
     s3 = cut(s2.join(good, "doc_id", "left_semi")
              .select("doc_id", "source"))
@@ -4469,21 +4476,50 @@ def kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.kmeans_inertia(emb, centroids, "vec_id", "embedding", _DIM)
 
 
-_BRANCH_POOL = None
+class _BranchPool(ThreadPoolExecutor):
+    """A thread pool whose tasks may not submit into it: with every
+    worker waiting on a task queued behind it, the pool would deadlock."""
+
+    _in_task = threading.local()
+
+    def __init__(self, max_workers: int) -> None:
+        super().__init__(max_workers=max_workers,
+                         thread_name_prefix="mrf-branch",
+                         initializer=self._mark_worker)
+
+    def _mark_worker(self) -> None:
+        self._in_task.active = True
+
+    def submit(self, fn, /, *args, **kwargs):
+        if getattr(self._in_task, "active", False):
+            raise RuntimeError(
+                "a _branch_pool task submitted into _branch_pool; run the "
+                "nested branch inline (a full pool would deadlock)")
+        return super().submit(fn, *args, **kwargs)
 
 
-def _branch_pool():
+_BRANCH_POOL: _BranchPool | None = None
+_BRANCH_POOL_LOCK = threading.Lock()
+
+
+def _branch_pool() -> _BranchPool:
     """One process-lifetime 3-worker pool for overlapping INDEPENDENT
     driver-submitted job chains (kmeans_elbow's k-branches, curation
     v3's perplexity gate): pins 3 JVM threads ONCE instead of churning
-    a fresh pinned thread per branch per invocation."""
+    a fresh pinned thread per branch per invocation.  Created under a
+    lock, so concurrent first callers share one pool."""
     global _BRANCH_POOL
-    if _BRANCH_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
+    with _BRANCH_POOL_LOCK:
+        if _BRANCH_POOL is None:
+            _BRANCH_POOL = _BranchPool(max_workers=3)
+        return _BRANCH_POOL
 
-        _BRANCH_POOL = ThreadPoolExecutor(
-            max_workers=3, thread_name_prefix="mrf-branch")
-    return _BRANCH_POOL
+
+def _settle(fut: Future) -> None:
+    """Cancel ``fut`` if it has not started, else wait for it to end, so
+    no Spark job it launched runs on unobserved after its caller left."""
+    if not fut.cancel():
+        wait([fut])
 
 
 def _kmeans_elbow_sql() -> str:
@@ -6004,29 +6040,32 @@ def pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .select("doc_id"))
     keep_len_fut = _branch_pool().submit(
         lambda: keep_len_lazy.localCheckpoint(eager=True))
-    cq = SM.hash_split(
-        res.select("vec_id",
-                   F.floor(F.col("resid") * 1000000.0).cast("bigint")
-                   .alias("qr")),
-        "vec_id", weights=_CONF_W, salt="conformal") \
-        .localCheckpoint(eager=True)  # runs ∥ keep_len_fut
-    cal = cq.where(F.col("split") == "cal").withColumn("__g", F.lit(1))
-    cdist = cal.groupBy("__g", "qr").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c"))
-    cb = _ES.cum_below(cdist, ["__g"], "qr", ["__c"])
-    m = cal.groupBy("__g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("m_cal"))
-    kk = ((F.col("m_cal") + 1) * (1000 - _CONF_A) + 999) / F.lit(1000)
-    thr = (cb.join(m, "__g").groupBy("__g")
-           .agg(F.min(F.when(
-               F.col("below___c") + F.col("__c") >= kk.cast("bigint"),
-               F.col("qr"))).alias("tau")))
-    keep_emb = (cq.crossJoin(F.broadcast(thr.select("tau")))
-                .where((F.col("qr") <= F.col("tau"))
-                       | F.col("tau").isNull())
-                .select("vec_id"))
-    # (2) harmonized length band — materialized concurrently above
-    keep_len = keep_len_fut.result()
+    try:
+        cq = SM.hash_split(
+            res.select("vec_id",
+                       F.floor(F.col("resid") * 1000000.0).cast("bigint")
+                       .alias("qr")),
+            "vec_id", weights=_CONF_W, salt="conformal") \
+            .localCheckpoint(eager=True)  # runs ∥ keep_len_fut
+        cal = cq.where(F.col("split") == "cal").withColumn("__g", F.lit(1))
+        cdist = cal.groupBy("__g", "qr").agg(
+            F.count(F.lit(1)).cast("bigint").alias("__c"))
+        cb = _ES.cum_below(cdist, ["__g"], "qr", ["__c"])
+        m = cal.groupBy("__g").agg(
+            F.count(F.lit(1)).cast("bigint").alias("m_cal"))
+        kk = ((F.col("m_cal") + 1) * (1000 - _CONF_A) + 999) / F.lit(1000)
+        thr = (cb.join(m, "__g").groupBy("__g")
+               .agg(F.min(F.when(
+                   F.col("below___c") + F.col("__c") >= kk.cast("bigint"),
+                   F.col("qr"))).alias("tau")))
+        keep_emb = (cq.crossJoin(F.broadcast(thr.select("tau")))
+                    .where((F.col("qr") <= F.col("tau"))
+                           | F.col("tau").isNull())
+                    .select("vec_id"))
+        # (2) harmonized length band — materialized concurrently above
+        keep_len = keep_len_fut.result()
+    finally:
+        _settle(keep_len_fut)
     # (3) survivors -> leakage-safe cluster split
     # second shared boundary: survivors feed BOTH the simhash component
     # build and the labeling join — checkpoint so the two-gate filter

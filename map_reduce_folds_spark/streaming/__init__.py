@@ -20,6 +20,7 @@ State size is bounded by (#keys × #open windows), the quantity to watch at
 
 from __future__ import annotations
 
+import threading
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -157,6 +158,11 @@ def staged_parquet_rows(src_dir: str) -> int:
     return total
 
 
+# held by run_to_memory from pin to restore: the shuffle-partition conf is
+# session-global, so two overlapping calls must not interleave
+_PIN_LOCK = threading.Lock()
+
+
 def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
                   output_mode: str = "complete",
                   state_partitions: int | None = None) -> DataFrame:
@@ -168,25 +174,32 @@ def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
     lifetime: StreamExecution clones the session conf when the query
     starts, so the stateful operator's partition count is captured then
     and the session value can be restored afterwards.
+
+    The pin is session-global: any other job planned on the session while
+    the query runs sees the pinned value.  Calls to this function hold a
+    module lock for the whole drain, so overlapping calls run one after
+    another: none starts its stream under another's pin, and each
+    restores the value it found.
     """
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(int(state_partitions)))
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        q.stop()
-    finally:
+    with _PIN_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
         if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(int(state_partitions)))
+        try:
+            q = (
+                stream_df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(timeout_s)
+            q.stop()
+        finally:
+            if state_partitions is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
     return stream_df.sparkSession.table(name)
 
 

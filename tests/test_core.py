@@ -218,7 +218,7 @@ def test_merge_path_distributed_custom_fold(spark):
     ex = [i for i, n in enumerate(nodes) if n.startswith("Exchange hashpartitioning")]
     assert len(ex) == 1, plan
     assert nodes[ex[0]].startswith("Exchange hashpartitioning(k#"), plan
-    assert nodes[ex[0] + 1].startswith("MapInPandas partial("), plan
+    assert nodes[ex[0] + 1].startswith("MapInArrow partial("), plan
     assert any(n.startswith("MapInArrow") for n in nodes[:ex[0]]), plan
 
 

@@ -219,3 +219,27 @@ def test_empty_input_returns_no_rows(spark, adv, monkeypatch):
         assert _check(spark, monkeypatch, lambda: r.apply(kv, ["k"])) == []
         assert _check(spark, monkeypatch,
                       lambda: r.apply(kv.select("x"), [])) == []
+
+
+def test_merge_path_keeps_exact_bigint_keys(spark):
+    """The merge path's partial fold keys its states by the exact bigint
+    key: keys above 2^53 that share a float64 (2^53 and 2^53 + 1) stay
+    apart although their Arrow batch also holds a null key, which makes
+    pandas widen the key column to float64.  Keys named out of column
+    order keep their values too."""
+    keys = [None, 2 ** 53, BIG, BIG, 2 ** 53 + 2, BIG + 2, None, 2 ** 53]
+    df = spark.createDataFrame([(k, i % 2, 1) for i, k in enumerate(keys)],
+                               "k bigint, g bigint, v bigint").coalesce(1)
+    count = folds.fold_from_steps(
+        step=lambda a, v: a + v, init=lambda: 0, merge=lambda a, b: a + b,
+        dtype="bigint")
+    for by in (["k"], ["g", "k"]):
+        kv = df.select(*[c for c in ("k", "g") if c in by], "v")
+        got = sorted(map(repr, FoldReduce({"n": count}).apply(kv, by)
+                         .select(*by, "n").collect()))
+        exp = sorted(map(repr, kv.groupBy(*by).agg(F.count("v").alias("n"))
+                         .collect()))
+        assert got == exp, by
+    got = {r["k"]: r["n"] for r in
+           FoldReduce({"n": count}).apply(df.select("k", "v"), ["k"]).collect()}
+    assert got == {None: 2, 2 ** 53: 2, BIG: 2, 2 ** 53 + 2: 1, BIG + 2: 1}

@@ -4191,3 +4191,94 @@ def test_ipf_rake_invariants_2x2(spark):
     # odds ratio preserved: (9*6)/(3*2) = 9
     got_or = (m("r1", "c1") * m("r2", "c2")) / (m("r1", "c2") * m("r2", "c1"))
     assert abs(got_or - 9.0) < 1e-6
+
+
+def test_branch_pool_created_once_under_concurrent_first_calls(monkeypatch):
+    """Concurrent first callers of ``_branch_pool`` share one pool."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from map_reduce_folds_spark.queries import llm
+
+    made = []
+
+    class SlowPool(llm._BranchPool):
+        def __init__(self, max_workers):
+            time.sleep(0.05)  # widen the window between check and set
+            super().__init__(max_workers)
+            made.append(self)
+
+    monkeypatch.setattr(llm, "_BRANCH_POOL", None)
+    monkeypatch.setattr(llm, "_BranchPool", SlowPool)
+    go = threading.Barrier(8)
+
+    def first_call(_):
+        go.wait(timeout=30)
+        return llm._branch_pool()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            pools = set(map(id, ex.map(first_call, range(8), timeout=60)))
+        assert len(made) == 1 and len(pools) == 1
+    finally:
+        sys.setswitchinterval(interval)
+        for p in made:
+            p.shutdown()
+
+
+def test_branch_pool_task_cannot_submit_into_the_pool():
+    from map_reduce_folds_spark.queries import llm
+
+    pool = llm._branch_pool()
+    nested = pool.submit(lambda: pool.submit(lambda: 1).result())
+    with pytest.raises(RuntimeError, match="submitted into _branch_pool"):
+        nested.result(timeout=30)
+    assert pool.submit(lambda: 2).result(timeout=30) == 2
+
+
+def test_settle_cancels_queued_and_waits_for_running_futures():
+    import threading
+
+    from map_reduce_folds_spark.queries import llm
+
+    pool = llm._branch_pool()
+    release = threading.Event()
+    busy = [pool.submit(release.wait, 30) for _ in range(3)]
+    try:
+        queued = pool.submit(lambda: 1)
+        llm._settle(queued)
+        assert queued.cancelled()
+        threading.Timer(0.2, release.set).start()
+        llm._settle(busy[0])
+        assert busy[0].done() and not busy[0].cancelled()
+    finally:
+        release.set()
+
+
+def test_curation_v3_leaves_no_job_behind_on_error(docs, monkeypatch):
+    """An error while v3's perplexity gate materializes on the branch pool
+    must not leave that gate's future, and its Spark job, running
+    unobserved: by the time the error propagates, the future is done."""
+    from map_reduce_folds_spark.queries import llm
+
+    pool = llm._branch_pool()
+    submitted = []
+
+    class Recording:
+        def submit(self, fn, *args):
+            fut = pool.submit(fn, *args)
+            submitted.append(fut)
+            return fut
+
+    def boom(d):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(llm, "_branch_pool", Recording)
+    monkeypatch.setattr(llm, "_nb_marked_df", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        llm._curation_v3_from(docs)
+    assert len(submitted) == 1 and submitted[0].done()

@@ -1644,3 +1644,30 @@ def test_confseq_stream_stateful_removes_staging_dirs(spark, tmp_path,
     rows = out.collect()
     n_events = load_table(spark, SF_DIR, "events").count()
     assert rows and sum(r["n_cum"] for r in rows) == n_events
+
+
+def test_run_to_memory_overlapping_pins_restore_the_session_value(
+        spark, tmp_path_factory):
+    """Two overlapping pinning calls each restore the value they found, so
+    the session keeps its own value afterwards."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from map_reduce_folds_spark.streaming import (
+        read_parquet_stream, run_to_memory, stream_confseq)
+
+    p = str(tmp_path_factory.mktemp("rtm_overlap"))
+    spark.createDataFrame([(1, 1), (1, 0), (2, 1)], ["k", "y"]) \
+        .coalesce(1).write.mode("overwrite").parquet(p)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def drain(i):
+        out = stream_confseq(read_parquet_stream(spark, p, "k bigint, y bigint"),
+                             "k", "y")
+        got = run_to_memory(out, f"rtm_overlap_{i}", timeout_s=120,
+                            output_mode="update", state_partitions=i + 1)
+        return {r["k"]: (r["n_cum"], r["s_cum"]) for r in got.collect()}
+
+    with ThreadPoolExecutor(2) as ex:
+        results = list(ex.map(drain, range(2)))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert results == [{1: (2, 1), 2: (1, 1)}] * 2
