@@ -549,133 +549,49 @@ def sessionize_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_sessionize_stateful_timer_close)."""
     import datetime as dt
     import os
-    import tempfile
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        sessionize_stateful, staged_parquet_rows)
+        replay_to_memory, sessionize_stateful)
 
-    schema = "user_id bigint, ts timestamp"
-    # stage ONE source directory: a symlink to the fixture events file
-    # plus a sentinel row — the streaming file source requires a
-    # directory, and a single source guarantees the first microbatch
-    # swallows both files (a sentinel-first batch would make every real
-    # event late against the advanced watermark).  Per-run mkdtemp (r11
-    # advice): the old name keyed on Python's per-process randomized
-    # hash(), so runs leaked unreclaimed /tmp dirs and two same-named
-    # concurrent runs would race on unlink-then-symlink; mkdtemp is
-    # collision-free by construction and removed in the finally.
-    import shutil
-
-    src = tempfile.mkdtemp(prefix="mrf_sess_stream_")
-    try:
-        # The ONE-ROW sentinel is written with pyarrow on the driver.  The
-        # previous createDataFrame(...).coalesce(1).write form cost ~4 s
-        # per invocation: a Python local relation parallelizes into
-        # defaultParallelism pickled slices, and coalesce(1) makes ONE
-        # task drain all of their Python workers sequentially — dozens of
-        # serial JVM<->Python handshakes for one row (thread dump showed
-        # the write task parked in BasePythonRunner.ReaderInputStream).
-        # A bounded fixture artifact, not corpus data, so a driver-side
-        # write is the correct tool (and TIMESTAMP(MICROS) matches what
-        # the Spark writer produced).
-        pq.write_table(
-            pa.table({"user_id": pa.array([-1], pa.int64()),
-                      "ts": pa.array([dt.datetime(2100, 1, 1)],
-                                     pa.timestamp("us"))}),
-            os.path.join(src, "sentinel_0.parquet"))
-        events_path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-        os.symlink(events_path, os.path.join(src, "events.parquet"))
-        stream = read_parquet_stream(
-            spark, src, schema, max_files_per_trigger=1000
-        ).withWatermark("ts", "0 seconds")
-        out = sessionize_stateful(stream, ["user_id"], "ts",
-                                  gap_seconds=1800)
-        got = run_to_memory(
-            out, "sessionize_stream_stateful_q",
-            timeout_s=300, output_mode="append",
-            state_partitions=adaptive_state_partitions(
-                spark, staged_parquet_rows(src)))
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    # ONE micro-batch takes the events and a sentinel row (a sentinel-first
+    # batch would make every real event late against the advanced
+    # watermark).  The sentinel stays off Spark: a one-row coalesce(1)
+    # write of a local relation drains every pickled slice through one
+    # task (~4 s).  TIMESTAMP(MICROS) matches the Spark writer's output.
+    sentinel = pa.table({"user_id": pa.array([-1], pa.int64()),
+                         "ts": pa.array([dt.datetime(2100, 1, 1)],
+                                        pa.timestamp("us"))})
+    got = replay_to_memory(
+        spark, [[sentinel, os.path.join(sf_dir, "events.parquet")]],
+        "user_id bigint, ts timestamp",
+        lambda stream: sessionize_stateful(
+            stream.withWatermark("ts", "0 seconds"), ["user_id"], "ts",
+            gap_seconds=1800),
+        "sessionize_stream_stateful_q", "append", max_files_per_trigger=1000)
     return got.where(F.col("user_id") >= 0).select(
         "user_id", "session_start_us", "session_end_us", "n_events")
 
 
-def _cusum_stream_stateful_impl(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """The SECOND stateful-streaming path under the driver gate (r11
-    verdict Next #5): events replayed as a TWO-BATCH file stream through
-    ``streaming.stream_cusum`` (GroupState, applyInPandasWithState) must
-    equal the batch ``windows.cusum_per_key`` oracle exactly — integer
-    state, alarms included, with state genuinely CARRIED across the
-    micro-batch boundary.
-
-    Determinism of the replay: the fixture is split at the median
-    timestamp into two staged files (every event with ts ≤ cut in file
-    A, the rest in file B), so each user's events arrive in
-    nondecreasing event-time order across batches — equal-timestamp
-    pairs land in the SAME file, where the operator's in-batch
-    (ts, tiebreak) sort orders them — making the arrival-order fold
-    bitwise-equal to the batch closed form.  File order is pinned twice
-    (mtime AND lexicographic name) and ``max_files_per_trigger=1``
-    forces one file per micro-batch.  The final per-user state is the
-    row with the largest n_events (monotone per key under update
-    mode)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_cusum)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id")
+def _split_at_median_ts(ev: DataFrame) -> list[DataFrame]:
+    """``ev`` split at its (approximate) median ``ts`` into two replay
+    batches: every event with ts ≤ cut, then the rest — so equal
+    timestamps share a batch and each key's events arrive in
+    nondecreasing event time across the two."""
     cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_cusum_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_cusum_stage_")
-    try:
-        ev.where(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "a"))
-        ev.where(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "b"))
-        t0 = time.time()
-        for i, half in enumerate(("a", "b")):
-            n = 0
-            d = os.path.join(stage, half)
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    tgt = os.path.join(d, f)
-                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                    os.symlink(tgt,
-                               os.path.join(src, f"{half}_{n}.parquet"))
-                    n += 1
-        stream = read_parquet_stream(
-            spark, src,
-            "user_id bigint, ts timestamp, value double, event_id bigint",
-            max_files_per_trigger=1)
-        out = stream_cusum(stream, "user_id", "ts", "value",
-                           _CUSUM_K, _CUSUM_H, tiebreak_col="event_id",
-                           output_mode="update")
-        got = run_to_memory(out, "cusum_stream_stateful_q",
-                            timeout_s=300, output_mode="update",
-                            state_partitions=adaptive_state_partitions(
-                                spark, staged_parquet_rows(src)))
-        # materialize before the staging dirs disappear
-        final = got.groupBy("user_id").agg(
-            F.max_by(F.struct("n_events", "final_cusum", "max_cusum",
-                              "n_alarms"), "n_events").alias("s")
-        ).select("user_id", "s.*")
-        final = final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    return final
+    return [ev.where(F.col("ts") <= F.lit(cut)),
+            ev.where(F.col("ts") > F.lit(cut))]
+
+
+def _final_state(got: DataFrame, key: str, n_col: str, *cols: str) \
+        -> DataFrame:
+    """Final per-key state of an update-mode stream: the emission with the
+    largest ``n_col`` (a count, monotone per key), as ``key, n_col,
+    *cols``."""
+    return (got.groupBy(key)
+            .agg(F.max_by(F.struct(n_col, *cols), n_col).alias("s"))
+            .select(key, "s.*"))
 
 
 # ---------------------------------------------------------------------------
@@ -2634,8 +2550,8 @@ def cdc_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(ins.withColumn("_del", F.lit(False)))
         .unionByName(dels.withColumn("_del", F.lit(True)))
     )
-    dst = tempfile.mkdtemp(prefix="cdc_upsert_orders_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdc_upsert_orders_",
+                                     ignore_cleanup_errors=True) as dst:
         merge_upsert(spark, f"{sf_dir}/orders.parquet", updates,
                      ["o_orderkey"], dst, delete_col="_del")
         merged = spark.read.parquet(dst)
@@ -2648,10 +2564,6 @@ def cdc_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(_dec("o_totalprice")).cast("double").alias("total"),
         )
         rows, schema = agg.collect(), agg.schema
-    finally:
-        import shutil
-
-        shutil.rmtree(dst, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -3005,9 +2917,34 @@ def cusum_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``streaming.stream_cusum`` (GroupState / applyInPandasWithState)
     must equal the batch ``windows.cusum_per_key`` closed form exactly —
     integer state, alarms included, state genuinely CARRIED across the
-    micro-batch boundary (implementation and determinism argument in
-    ``_cusum_stream_stateful_impl``)."""
-    return _cusum_stream_stateful_impl(spark, sf_dir)
+    micro-batch boundary.
+
+    Determinism of the replay: the fixture is split at the median
+    timestamp into two staged files (every event with ts ≤ cut in file
+    A, the rest in file B), so each user's events arrive in
+    nondecreasing event-time order across batches — equal-timestamp
+    pairs land in the SAME file, where the operator's in-batch
+    (ts, tiebreak) sort orders them — making the arrival-order fold
+    bitwise-equal to the batch closed form.  File order is pinned twice
+    (mtime AND lexicographic name, by ``streaming.replay_to_memory``)
+    and ``max_files_per_trigger=1`` forces one file per micro-batch.
+    The final per-user state is the row with the largest n_events
+    (monotone per key under update mode)."""
+    from map_reduce_folds_spark.streaming import (
+        replay_to_memory, stream_cusum)
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "value", "event_id")
+    got = replay_to_memory(
+        spark, [[half] for half in _split_at_median_ts(ev)],
+        "user_id bigint, ts timestamp, value double, event_id bigint",
+        lambda stream: stream_cusum(stream, "user_id", "ts", "value",
+                                    _CUSUM_K, _CUSUM_H,
+                                    tiebreak_col="event_id",
+                                    output_mode="update"),
+        "cusum_stream_stateful_q", "update")
+    return _final_state(got, "user_id", "n_events", "final_cusum",
+                        "max_cusum", "n_alarms")
 
 
 @query(
@@ -4418,144 +4355,8 @@ def join_size_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOLT_A, _HOLT_B, _HOLT_H = 2, 2, 3
 
 
-def _holt_stream_stateful_impl(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """THIRD stateful-streaming path under the driver gate: events
-    replayed as a TWO-BATCH file stream through
-    ``streaming.stream_holt`` (GroupState, applyInPandasWithState) must
-    equal the batch ``windows.holt_last`` oracle bitwise — (level,
-    trend) doubles included, state genuinely CARRIED across the
-    micro-batch boundary.  Same median-timestamp split / pinned file
-    order / one-file-per-trigger determinism argument as
-    ``_cusum_stream_stateful_impl`` (equal-ts pairs land in one file
-    where the in-batch (ts, tiebreak) sort orders them); the final
-    per-user state is the row with the largest n_events (monotone per
-    key under update mode)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_holt)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id")
-    cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_holt_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_holt_stage_")
-    try:
-        ev.where(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "a"))
-        ev.where(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "b"))
-        t0 = time.time()
-        for i, half in enumerate(("a", "b")):
-            n = 0
-            d = os.path.join(stage, half)
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    tgt = os.path.join(d, f)
-                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                    os.symlink(tgt,
-                               os.path.join(src, f"{half}_{n}.parquet"))
-                    n += 1
-        stream = read_parquet_stream(
-            spark, src,
-            "user_id bigint, ts timestamp, value double, event_id bigint",
-            max_files_per_trigger=1)
-        out = stream_holt(stream, "user_id", "ts", "value",
-                          tiebreak_col="event_id",
-                          alpha_halves=_HOLT_A, beta_halves=_HOLT_B,
-                          horizon=_HOLT_H, output_mode="update")
-        got = run_to_memory(out, "holt_stream_stateful_q",
-                            timeout_s=300, output_mode="update",
-                            state_partitions=adaptive_state_partitions(
-                                spark, staged_parquet_rows(src)))
-        final = got.groupBy("user_id").agg(
-            F.max_by(F.struct("n_events", "level", "trend", "forecast"),
-                     "n_events").alias("s")
-        ).select("user_id", "s.*")
-        final = final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    return final
-
-
-def _holt_stream_oracle() -> str:
-    from map_reduce_folds_spark.operators.windows import holt_last_sql
-
-    return holt_last_sql("events", "user_id", "ts", "value",
-                         tiebreak_expr="event_id",
-                         alpha_halves=_HOLT_A, beta_halves=_HOLT_B,
-                         horizon=_HOLT_H)
-
-
 # needed above the evalstats-family section's own import (line order)
 from map_reduce_folds_spark.operators import evalstats as ES  # noqa: E402
-
-
-def _confseq_stream_stateful_impl(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """FOURTH stateful-streaming path under the driver gate: per-cohort
-    purchase counts replayed as a TWO-BATCH file stream through
-    ``streaming.stream_confseq`` (GroupState, applyInPandasWithState)
-    must equal the batch whole-history counts + confseq_bounds chain
-    bitwise.  Simpler determinism argument than the CUSUM/Holt rows:
-    the state is two COMMUTATIVE integer sums, so no (ts, tiebreak)
-    ordering is needed at all — any split/arrival order yields the
-    same final state; the band columns are the SAME Spark expression
-    on both sides.  Final per-cohort state = the max-n_cum emission
-    (monotone per key under update mode)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_confseq)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % 8).cast("bigint").alias("bucket"),
-        (F.col("event_type") == "purchase").cast("bigint").alias("succ"),
-        "ts")
-    cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_confseq_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_confseq_stage_")
-    try:
-        t0 = time.time()
-        for i, (half, cond) in enumerate(
-                (("a", F.col("ts") <= F.lit(cut)),
-                 ("b", F.col("ts") > F.lit(cut)))):
-            d = os.path.join(stage, half)
-            ev.where(cond).select("bucket", "succ").coalesce(1) \
-                .write.mode("overwrite").parquet(d)
-            n = 0
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    tgt = os.path.join(d, f)
-                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                    os.symlink(tgt, os.path.join(src, f"{half}_{n}.parquet"))
-                    n += 1
-        stream = read_parquet_stream(
-            spark, src, "bucket bigint, succ bigint", max_files_per_trigger=1)
-        out = stream_confseq(stream, "bucket", "succ")
-        # the memory sink holds the rows once this returns, so the staged
-        # files can go without a checkpoint of the result
-        got = run_to_memory(out, "confseq_stream_stateful_q",
-                            timeout_s=300, output_mode="update",
-                            state_partitions=adaptive_state_partitions(
-                                spark, staged_parquet_rows(src)))
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    return (got.groupBy("bucket")
-            .agg(F.max_by(F.struct("n_cum", "s_cum", "rate", "radius",
-                                   "lo", "hi"), "n_cum").alias("s"))
-            .select("bucket", "s.*"))
 
 
 @query(
@@ -4572,26 +4373,69 @@ def _confseq_stream_stateful_impl(spark: SparkSession,
 def confseq_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fourth stateful-streaming path under the driver gate: the
     ANYTIME-VALID purchase-rate monitor run END-TO-END as a GroupState
-    stream over a two-batch file replay, verified bitwise against the
-    batch whole-history counts + the shared confseq_bounds chain.
-    The twin with NO ordering caveat — its state is two commutative
-    integer sums (implementation in
-    ``_confseq_stream_stateful_impl``)."""
-    return _confseq_stream_stateful_impl(spark, sf_dir)
+    stream (``streaming.stream_confseq``, applyInPandasWithState) over a
+    two-batch file replay of per-cohort purchase counts, verified
+    bitwise against the batch whole-history counts + the shared
+    confseq_bounds chain.  Simpler determinism argument than the
+    CUSUM/Holt rows: the state is two COMMUTATIVE integer sums, so no
+    (ts, tiebreak) ordering is needed at all — any split/arrival order
+    yields the same final state; the band columns are the SAME Spark
+    expression on both sides.  Final per-cohort state = the max-n_cum
+    emission (monotone per key under update mode)."""
+    from map_reduce_folds_spark.streaming import (
+        replay_to_memory, stream_confseq)
+
+    ev = load_table(spark, sf_dir, "events").select(
+        (F.col("user_id") % 8).cast("bigint").alias("bucket"),
+        (F.col("event_type") == "purchase").cast("bigint").alias("succ"),
+        "ts")
+    got = replay_to_memory(
+        spark, [[half.select("bucket", "succ")]
+                for half in _split_at_median_ts(ev)],
+        "bucket bigint, succ bigint",
+        lambda stream: stream_confseq(stream, "bucket", "succ"),
+        "confseq_stream_stateful_q", "update")
+    return _final_state(got, "bucket", "n_cum", "s_cum", "rate", "radius",
+                        "lo", "hi")
 
 
-@query("holt_stream_stateful", oracle=_holt_stream_oracle())
+@query(
+    "holt_stream_stateful",
+    oracle=W.holt_last_sql("events", "user_id", "ts", "value",
+                           tiebreak_expr="event_id", alpha_halves=_HOLT_A,
+                           beta_halves=_HOLT_B, horizon=_HOLT_H),
+)
 def holt_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third stateful-streaming path under the driver gate: the HOLT
-    level+trend smoother run END-TO-END as a GroupState stream over a
+    level+trend smoother run END-TO-END as a GroupState stream
+    (``streaming.stream_holt``, applyInPandasWithState) over a
     two-batch ts-ordered file replay, verified BITWISE (doubles
     included — the contract-form power-of-two recursion is arrival-
     order-deterministic under the split) against the same recursive-CTE
-    oracle the batch holt_user_forecast row carries.  State — three
-    scalars per key — carries across the micro-batch boundary
-    (implementation and determinism argument in
-    ``_holt_stream_stateful_impl``)."""
-    return _holt_stream_stateful_impl(spark, sf_dir)
+    oracle the batch holt_user_forecast row carries (``windows.holt_last``).
+    State — three scalars per key — carries across the micro-batch
+    boundary.  Same median-timestamp split / pinned file order /
+    one-file-per-trigger determinism argument as
+    ``cusum_stream_stateful`` (equal-ts pairs land in one file where the
+    in-batch (ts, tiebreak) sort orders them); the final per-user state
+    is the row with the largest n_events (monotone per key under update
+    mode)."""
+    from map_reduce_folds_spark.streaming import (
+        replay_to_memory, stream_holt)
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "value", "event_id")
+    got = replay_to_memory(
+        spark, [[half] for half in _split_at_median_ts(ev)],
+        "user_id bigint, ts timestamp, value double, event_id bigint",
+        lambda stream: stream_holt(stream, "user_id", "ts", "value",
+                                   tiebreak_col="event_id",
+                                   alpha_halves=_HOLT_A,
+                                   beta_halves=_HOLT_B, horizon=_HOLT_H,
+                                   output_mode="update"),
+        "holt_stream_stateful_q", "update")
+    return _final_state(got, "user_id", "n_events", "level", "trend",
+                        "forecast")
 
 
 # ---------------------------------------------------------------------------

@@ -16,11 +16,19 @@ Late data: the watermark is the contract — events later than it are
 dropped from their window; everything newer updates results incrementally.
 State size is bounded by (#keys × #open windows), the quantity to watch at
 100 TB/day ingest.
+
+``replay_to_memory`` is the one replay harness: it stages micro-batches
+as a file stream in pinned order and drains a stream built over it into
+a memory table.  The stateful stream twins run on it.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import threading
+import time
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -103,6 +111,11 @@ def session_windows(
     )
 
 
+# replayed input rows per stateful-shuffle partition (reasoning in
+# adaptive_state_partitions)
+STATE_ROWS_PER_PARTITION = 2500
+
+
 def adaptive_state_partitions(spark: SparkSession, input_rows: int) -> int:
     """AQE-style sizing for a stateful streaming shuffle, keyed on ROWS.
 
@@ -120,42 +133,40 @@ def adaptive_state_partitions(spark: SparkSession, input_rows: int) -> int:
     partition count must follow row-wise work) — a byte rule sized this
     KB-scale state to ONE partition and serialized the whole per-key fold
     onto one core (measured 4.7 s vs 2.7 s at 4 partitions, sf0.01).
-    The chunk is parameterised via MRF_STREAM_STATE_ROWS_PER_PARTITION
-    (default 2500: per-partition fixed cost ~0.1 s over ~0.15 ms/row of
-    fold work is the measured local balance point; a cluster serving
-    real state volume would raise it and saturate the cap anyway).
+    The chunk is :data:`STATE_ROWS_PER_PARTITION` (2500: per-partition
+    fixed cost ~0.1 s over ~0.15 ms/row of fold work is the measured
+    local balance point; a cluster serving real state volume would raise
+    it and saturate the cap anyway).
     Scale-adaptive by construction: a 100 TB replay hits the session cap,
     a fixture replay gets the handful of partitions its work warrants.
     """
-    import os as _os
-
-    chunk = int(_os.environ.get("MRF_STREAM_STATE_ROWS_PER_PARTITION",
-                                "2500"))
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(sess, -(-int(input_rows) // max(1, chunk))))
+    return max(1, min(sess, -(-int(input_rows) // STATE_ROWS_PER_PARTITION)))
+
+
+def _part_files(path: str) -> list[str]:
+    """The parquet files of ``path``: the path itself when it is a file,
+    else every ``*.parquet`` below it in name order, symlinks followed
+    (a Spark-written ``x.parquet/`` of part files); ``_``/``.``-prefixed
+    entries are skipped, as Spark skips them."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for d, subdirs, files in os.walk(path, followlinks=True):
+        subdirs[:] = sorted(s for s in subdirs if not s.startswith(("_", ".")))
+        out += [os.path.join(d, f) for f in sorted(files)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))]
+    return out
 
 
 def staged_parquet_rows(src_dir: str) -> int:
     """Exact row count of a staged replay directory from parquet FOOTERS
-    (no Spark job, no data read) — the input-size probe
-    :func:`adaptive_state_partitions` wants.  Directory entries (a
-    Spark-written ``x.parquet/`` of part files, or a symlink to one) are
-    counted recursively; ``_``/``.``-prefixed metadata files are skipped,
-    as Spark skips them."""
-    import os as _os
-
+    of its :func:`_part_files` (no Spark job, no data read) — the
+    input-size probe :func:`adaptive_state_partitions` wants."""
     import pyarrow.parquet as _pq
 
-    total = 0
-    for f in _os.listdir(src_dir):
-        if f.startswith(("_", ".")):
-            continue
-        path = _os.path.join(src_dir, f)
-        if _os.path.isdir(path):  # follows symlinks
-            total += staged_parquet_rows(path)
-        elif f.endswith(".parquet"):
-            total += _pq.ParquetFile(path).metadata.num_rows
-    return total
+    return sum(_pq.ParquetFile(f).metadata.num_rows
+               for f in _part_files(src_dir))
 
 
 # held by run_to_memory from pin to restore: the shuffle-partition conf is
@@ -163,11 +174,13 @@ def staged_parquet_rows(src_dir: str) -> int:
 _PIN_LOCK = threading.Lock()
 
 
-def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
+def run_to_memory(stream_df: DataFrame, name: str, timeout_s: float = 60,
                   output_mode: str = "complete",
                   state_partitions: int | None = None) -> DataFrame:
     """Drain a (file-replay) stream into an in-memory table and return it —
-    test/debug sink only.
+    test/debug sink only.  A stream still running after ``timeout_s``
+    seconds is stopped and raises ``TimeoutError``: the sink would hold
+    only part of the rows.
 
     ``state_partitions`` (e.g. from :func:`adaptive_state_partitions`)
     temporarily pins ``spark.sql.shuffle.partitions`` for the query's
@@ -195,12 +208,71 @@ def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(timeout_s)
+            finished = q.awaitTermination(timeout_s)
             q.stop()
+            if not finished:
+                raise TimeoutError(
+                    f"stream {name!r} still running after {timeout_s} s")
         finally:
             if state_partitions is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
     return stream_df.sparkSession.table(name)
+
+
+def replay_to_memory(spark: SparkSession, batches, schema: str, build,
+                     name: str, output_mode: str,
+                     max_files_per_trigger: int = 1) -> DataFrame:
+    """Replay ``batches`` as a parquet file stream, run ``build(stream)``
+    over it and drain the result into the memory table ``name``, returned
+    (its rows live on the driver, so they outlive the staged files).
+
+    Each batch is a list of inputs: a Spark ``DataFrame`` (written with
+    ``coalesce(1)``), a ``pyarrow.Table`` (written on the driver, no Spark
+    job) or the path of a parquet file or directory, linked part file by
+    part file (the file source reads nothing through a link to a
+    directory).  A caller's files are never modified, so they keep their
+    own times and a path may only join the first batch.  Every file
+    written for batch ``i`` gets the mtime ``t0 + 100·i`` and the links
+    are named in staging order, so the source's (mtime, name) order is
+    the batch order.  The stateful shuffle is sized from the staged rows;
+    one temporary directory holds everything and is removed before this
+    returns or raises.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="mrf_replay_")
+    try:
+        src = os.path.join(tmp, "src")
+        os.mkdir(src)
+        t0, n = time.time(), 0
+        for i, batch in enumerate(batches):
+            for j, item in enumerate(batch):
+                if isinstance(item, str):
+                    if i:
+                        raise ValueError(
+                            "a parquet path keeps its own file times, so it "
+                            "may only join the first micro-batch")
+                    parts = _part_files(os.path.abspath(item))
+                else:
+                    staged = os.path.join(tmp, f"{i}_{j}.parquet")
+                    if isinstance(item, pa.Table):
+                        pq.write_table(item, staged)
+                    else:
+                        item.coalesce(1).write.parquet(staged)
+                    parts = _part_files(staged)
+                    for f in parts:
+                        os.utime(f, (t0 + 100 * i, t0 + 100 * i))
+                for f in parts:
+                    os.symlink(f, os.path.join(src, f"{n:06d}.parquet"))
+                    n += 1
+        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger)
+        return run_to_memory(
+            build(stream), name, timeout_s=300, output_mode=output_mode,
+            state_partitions=adaptive_state_partitions(
+                spark, staged_parquet_rows(src)))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def stateful_fold(

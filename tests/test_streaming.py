@@ -1630,7 +1630,7 @@ def test_staged_parquet_rows_directory_shaped(spark, tmp_path):
 
 def test_confseq_stream_stateful_removes_staging_dirs(spark, tmp_path,
                                                       monkeypatch):
-    """The confseq replay removes both staging directories before it
+    """The confseq replay leaves nothing in the temporary directory when it
     returns; its result is still readable afterwards (the memory sink holds
     the rows) and covers every event."""
     import tempfile
@@ -1639,8 +1639,7 @@ def test_confseq_stream_stateful_removes_staging_dirs(spark, tmp_path,
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     out = QUERIES["confseq_stream_stateful"](spark, SF_DIR)
-    assert not [f for f in os.listdir(tmp_path)
-                if f.startswith("mrf_confseq_")]
+    assert os.listdir(tmp_path) == []
     rows = out.collect()
     n_events = load_table(spark, SF_DIR, "events").count()
     assert rows and sum(r["n_cum"] for r in rows) == n_events
@@ -1671,3 +1670,91 @@ def test_run_to_memory_overlapping_pins_restore_the_session_value(
         results = list(ex.map(drain, range(2)))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert results == [{1: (2, 1), 2: (1, 1)}] * 2
+
+
+def test_replay_to_memory_carries_state_in_batch_order(
+        spark, tmp_path, tmp_path_factory, monkeypatch):
+    """Two one-file micro-batches (a Spark frame, then a pyarrow table)
+    fold in batch order with state carried across them; the memory table
+    stays readable after the staging directory is removed, and a failing
+    ``build`` or a misplaced path input leaves nothing behind."""
+    import tempfile
+
+    import pyarrow as pa
+
+    from map_reduce_folds_spark.streaming import (
+        replay_to_memory, stateful_fold)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    schema = "k bigint, x bigint"
+    digits = folds.CustomFold(step=lambda acc, x: acc * 10 + x, init=0)
+    first = spark.createDataFrame([(1, 1), (2, 5)], schema)
+    second = pa.table({"k": pa.array([1, 2], pa.int64()),
+                       "x": pa.array([3, 6], pa.int64())})
+
+    got = replay_to_memory(
+        spark, [[first], [second]], schema,
+        lambda stream: stateful_fold(stream, ["k"], ["x"], digits,
+                                     out_col="acc", out_dtype="bigint"),
+        "replay_order_q", "update")
+    assert os.listdir(tmp_path) == []
+    # one emission per key per micro-batch: 1 then 13 (reversed: 3, 31)
+    assert sorted((r["k"], r["acc"]) for r in got.collect()) == [
+        (1, 1), (1, 13), (2, 5), (2, 56)]
+
+    def boom(stream):
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        replay_to_memory(spark, [[first]], schema, boom, "replay_boom_q",
+                         "update")
+    assert os.listdir(tmp_path) == []
+
+    late = str(tmp_path_factory.mktemp("replay_late") / "x.parquet")
+    first.write.parquet(late)
+    with pytest.raises(ValueError, match="first micro-batch"):
+        replay_to_memory(spark, [[first], [late]], schema, boom,
+                         "replay_late_q", "update")
+    assert os.listdir(tmp_path) == []
+
+
+def test_run_to_memory_raises_on_timeout(spark, tmp_path):
+    """A stream still running at the timeout raises instead of returning
+    the partial sink, and the pinned shuffle partitions are restored."""
+    from map_reduce_folds_spark.streaming import stream_confseq
+
+    p = str(tmp_path / "src")
+    spark.createDataFrame([(1, 1), (2, 0)], ["k", "y"]) \
+        .coalesce(1).write.parquet(p)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    out = stream_confseq(read_parquet_stream(spark, p, "k bigint, y bigint"),
+                         "k", "y")
+    with pytest.raises(TimeoutError):
+        run_to_memory(out, "rtm_timeout_q", timeout_s=0.001,
+                      output_mode="update", state_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert not [q for q in spark.streams.active if q.name == "rtm_timeout_q"]
+
+
+def test_sessionize_stream_stateful_reads_directory_shaped_events(
+        spark, tmp_path):
+    """A Spark-written multi-part ``events.parquet/`` streams in full (the
+    file source reads nothing through a symlink to a directory, so the
+    replay links its part files): every user's session sizes equal the
+    batch ``sessionize_events`` ones on the same directory."""
+    from map_reduce_folds_spark.queries import QUERIES
+
+    ev = tmp_path / "events.parquet"
+    load_table(spark, SF_DIR, "events").repartition(3).write.parquet(str(ev))
+    assert len([f for f in os.listdir(ev) if f.endswith(".parquet")]) == 3
+
+    def sizes(rows, order):
+        by_user = {}
+        for r in sorted(rows, key=lambda r: (r["user_id"], r[order])):
+            by_user.setdefault(r["user_id"], []).append(r["n_events"])
+        return by_user
+
+    got = QUERIES["sessionize_stream_stateful"](spark, str(tmp_path))
+    want = QUERIES["sessionize_events"](spark, str(tmp_path))
+    got_sizes = sizes(got.collect(), "session_start_us")
+    assert got_sizes and got_sizes == sizes(want.collect(), "session_id")
