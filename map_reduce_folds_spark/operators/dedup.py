@@ -1416,7 +1416,7 @@ def simhash_components(
     **cc_kw,
 ) -> DataFrame:
     """``(node, component)`` of the SimHash near-dup graph — identical
-    output to ``components_of_pairs(simhash_near_dup_pairs(...))`` but
+    output to ``connected_components(simhash_near_dup_pairs(...))`` but
     with candidate generation over DISTINCT SIGNATURES, not documents.
 
     Duplicate-heavy corpora make near-dup clusters near-cliques, so the
@@ -1438,7 +1438,7 @@ def simhash_components(
     (property-tested against the doc-level construction).  ``cc_kw``
     passes through to :func:`graph.connected_components`
     (``checkpoint_dir=``, ``max_iter=``)."""
-    from map_reduce_folds_spark.operators.graph import components_of_pairs
+    from map_reduce_folds_spark.operators.graph import connected_components
 
     bits, n_docs = _resolve_bits(docs, bits, n_docs)
     s = simhash_rows(docs, id_col, text_col, bits) \
@@ -1453,7 +1453,8 @@ def simhash_components(
         reps.withColumnRenamed("rep", id_col), id_col, bits, max_hamming,
         blocks,
     ).select("id_a", "id_b")
-    return components_of_pairs(star.unionByName(rep_pairs))
+    return connected_components(star.unionByName(rep_pairs), "id_a", "id_b",
+                                **cc_kw)
 
 
 # ---------------------------------------------------------------------------
@@ -1863,10 +1864,10 @@ def cluster_savings(
         # e.g. the prefix-filtered Jaccard join — replaces the SimHash
         # default; the accounting below is policy-agnostic
         from map_reduce_folds_spark.operators.graph import (
-            components_of_pairs,
+            connected_components,
         )
 
-        comp = components_of_pairs(pairs.select("id_a", "id_b"))
+        comp = connected_components(pairs, "id_a", "id_b")
     else:
         comp = simhash_components(docs, id_col, text_col, bits=bits,
                                   n_docs=n_docs,

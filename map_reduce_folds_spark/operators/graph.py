@@ -25,14 +25,46 @@ near-clique dedup graphs close in 2-3 rounds, and even a pathological
 covers any realistic graph.
 
 100 TB shape: labels and edges shuffle on node id each round — linear in
-|E|, never quadratic; every round's labels are eagerly
-``localCheckpoint``'d so neither the lineage nor the logical plan grows
-with the iteration count (see the in-function comment for why persist()
-alone is not enough).  The convergence check collects ONE aggregate per
+|E|, never quadratic.  The convergence check collects ONE aggregate per
 round (bounded driver traffic, inherent to an iterative fixpoint).
+
+Rounds.  The six iterative operators (:func:`connected_components`,
+:func:`pagerank`, :func:`bfs_hops`, :func:`label_propagation`,
+:func:`kcore_peel`, :func:`kcore_peel_weighted`) run on one round driver,
+:class:`_RoundDriver`, which fixes four things for all of them:
+
+* **Edge cache.**  The operator's edge view is cached hash-partitioned
+  AND sorted by the key every round joins it on, and unpersisted when
+  the operator returns or raises.  Cached plans keep their partitioning
+  (AQE does not rewrite them), so each round's sort-merge join
+  re-shuffles only the node-sized state: the edge relation crosses the
+  network once at build instead of once per round, and the caller's
+  (often expensive candidate-pair) lineage is computed once.
+* **Cut.**  Every round's state is a lazy ``localCheckpoint``: a hard
+  lineage and plan cut.  A round body references its state several
+  times (CC three times, the k-core peels twice), so without a cut the
+  logical plan multiplies per round — measured 2.6 s → 8.8 s → 48 s →
+  140 s of analysis per CC round with ``persist()`` alone, and 2^R
+  replans in the peels.  With ``checkpoint_dir`` (CC) the cut is a
+  parquet write to one of two alternating slots instead.
+* **Materialisation.**  A round is materialised by the operator's own
+  per-round action when it has one — CC's label sum, BFS's visited
+  count — which is also the fixpoint test: an unchanged measure ends
+  the loop, and a measured operator that must converge raises when it
+  has not within its bound.  Fixed-round operators materialise only
+  their final round, eagerly, before the edge cache is released (a lazy
+  final cut would replay every round from the caller's lineage once
+  the cache is gone).
+* **Release.**  Once a round is materialised, the checkpoint blocks of
+  every earlier round are unpersisted: the materialised round no
+  longer reads them.  Only the returned state's checkpoint outlives the
+  call, instead of one per round until JVM garbage collection.
 """
 
 from __future__ import annotations
+
+import uuid
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -124,6 +156,87 @@ def contract_pairs_local(
     return sel.mapInPandas(gen, schema=schema)
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD that holds a ``localCheckpoint``'d frame's rows."""
+    return df._jdf.queryExecution().logical().rdd()
+
+
+class _RoundDriver:
+    """The round driver (module docstring, *Rounds*).  As a context
+    manager it pins ``view`` — the operator's edge relation —
+    hash-partitioned and sorted by ``key`` as :attr:`edges`, and
+    unpersists it on exit, plus every round's checkpoint when the
+    operator raises; :meth:`run` is the round loop."""
+
+    def __init__(
+        self, view: DataFrame, key: str, checkpoint_dir: str | None = None
+    ):
+        self.edges = (view.repartition(key).sortWithinPartitions(key)
+                      .persist())
+        self._cuts: list[DataFrame] = []
+        # table-backed slots are namespaced per invocation: a second run
+        # sharing checkpoint_dir must not overwrite the slot that backs
+        # an earlier, not yet consumed lazy result
+        self._slots = (None if checkpoint_dir is None
+                       else f"{checkpoint_dir}/rounds_{uuid.uuid4().hex[:12]}")
+
+    def __enter__(self) -> "_RoundDriver":
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        if exc_type is not None:
+            self.release()
+        self.edges.unpersist()
+
+    def _cut(self, df: DataFrame, rnd: int, eager: bool) -> DataFrame:
+        if self._slots is not None:
+            # round rnd reads only slot (rnd - 1) % 2, so the overwrite
+            # never touches a slot its own job is reading
+            path = f"{self._slots}/slot{rnd % 2}"
+            df.write.mode("overwrite").parquet(path)
+            return df.sparkSession.read.parquet(path)
+        df = df.localCheckpoint(eager=eager)
+        self._cuts.append(df)
+        return df
+
+    def release(self, keep: DataFrame | None = None) -> None:
+        """Unpersist the checkpoint blocks of every cut but ``keep``."""
+        for df in self._cuts:
+            if df is not keep:
+                _checkpoint_rdd(df).unpersist(False)
+        self._cuts = [] if keep is None else [keep]
+
+    def run(
+        self,
+        state: DataFrame,
+        step: Callable[[DataFrame, int], DataFrame],
+        rounds: int,
+        measure: Callable[[DataFrame], Any] | None = None,
+        stall: str | None = None,
+    ) -> DataFrame:
+        """Cut ``state`` as round 0, then ``state = step(state, i)`` for
+        rounds ``i = 1..rounds``, each cut.  With ``measure``, every
+        round is materialised by it and an unchanged value is the
+        fixpoint; running out of rounds raises ``RuntimeError(stall)``
+        when ``stall`` is given.  Without it the rounds are fixed and only
+        the last is materialised, eagerly."""
+        fixed = measure is None
+        state = self._cut(state, 0, eager=fixed and rounds == 0)
+        m = None if fixed else measure(state)
+        for i in range(1, rounds + 1):
+            state = self._cut(step(state, i), i, eager=fixed and i == rounds)
+            if fixed:
+                continue
+            prev, m = m, measure(state)
+            self.release(keep=state)
+            if m == prev:
+                return state
+        if not fixed and stall is not None:
+            raise RuntimeError(stall)
+        self.release(keep=state)
+        return state
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -151,24 +264,15 @@ def connected_components(
     write (two alternating slots — disk bounded at 2×|labels| per
     invocation, heap at ~zero) instead of ``localCheckpoint``.  The
     in-memory default is fastest for label sets that fit the executor
-    storage pool, but checkpoint RDDs from finished rounds are freed only
-    lazily (JVM ContextCleaner), so many-round runs on big label sets can
-    exhaust the heap — measured OOM at 60M nodes × ~5 rounds on an 8 GiB
-    local[32] heap, table-backed runs fine at the same size.  On a
-    cluster the table form is also executor-loss-safe; use it whenever
-    |nodes| × rounds threatens the storage pool.  Slots are namespaced
-    under a fresh per-invocation subdirectory, so the returned (lazy)
-    DataFrame stays valid when later calls reuse the same
+    storage pool; the table form keeps even the current round's labels
+    off the heap (measured: an in-memory run OOMed at 60M nodes × ~5
+    rounds on an 8 GiB local[32] heap, table-backed runs fine at the
+    same size) and on a cluster is also executor-loss-safe; use it
+    whenever |nodes| × rounds threatens the storage pool.  Slots are
+    namespaced under a fresh per-invocation subdirectory, so the
+    returned (lazy) DataFrame stays valid when later calls reuse the same
     ``checkpoint_dir``; the caller owns deleting the directory when all
     results are consumed."""
-    run_ns = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        # unique per invocation: a second components run sharing the
-        # checkpoint_dir must not overwrite slots that back an earlier,
-        # not-yet-consumed lazy result
-        run_ns = f"{checkpoint_dir}/cc_{uuid.uuid4().hex[:12]}"
     # two-phase union-find (round-10): per-partition spanning-forest
     # contraction runs FIRST — pass 1 collapses partition-local
     # chains/cliques to min-id stars in the same map pass that reads the
@@ -185,55 +289,19 @@ def connected_components(
         f1 = contract_pairs_local(edges, src, dst)
         edges = contract_pairs_local(f1.repartition("u"), "u", "v")
         src, dst = "u", "v"
-    # r14 layout pin (same recipe as pagerank's ed): sym is scanned by
-    # the seed groupBy("u") and by EVERY round's join on "u"; caching it
-    # hash-partitioned + sorted on "u" lets both reuse the layout
-    # (cached plans keep their partitioning), so rounds shuffle only the
-    # node-sized label table — the edge relation crosses the network
-    # once at build instead of once per round.
-    sym = (symmetric_edges(edges, src, dst)
-           .repartition("u").sortWithinPartitions("u")
-           .persist())
-    # seed: each node's label = min(self, direct neighbors) — this folds
-    # the first propagation round into the seed aggregation for free.
-    # EVERY round's labels pass through cut(): the round body references
-    # labels three times (edge join, union, doubling self-join), so
-    # without a hard lineage cut the LOGICAL plan triples per round and
-    # driver-side analysis time grows exponentially — measured
-    # 2.6 s → 8.8 s → 48 s → 140 s per round on a 21k-edge graph with
-    # persist() alone (persist caches data, not plan size).
-    def cut(df: DataFrame, rnd: int) -> DataFrame:
-        """Lineage/plan hard cut per round (see below).  In-memory: lazy
-        localCheckpoint — the label_sum aggregate is its first action, so
-        one job computes, caches, and measures.  Table-backed: write to
-        one of two alternating slots (the executing job only reads the
-        OTHER slot, so the overwrite is safe) and scan it back."""
-        if run_ns is None:
-            return df.localCheckpoint(eager=False)
-        path = f"{run_ns}/labels_slot{rnd % 2}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+    with _RoundDriver(symmetric_edges(edges, src, dst), "u",
+                 checkpoint_dir) as rd:
+        sym = rd.edges
 
-    # single-scan seed: min(self, neighbors) = least(u, min(v)) — NOT a
-    # two-branch union over sym.  A union's branches are separate stages
-    # that race to populate sym's cache on first materialization, so the
-    # expensive upstream pair lineage (LSH candidate + verify) could
-    # compute TWICE in the seed job; one groupBy scans it exactly once.
-    labels = cut(
-        sym.groupBy("u").agg(F.min("v").alias("mv"))
-        .select("u", F.least(F.col("mv"), F.col("u")).alias("label")),
-        0,
-    )
-    def label_sum(lb: DataFrame):
-        # labels are per-node monotone non-increasing, so the exact total
-        # (decimal(38) — no overflow at any node count) is a fixpoint
-        # detector: sum unchanged ⇔ no label changed.  One tiny aggregate
-        # per round instead of a new-vs-old join.
-        return lb.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+        def label_sum(lb: DataFrame):
+            # labels are per-node monotone non-increasing, so the exact
+            # total (decimal(38) — no overflow at any node count) is a
+            # fixpoint detector: sum unchanged ⇔ no label changed.  One
+            # tiny aggregate per round instead of a new-vs-old join.
+            return lb.agg(F.sum(F.col("label").cast("decimal(38,0)"))) \
+                .first()[0]
 
-    prev_sum = label_sum(labels)
-    try:
-        for it in range(max_iter):
+        def step(labels: DataFrame, _: int) -> DataFrame:
             # pointer doubling: u may also inherit its label's label —
             # label(label(u)) is in u's component by the propagation
             # invariant, and chasing two hops per round turns O(diameter)
@@ -248,36 +316,29 @@ def connected_components(
                         F.col("l2.label").alias("label"))
             )
             # propagate: every neighbor of u may inherit u's label
-            prop = cut(
-                sym.join(labels, "u")
-                .select(F.col("v").alias("u"), "label")
-                .union(labels)
-                .union(jumped)
-                .groupBy("u").agg(F.min("label").alias("label")),
-                it + 1,
-            )
-            cur_sum = label_sum(prop)
-            labels = prop
-            if cur_sum == prev_sum:
-                return labels.select(F.col("u").alias("node"), "label") \
-                    .withColumnRenamed("label", "component")
-            prev_sum = cur_sum
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "with pointer doubling this takes ~log2(longest path) rounds, "
-            "so raise max_iter (25 covers components of ~2^25 path length)"
-        )
-    finally:
-        sym.unpersist()
+            return (sym.join(labels, "u")
+                    .select(F.col("v").alias("u"), "label")
+                    .union(labels)
+                    .union(jumped)
+                    .groupBy("u").agg(F.min("label").alias("label")))
 
-
-def components_of_pairs(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", **kw
-) -> DataFrame:
-    """Components of a near-dup PAIR stream (the dedup.py / similarity.py
-    output shape): ``(node, component)``, component = min id (canonical
-    doc).  Thin naming adapter over :func:`connected_components`."""
-    return connected_components(pairs, id_a, id_b, **kw)
+        # seed: each node's label = min(self, direct neighbors) — this
+        # folds the first propagation round into the seed aggregation.
+        # Single scan, least(u, min(v)) — NOT a two-branch union over
+        # sym: a union's branches are separate stages that race to
+        # populate sym's cache on first materialization, so the expensive
+        # upstream pair lineage (LSH candidate + verify) could compute
+        # TWICE in the seed job; one groupBy scans it exactly once.
+        seed = (sym.groupBy("u").agg(F.min("v").alias("mv"))
+                .select("u", F.least(F.col("mv"), F.col("u")).alias("label")))
+        labels = rd.run(
+            seed, step, max_iter, measure=label_sum,
+            stall=f"connected_components did not converge in {max_iter} "
+                  "rounds — with pointer doubling this takes "
+                  "~log2(longest path) rounds, so raise max_iter (25 covers "
+                  "components of ~2^25 path length)")
+    return labels.select(F.col("u").alias("node"),
+                         F.col("label").alias("component"))
 
 
 def dedup_by_components(
@@ -298,46 +359,10 @@ def dedup_by_components(
     through B.  Anti-join + broadcastable component table (components are
     at most |nodes-in-pairs| rows, typically a tiny fraction of the
     corpus)."""
-    comp = components_of_pairs(pairs, id_a, id_b, **cc_kw)
+    comp = connected_components(pairs, id_a, id_b, **cc_kw)
     losers = comp.where(F.col("node") != F.col("component")) \
         .select(F.col("node").alias(id_col))
     return df.join(losers, id_col, "left_anti")
-
-
-def incremental_components(
-    prev: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Fold a batch of NEW edges into previously computed components
-    without re-walking the old graph.
-
-    ``prev`` is a prior ``(node, component)`` table (e.g. read back from
-    the table the last run wrote).  Each old component is equivalent to a
-    star of edges (node → its component id), so the union of that star
-    set with the new batch has exactly the components of old ∪ new — and
-    the stars are depth-1, so converged regions cost one round regardless
-    of how many batches ago they merged.  This is the ingest-time analog
-    of ``streaming.incremental_dedup``'s digest table: per batch, work is
-    proportional to the NEW edges plus the affected stars, not the
-    lifetime graph.  Output: ``(node, component)`` over every node ever
-    seen; min-id canonicals are stable unless a new edge merges two old
-    components (then the smaller min wins, as a full recompute would).
-    """
-    star = prev.where(F.col("node") != F.col("component")) \
-        .select(F.col("node").alias(src), F.col("component").alias(dst))
-    singletons = prev.select("node")
-    merged = connected_components(
-        star.union(new_edges.select(F.col(src), F.col(dst))),
-        src, dst, max_iter=max_iter,
-    )
-    # components that stayed untouched by new edges keep their rows; old
-    # singletons absent from any edge re-enter as themselves
-    missing = singletons.join(merged.select("node"), "node", "left_anti") \
-        .select("node", F.col("node").alias("component"))
-    return merged.union(missing)
 
 
 # ---------------------------------------------------------------------------
@@ -374,118 +399,105 @@ def pagerank(
     are multigraph weights: each contributes separately and outdeg
     counts multiplicity.
 
-    100 TB shape: per round one src-keyed join (rank+degree into edges),
-    one dst-keyed sum aggregation (map-side combinable), one left join
-    back to nodes — all linear in |E|; per-round ``localCheckpoint``
-    keeps the logical plan O(1) like :func:`connected_components`.  The
-    node count N is one driver count (needed for the teleport literal;
+    100 TB shape: per round one src-keyed join (rank+degree into edges)
+    and one dst-keyed sum aggregation (map-side combinable) — linear in
+    |E|, on the round driver (module docstring, *Rounds*).  The node
+    count N is one driver count (needed for the teleport literal;
     bounded metadata, inherent to the formula)."""
     num, den = damping
-    # persist: the edge relation is re-read every round, and the caller's
-    # lineage may be an expensive pipeline (same reason CC persists sym)
-    if weight_col is not None:
-        e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"),
-                         F.col(weight_col).cast("bigint").alias("w")).persist()
-    else:
-        e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).persist()
-    nodes = (
-        e.select(F.col("s").alias("u"))
-        .union(e.select(F.col("t").alias("u")))
-        .distinct().persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list")
     if seeds is not None:
-        # personalized (topic-sensitive) PageRank: all teleport mass goes
-        # to the seed set — ranks become proximity-to-seeds scores.  The
-        # seed list is a driver-side literal (bounded metadata; an IN
-        # predicate over ≤ thousands of ids — for larger seed sets join a
-        # seed table instead)
         seeds = sorted(set(seeds))
         if not seeds:
             raise ValueError("pagerank: empty seeds list")
-        n_present = nodes.where(F.col("u").isin(seeds)).count()
-        if n_present != len(seeds):
-            raise ValueError(
-                f"pagerank: {len(seeds) - n_present} of {len(seeds)} seeds "
-                "do not appear in the edge list — their teleport mass would "
-                "silently vanish (all-absent seeds would zero every rank); "
-                "fix the seed ids or drop the absent ones explicitly")
-        r0_amt = scale // len(seeds)
-        base_amt = ((den - num) * r0_amt) // den
-        is_seed = F.col("u").isin(seeds)
-        r0_col = F.when(is_seed, F.lit(r0_amt)).otherwise(F.lit(0))
-        base_col = F.when(is_seed, F.lit(base_amt)).otherwise(F.lit(0))
-    else:
-        r0_col = F.lit(scale // n)
-        base_col = F.lit(((den - num) * (scale // n)) // den)
+    cols = [F.col(src).alias("s"), F.col(dst).alias("t")]
     if weight_col is not None:
-        deg = e.groupBy("s").agg(F.sum("w").alias("d")).persist()
-        # overflow guard: contributions compute r·w with r ≤ scale, so a
-        # single edge weight beyond (2^63-1)/scale wraps the bigint
-        # product silently (ANSI off) or errors in the oracle — refuse
-        # loudly; pre-scale weights (divide the batch by a constant) to
-        # stay exact under the cap
-        w_cap = (2 ** 63 - 1) // scale
-        w_max = e.agg(F.max("w")).first()[0]
-        if w_max is not None and w_max > w_cap:
-            raise ValueError(
-                f"pagerank: max edge weight {w_max} exceeds {w_cap} "
-                f"(= (2^63-1)/scale at scale={scale}); r*w would overflow "
-                "int64 — divide the weights by a common factor first "
-                "(ranks are invariant to uniform weight scaling)")
-        contrib_expr = "(r * w) div d"
+        cols.append(F.col(weight_col).cast("bigint").alias("w"))
+        deg, contrib_expr = F.sum("w"), "(r * w) div d"
     else:
-        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("d")).persist()
-        contrib_expr = "r div d"
-    # r14 loop-invariant hoist + layout pin: deg depends only on e, so
-    # the per-round ``.join(deg, "s")`` re-did the same degree attach
-    # n_iter times; join it ONCE and persist the result hash-partitioned
-    # AND sorted by the join key.  The cached layout satisfies the
-    # sort-merge join's distribution+ordering requirement (cached plans
-    # keep their partitioning — AQE does not rewrite them by default),
-    # so each round's join re-shuffles only the node-sized rank table,
-    # never the edges: per-round Exchanges drop from 3 (e, r, contrib)
-    # to 2 node-scale ones (r, contrib partial-agg).  At |E| >> |V| the
-    # edge shuffle per round is pagerank's dominant cost.  Integer
-    # fixed-point arithmetic ⇒ ranks are bit-identical regardless.
-    ed = (e.join(deg, "s")
-          .repartition("s").sortWithinPartitions("s")
-          .persist())
-    try:
-        r = nodes.withColumn("r", r0_col.cast("bigint"))
-        for _ in range(n_iter):
+        deg, contrib_expr = F.count(F.lit(1)), "r div d"
+    # r14 loop-invariant hoist: every round's edge join needs the source's
+    # out-degree d, which depends only on the edges — attach it ONCE
+    # (a window over s: one scan of the caller's lineage, no self-join)
+    # and pin the result on "s", so each round re-shuffles only the
+    # node-sized rank table: per-round Exchanges drop from 3 (e, r,
+    # contrib) to 2 node-scale ones (r, contrib partial-agg).  At
+    # |E| >> |V| the edge shuffle per round is pagerank's dominant cost.
+    # Integer fixed-point arithmetic ⇒ ranks are bit-identical regardless.
+    view = edges.select(*cols).withColumn(
+        "d", deg.over(Window.partitionBy("s")))
+    with _RoundDriver(view, "s") as rd:
+        ed = rd.edges
+        nodes = (ed.select(F.col("s").alias("u"))
+                 .union(ed.select(F.col("t").alias("u"))).distinct())
+        counts = [F.count(F.lit(1))]
+        if seeds is not None:
+            counts.append(F.count_if(F.col("u").isin(seeds)))
+        n, *n_present = nodes.agg(*counts).first()
+        if n == 0:
+            raise ValueError("pagerank: empty edge list")
+        if seeds is not None:
+            # personalized (topic-sensitive) PageRank: all teleport mass
+            # goes to the seed set — ranks become proximity-to-seeds
+            # scores.  The seed list is a driver-side literal (bounded
+            # metadata; an IN predicate over ≤ thousands of ids — for
+            # larger seed sets join a seed table instead)
+            if n_present[0] != len(seeds):
+                raise ValueError(
+                    f"pagerank: {len(seeds) - n_present[0]} of {len(seeds)} "
+                    "seeds do not appear in the edge list — their teleport "
+                    "mass would silently vanish (all-absent seeds would zero "
+                    "every rank); fix the seed ids or drop the absent ones "
+                    "explicitly")
+            r0_amt = scale // len(seeds)
+            base_amt = ((den - num) * r0_amt) // den
+            is_seed = F.col("u").isin(seeds)
+            r0_col = F.when(is_seed, F.lit(r0_amt)).otherwise(F.lit(0))
+            base_col = F.when(is_seed, F.lit(base_amt)).otherwise(F.lit(0))
+        else:
+            r0_col = F.lit(scale // n)
+            base_col = F.lit(((den - num) * (scale // n)) // den)
+        if weight_col is not None:
+            # overflow guard: contributions compute r·w with r ≤ scale, so
+            # a single edge weight beyond (2^63-1)/scale wraps the bigint
+            # product silently (ANSI off) or errors in the oracle — refuse
+            # loudly; pre-scale weights (divide the batch by a constant)
+            # to stay exact under the cap
+            w_cap = (2 ** 63 - 1) // scale
+            w_max = ed.agg(F.max("w")).first()[0]
+            if w_max is not None and w_max > w_cap:
+                raise ValueError(
+                    f"pagerank: max edge weight {w_max} exceeds {w_cap} "
+                    f"(= (2^63-1)/scale at scale={scale}); r*w would "
+                    "overflow int64 — divide the weights by a common factor "
+                    "first (ranks are invariant to uniform weight scaling)")
+
+        def step(r: DataFrame, _: int) -> DataFrame:
+            # one zero row per node keeps nodes without in-edges, so ONE
+            # aggregation yields every node's sum — no join back to the
+            # node set, whose layout a checkpoint does not keep.  Edges
+            # into a NULL node contribute nothing, as in the SQL mirror's
+            # join.
             contrib = (
                 ed.join(r.withColumnRenamed("u", "s"), "s")
+                .where(F.col("t").isNotNull())
                 .select(F.col("t").alias("u"),
                         F.expr(contrib_expr).alias("c"))
-                .groupBy("u").agg(F.sum("c").alias("csum"))
+                .union(r.select("u", F.lit(0).cast("bigint").alias("c")))
             )
-            r = (
-                nodes.join(contrib, "u", "left")
-                .select(
-                    "u",
-                    (base_col.cast("bigint") + F.expr(
-                        f"({num} * coalesce(csum, CAST(0 AS BIGINT)))"
-                        f" div {den}")).cast("bigint").alias("r"),
-                )
-                # EAGER: pagerank runs no per-round action of its own
-                # (unlike CC's fixpoint aggregate), so a lazy checkpoint
-                # would defer all 10 rounds past the finally-unpersist and
-                # recompute the edge/degree caches from scratch per round
-                .localCheckpoint(eager=True)
+            return contrib.groupBy("u").agg(F.sum("c").alias("csum")).select(
+                "u",
+                (base_col.cast("bigint")
+                 + F.expr(f"({num} * csum) div {den}")).cast("bigint")
+                .alias("r"),
             )
-        return r.select(
-            F.col("u").alias("node"),
-            F.col("r").alias("rank_scaled"),
-            (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-        )
-    finally:
-        nodes.unpersist()
-        deg.unpersist()
-        e.unpersist()
-        ed.unpersist()
+
+        r = rd.run(nodes.withColumn("r", r0_col.cast("bigint")), step,
+                   n_iter)
+    return r.select(
+        F.col("u").alias("node"),
+        F.col("r").alias("rank_scaled"),
+        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
+    )
 
 
 def pagerank_sql(
@@ -553,19 +565,7 @@ def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Exact global triangle count of the UNDIRECTED simple graph —
-    one row ``(n_triangles)``.
-
-    DEGREE-ORDERED orientation (the standard skew-proof distributed
-    formulation): canonicalize to simple undirected edges, orient every
-    edge from its lower-(degree, id) endpoint to the higher, generate
-    wedges only at each vertex's ORIENTED out-neighbors, and close them
-    against the canonical edge set.  Every triangle has exactly one
-    vertex that is (degree, id)-minimal among its three, so it is
-    counted exactly once; out-degrees in the oriented graph are bounded
-    by O(√m), so the wedge volume is O(m^1.5) REGARDLESS of hub skew —
-    a plain low→high-id orientation instead puts a celebrity hub's full
-    deg² wedge set in one place.  Self-loops and duplicate/reverse edges
-    are removed by the canonical dedup; no cartesian anywhere.
+    one row ``(n_triangles)``: the row count of :func:`triangle_list`.
 
     Honest cost note: on near-CLIQUE graphs (e.g. duplicate-heavy
     near-dup pair graphs) the triangle COUNT itself is Σ s³/6 per
@@ -573,49 +573,8 @@ def triangle_count(
     strategy avoids materializing those wedges; count on the
     distinct-signature factored graph (dedup.simhash_components' rep
     graph) when clusters are large."""
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") < F.col("v"))
-        .distinct()
-        # lazy localCheckpoint: reused by the degree/wedge/closing joins
-        # within the consuming action; GC-cleaned, unlike persist()
-        # blocks which leak in the CacheManager for the session's life
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        canon.select(F.col("u").alias("x"))
-        .union(canon.select(F.col("v").alias("x")))
-        .groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-    )
-    # orient: (u,v) becomes lo→hi by (degree, id); ties broken by id so
-    # the order is total
-    withd = (
-        canon.join(deg.withColumnRenamed("x", "u")
-                      .withColumnRenamed("d", "du"), "u")
-        .join(deg.withColumnRenamed("x", "v")
-                 .withColumnRenamed("d", "dv"), "v")
-    )
-    u_first = (F.col("du") < F.col("dv")) |         ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    oriented = withd.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint(eager=False)
-    wedges = (
-        oriented.alias("e1")
-        .join(oriented.alias("e2"),
-              (F.col("e1.a") == F.col("e2.a"))
-              & (F.col("e1.b") < F.col("e2.b")))
-        .select(F.col("e1.b").alias("p"), F.col("e2.b").alias("q"))
-    )
-    tri = wedges.join(
-        canon.alias("e3"),
-        (F.least(F.col("p"), F.col("q")) == F.col("e3.u"))
-        & (F.greatest(F.col("p"), F.col("q")) == F.col("e3.v")),
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    return triangle_list(edges, src, dst).agg(
+        F.count(F.lit(1)).alias("n_triangles"))
 
 
 def triangle_count_sql(edges_sql: str) -> str:
@@ -651,63 +610,51 @@ def bfs_hops(
     joins the symmetrized edge relation once per level, anti-joined
     against the visited set — each round shuffles |frontier ⋈ edges|
     rows, never the whole graph; converged components stop contributing
-    as soon as their frontier empties (the loop exits early on an empty
-    frontier — one tiny count per level, the same bounded driver traffic
-    as ``connected_components``' fixpoint aggregate).  Per-level
-    ``localCheckpoint`` cuts keep the plan flat, as in CC.
+    as soon as their frontier empties.  The round state is the visited
+    set; its count is the round driver's measure (module docstring,
+    *Rounds*), so an empty frontier — an unchanged count — ends the loop
+    early: one tiny count per level, the same bounded driver traffic as
+    ``connected_components``' fixpoint aggregate.
 
     Output: ``(node, hops)`` with ``hops`` 0 for the seeds themselves.
     Deterministic: hop distance is a well-defined graph property — no
     tie-break needed."""
     spark = edges.sparkSession
-    # r14 layout pin (the pagerank/CC recipe): every level joins sym on
-    # "u" with the frontier; cache it hash-partitioned + sorted by "u" so
-    # each level re-shuffles only the frontier, never the edge relation.
-    sym = (symmetric_edges(edges, src, dst)
-           .repartition("u").sortWithinPartitions("u")
-           .persist())
-    # Seeds adopt the EDGE column's type (string-keyed graphs included) —
-    # a hard bigint cast would NULL string ids and silently return an
-    # empty neighborhood.  Any seed the cast cannot represent raises.
-    node_type = sym.schema["u"].dataType
-    seed_df = spark.createDataFrame(
-        [(s,) for s in seeds], [src]
-    ).select(F.col(src).try_cast(node_type).alias("node")).distinct()
-    n_null = seed_df.where(F.col("node").isNull()).count()
-    if n_null:
-        sym.unpersist()
-        raise ValueError(
-            f"bfs_hops: {n_null} seed(s) not representable as the edge "
-            f"node type {node_type.simpleString()}")
-    frontier = seed_df.withColumn("hops", F.lit(0).cast("int")) \
-        .localCheckpoint(eager=True)
-    # visited = union of per-level frontiers, each already checkpointed:
-    # the union needs NO checkpoint of its own (its lineage is one flat
-    # RDD per level), which halves the eager jobs per level vs
-    # re-checkpointing the accumulated union every round
-    frontiers = [frontier]
-    try:
-        for h in range(1, max_hops + 1):
-            visited = frontiers[0]
-            for f_ in frontiers[1:]:
-                visited = visited.union(f_)
+    with _RoundDriver(symmetric_edges(edges, src, dst), "u") as rd:
+        sym = rd.edges
+        # Seeds adopt the EDGE column's type (string-keyed graphs
+        # included) — a hard bigint cast would NULL string ids and
+        # silently return an empty neighborhood.  Any seed the cast
+        # cannot represent raises.  The cast runs on the driver-side
+        # local relation (no Spark job); the seeds are a driver list.
+        node_type = sym.schema["u"].dataType
+        cast = spark.createDataFrame([(s,) for s in seeds], [src]).select(
+            F.col(src).try_cast(node_type).alias("node"))
+        nodes = [r[0] for r in cast.collect()]
+        n_null = nodes.count(None)
+        if n_null:
+            raise ValueError(
+                f"bfs_hops: {n_null} seed(s) not representable as the edge "
+                f"node type {node_type.simpleString()}")
+        seed_df = spark.createDataFrame(
+            [(v,) for v in dict.fromkeys(nodes)], cast.schema)
+
+        def step(visited: DataFrame, h: int) -> DataFrame:
+            frontier = visited.where(F.col("hops") == h - 1) \
+                .select(F.col("node").alias("u"))
             nxt = (
-                sym.join(frontier.select(F.col("node").alias("u")), "u")
+                sym.join(frontier, "u")
                 .select(F.col("v").alias("node")).distinct()
                 .join(visited.select("node"), "node", "left_anti")
                 .withColumn("hops", F.lit(h).cast("int"))
-                .localCheckpoint(eager=True)
             )
-            if nxt.isEmpty():
-                break
-            frontiers.append(nxt)
-            frontier = nxt
-        out = frontiers[0]
-        for f_ in frontiers[1:]:
-            out = out.union(f_)
-        return out
-    finally:
-        sym.unpersist()
+            return visited.union(nxt)
+
+        # the measure counts the checkpoint's rows directly: one job per
+        # level (a DataFrame count adds an adaptive shuffle-stage job)
+        return rd.run(seed_df.withColumn("hops", F.lit(0).cast("int")),
+                      step, max_hops,
+                      measure=lambda v: _checkpoint_rdd(v).count())
 
 
 def bfs_hops_factored(
@@ -779,11 +726,21 @@ def triangle_list(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Enumerate every triangle of the undirected simple graph as one row
-    ``(x, y, z)`` with ``x < y < z`` — the same degree-ordered-orientation
-    wedge machinery as :func:`triangle_count`, returning the triangles
-    themselves instead of their count (the building block
-    :func:`dedup.simhash_triangle_count_factored` weights by group
-    sizes)."""
+    ``(x, y, z)`` with ``x < y < z`` (the building block
+    :func:`dedup.simhash_triangle_count_factored` weights by group sizes;
+    :func:`triangle_count` counts these rows).
+
+    DEGREE-ORDERED orientation (the standard skew-proof distributed
+    formulation): canonicalize to simple undirected edges, orient every
+    edge from its lower-(degree, id) endpoint to the higher, generate
+    wedges only at each vertex's ORIENTED out-neighbors, and close them
+    against the canonical edge set.  Every triangle has exactly one
+    vertex that is (degree, id)-minimal among its three, so it is
+    listed exactly once; out-degrees in the oriented graph are bounded
+    by O(√m), so the wedge volume is O(m^1.5) REGARDLESS of hub skew —
+    a plain low→high-id orientation instead puts a celebrity hub's full
+    deg² wedge set in one place.  Self-loops and duplicate/reverse edges
+    are removed by the canonical dedup; no cartesian anywhere."""
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -947,26 +904,15 @@ def label_propagation(
 
     100 TB shape: per round one src-keyed join (labels into edges), one
     (node, label)-keyed count, one node-keyed argmax, one left join
-    back — all linear in |E|; per-round ``localCheckpoint`` keeps the
-    plan O(1) like :func:`pagerank`.  Output: ``(node, label)`` with
-    NULL for never-reached nodes."""
-    # r14 layout pin (the pagerank/CC recipe): every round joins the edge
-    # relation on "v" (labels attach to the neighbor side), so cache it
-    # hash-partitioned AND sorted by that key — cached plans keep their
-    # partitioning, the per-round sort-merge join then re-shuffles only
-    # the node-sized label table, and the edge relation crosses the
-    # network once at build instead of once per round.
-    e = (symmetric_edges(edges, src, dst)
-         .repartition("v").sortWithinPartitions("v")
-         .persist())
-    nodes = e.select("u").distinct().persist()
-    sd = (seeds.select(F.col(node_col).alias("u"),
-                       F.col(label_col).alias("__seed"))
-          .persist())
-    try:
-        cur = (nodes.join(sd, "u", "left")
-               .select("u", F.col("__seed").alias("__lab")))
-        for _ in range(int(n_iter)):
+    back — all linear in |E|, on the round driver (module docstring,
+    *Rounds*; the edges are pinned on "v", the side labels attach to).
+    The round state carries each node's clamped seed label next to its
+    current one, so no round re-reads the caller's seed lineage.
+    Output: ``(node, label)`` with NULL for never-reached nodes."""
+    with _RoundDriver(symmetric_edges(edges, src, dst), "v") as rd:
+        e = rd.edges
+
+        def step(cur: DataFrame, _: int) -> DataFrame:
             contrib = (
                 e.join(cur.select(F.col("u").alias("v"),
                                   F.col("__lab").alias("__nl")), "v")
@@ -979,16 +925,18 @@ def label_propagation(
                         (-F.col("__c")).alias("d"),
                         F.col("__nl").alias("l"))).alias("m"))
                     .select("u", F.col("m.l").alias("__pick")))
-            cur = (nodes.join(sd, "u", "left").join(pick, "u", "left")
-                   .select("u", F.coalesce("__seed", "__pick")
-                           .alias("__lab"))
-                   .localCheckpoint(eager=True))
-        return cur.select(F.col("u").alias(node_col),
-                          F.col("__lab").alias(label_col))
-    finally:
-        nodes.unpersist()
-        sd.unpersist()
-        e.unpersist()
+            return (cur.select("u", "__seed").join(pick, "u", "left")
+                    .select("u", "__seed", F.coalesce("__seed", "__pick")
+                            .alias("__lab")))
+
+        sd = seeds.select(F.col(node_col).alias("u"),
+                          F.col(label_col).alias("__seed"))
+        cur = rd.run(
+            e.select("u").distinct().join(sd, "u", "left")
+            .select("u", "__seed", F.col("__seed").alias("__lab")),
+            step, int(n_iter))
+    return cur.select(F.col("u").alias(node_col),
+                      F.col("__lab").alias(label_col))
 
 
 def label_propagation_sql(
@@ -1130,52 +1078,31 @@ def kcore_peel(
     Output: ``(node, deg)`` — surviving nodes with their degree inside
     the final core (so every deg ≥ k); empty when the k-core is empty.
     """
-    # the edge view is referenced 2·(rounds+1) times — without a
-    # materialization each sweep would REPLAY the upstream candidate-pair
-    # pipeline (the pipeline_curation_v5 shared-stage lesson).  r14: the
-    # one-time compute is a CACHE partitioned + sorted by "v" instead of
-    # a localCheckpoint — checkpoints drop partitioning (LogicalRDD scan,
-    # measured: Exchange re-inserted above it) while cached plans keep
-    # theirs, so every sweep's v-side join reuses the layout and shuffles
-    # only the node-sized survivor table.  The eager count() populates
-    # the cache in ONE job before the sweeps fan out (two concurrent
-    # first-reference stages would otherwise race-compute the expensive
-    # pair lineage twice).
-    e = (symmetric_edges(edges, src, dst)
-         .repartition("v").sortWithinPartitions("v")
-         .persist())
-    try:
-        e.count()
-        surv = e.select(F.col("u").alias("node")).distinct()
+    # The round state is (node, deg): the survivors' degrees inside the
+    # current survivor set.  Round 0 is every node's full degree; each
+    # round keeps deg ≥ k and recomputes degrees among those, so after
+    # ``rounds`` sweeps the state is the final core's degrees — the same
+    # sweeps the SQL mirror unrolls.  The edges are pinned on "v"
+    # (module docstring, *Rounds*).
+    with _RoundDriver(symmetric_edges(edges, src, dst), "v") as rd:
+        e = rd.edges
 
-        def core_degrees(sv: DataFrame) -> DataFrame:
-            # v-join FIRST (reuses e's cached v-layout), u-join second:
+        def degrees(alive: DataFrame) -> DataFrame:
+            return alive.groupBy("u").agg(
+                F.count(F.lit(1)).cast("bigint").alias("deg")) \
+                .select(F.col("u").alias("node"), "deg")
+
+        def step(state: DataFrame, _: int) -> DataFrame:
+            sv = state.where(F.col("deg") >= k).select("node")
+            # v-join FIRST (reuses e's pinned v-layout), u-join second:
             # the sort-merge join on "u" leaves both sides u-partitioned,
             # so the groupBy("u") right after it needs no further
             # Exchange — one edge-relation shuffle per sweep instead of
             # three.
-            alive = (e.join(sv.withColumnRenamed("node", "v"), "v")
-                     .join(sv.withColumnRenamed("node", "u"), "u"))
-            return alive.groupBy("u").agg(
-                F.count(F.lit(1)).cast("bigint").alias("deg"))
+            return degrees(e.join(sv.withColumnRenamed("node", "v"), "v")
+                           .join(sv.withColumnRenamed("node", "u"), "u"))
 
-        for _ in range(int(rounds)):
-            # each sweep references surv TWICE (u and v sides) — without
-            # a per-round snapshot the lineage doubles per sweep (2^R
-            # replans)
-            surv = (core_degrees(surv).where(F.col("deg") >= k)
-                    .select(F.col("u").alias("node"))
-                    .localCheckpoint(eager=False))
-        # EAGER final snapshot so e can be unpersisted before returning
-        # (r15, the pagerank finally-discipline): the cache otherwise
-        # outlives the call in the CacheManager for the session lifetime,
-        # and a lazy snapshot would recompute the whole pair pipeline
-        # from scratch once the cache is gone.  Node-sized result.
-        return (core_degrees(surv)
-                .select(F.col("u").alias("node"), "deg")
-                .localCheckpoint(eager=True))
-    finally:
-        e.unpersist()
+        return rd.run(degrees(e), step, int(rounds))
 
 
 def kcore_peel_sql(edges_sql: str, k: int, rounds: int) -> str:
@@ -1186,7 +1113,7 @@ def kcore_peel_sql(edges_sql: str, k: int, rounds: int) -> str:
     # base is referenced twice (both orientations) and e 2·(rounds+1)
     # times — MATERIALIZED stops DuckDB re-evaluating the (typically
     # expensive) candidate-pair subplan per reference, mirroring the
-    # Spark side's localCheckpoint
+    # Spark side's pinned edge cache
     ctes = [f"base AS MATERIALIZED ({edges_sql})", f"""e AS MATERIALIZED (
         SELECT u, v FROM (
             SELECT s AS u, t AS v FROM base
@@ -1236,22 +1163,17 @@ def kcore_peel_weighted(
     surviving nodes — deg is each underlying vertex's degree inside
     the final core.
     """
-    # r14: cache partitioned + sorted by "v" (checkpoints drop
-    # partitioning, caches keep it — see kcore_peel) so each sweep's
-    # v-side join reuses the layout; eager count() populates the cache
-    # in one job before the sweep stages fan out.
-    e = ((symmetric_edges(edges, "u", "v")
-          .repartition("v").sortWithinPartitions("v").persist())
-         if set(edges.columns) >= {"u", "v"} else None)
-    assert e is not None, "edges must have columns (u, v)"
-    try:
-        e.count()
-        w = weights.select(F.col(weights.columns[0]).alias("node"),
-                           F.col(weights.columns[1]).cast("bigint")
-                           .alias("m")).localCheckpoint(eager=False)
+    if not {"u", "v"} <= set(edges.columns):
+        raise ValueError(
+            "kcore_peel_weighted: edges must have columns (u, v), got "
+            f"{edges.columns}")
+    # round state (node, m, deg), as in kcore_peel: round 0 is the full
+    # graph's degrees, each round peels deg < k and recomputes
+    with _RoundDriver(symmetric_edges(edges, "u", "v"), "v") as rd:
+        e = rd.edges
 
         def degrees(surv: DataFrame) -> DataFrame:
-            # v-join first (cached layout), u-join second: the u-side
+            # v-join first (pinned layout), u-join second: the u-side
             # sort-merge join leaves the relation u-partitioned so the
             # groupBy("u") adds no Exchange (same recipe as kcore_peel)
             nb = (e.join(surv.select(F.col("node").alias("v"),
@@ -1265,18 +1187,11 @@ def kcore_peel_weighted(
                                                          F.lit(0)))
                             .cast("bigint").alias("deg")))
 
-        surv = w
-        for _ in range(int(rounds)):
-            # degrees() reads surv twice (u and v sides): snapshot per
-            # sweep or the lineage doubles per round (2^R replans —
-            # measured 72 s vs 8 s at sf0.01)
-            surv = degrees(surv).where(F.col("deg") >= k) \
-                .select("node", "m").localCheckpoint(eager=False)
-        # final pass mirrors kcore_peel: degrees WITHIN the final
-        # surviving set, unfiltered (short of the fixpoint they can dip
-        # below k).  EAGER snapshot so e can be unpersisted before
-        # returning (r15, the pagerank finally-discipline — see
-        # kcore_peel).
-        return degrees(surv).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
+        def step(state: DataFrame, _: int) -> DataFrame:
+            return degrees(state.where(F.col("deg") >= k)
+                           .select("node", "m"))
+
+        w = weights.select(F.col(weights.columns[0]).alias("node"),
+                           F.col(weights.columns[1]).cast("bigint")
+                           .alias("m"))
+        return rd.run(degrees(w), step, int(rounds))

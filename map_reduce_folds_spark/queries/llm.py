@@ -2058,9 +2058,9 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes="auto", n_tables="auto",
         corpus_count=table_rowcount(sf_dir, "embeddings"),
     )
-    from map_reduce_folds_spark.operators.graph import components_of_pairs
+    from map_reduce_folds_spark.operators.graph import connected_components
 
-    comp = components_of_pairs(pairs.select("id_a", "id_b"))
+    comp = connected_components(pairs, "id_a", "id_b")
     return comp.select(F.col("node").alias("vec_id"), "component")
 
 
@@ -2168,9 +2168,9 @@ def dedup_embedding_clusters_t09(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes="auto", n_tables="auto",
         corpus_count=n + n // 10,
     )
-    from map_reduce_folds_spark.operators.graph import components_of_pairs
+    from map_reduce_folds_spark.operators.graph import connected_components
 
-    comp = components_of_pairs(pairs.select("id_a", "id_b"))
+    comp = connected_components(pairs, "id_a", "id_b")
     return comp.select(F.col("node").alias("vec_id"), "component")
 
 

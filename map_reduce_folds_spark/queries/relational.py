@@ -4765,7 +4765,7 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = LK.blocked_levenshtein_pairs(
         c, "c_custkey", "c_name", ["c_nationkey"], max_dist=2,
         block_cap=100_000)
-    comp = G.components_of_pairs(pairs.select("id_a", "id_b"))
+    comp = G.connected_components(pairs, "id_a", "id_b")
     lab = (c.join(comp.withColumnRenamed("node", "c_custkey"),
                   "c_custkey", "left")
            .withColumn("cluster",

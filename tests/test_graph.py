@@ -191,29 +191,6 @@ def test_cc_long_path_log_rounds(spark):
     assert len(got) == 512 and set(got.values()) == {0}
 
 
-def test_incremental_components_matches_full_recompute(spark):
-    from map_reduce_folds_spark.operators import graph as G
-
-    batch1 = [(1, 2), (2, 3), (10, 11), (20, 21)]
-    batch2 = [(3, 10), (40, 41)]   # merges {1,2,3} with {10,11}; new comp
-    e1 = spark.createDataFrame(
-        [Row(src=a, dst=b) for a, b in batch1], "src long, dst long")
-    e2 = spark.createDataFrame(
-        [Row(src=a, dst=b) for a, b in batch2], "src long, dst long")
-
-    # prev = last run's components plus a carried-forward singleton (30),
-    # e.g. a doc that was in no pair — incremental must keep it
-    prev = G.connected_components(e1, "src", "dst").union(
-        spark.createDataFrame([Row(node=30, component=30)],
-                              "node long, component long"))
-    inc = {(r["node"], r["component"])
-           for r in G.incremental_components(prev, e2).collect()}
-    full = {(r["node"], r["component"])
-            for r in G.connected_components(e1.union(e2), "src", "dst")
-            .collect()}
-    assert inc == full | {(30, 30)}
-
-
 def test_int8_topk_recall_vs_float(spark):
     from map_reduce_folds_spark.operators import similarity as S
 
@@ -802,25 +779,62 @@ def test_kcore_weighted_factored_equals_doc_level(spark):
         assert doc
 
 
-def test_kcore_unpersists_edge_cache(spark):
-    """r15: both peels eager-materialize their result and unpersist the
-    edge cache before returning (the pagerank finally-discipline) — no
-    CacheManager entry survives the call, and the returned frame stays
-    collectable after the cache is gone."""
-    from map_reduce_folds_spark.operators.graph import (
-        kcore_peel, kcore_peel_weighted)
+_CHAIN = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (10, 11)]
 
+
+def _chain(spark):
+    return spark.createDataFrame(_CHAIN, "src bigint, dst bigint")
+
+
+# one call per user of the round driver: case -> (call(spark, tmp_dir),
+# persisted RDDs the returned frame may hold: its own checkpoint)
+_DRIVER_CALLS = {
+    "cc_memory": (lambda sp, _: G.connected_components(_chain(sp)), 1),
+    "cc_table": (lambda sp, tmp: G.connected_components(
+        _chain(sp), checkpoint_dir=tmp), 0),
+    "pagerank": (lambda sp, _: G.pagerank(_chain(sp), n_iter=4), 1),
+    "pagerank_seeded": (lambda sp, _: G.pagerank(
+        _chain(sp), n_iter=4, seeds=[1, 10]), 1),
+    "pagerank_weighted": (lambda sp, _: G.pagerank(
+        sp.createDataFrame([(a, b, a + b) for a, b in _CHAIN],
+                           "src bigint, dst bigint, w bigint"),
+        n_iter=4, weight_col="w"), 1),
+    "bfs_hops": (lambda sp, _: G.bfs_hops(_chain(sp), [1], max_hops=6), 1),
+    "label_propagation": (lambda sp, _: G.label_propagation(
+        _chain(sp), sp.createDataFrame([(1, "a"), (10, "b")],
+                                       "node bigint, label string"),
+        "src", "dst"), 1),
+    "kcore_peel": (lambda sp, _: G.kcore_peel(
+        _chain(sp), "src", "dst", k=2, rounds=3), 1),
+    "kcore_peel_weighted": (lambda sp, _: G.kcore_peel_weighted(
+        sp.createDataFrame([(1, 2), (2, 1), (3, 1)], "node bigint, m bigint"),
+        sp.createDataFrame([(1, 2), (2, 3), (1, 3)], "u bigint, v bigint"),
+        k=2, rounds=2), 1),
+}
+
+
+@pytest.mark.parametrize("case", list(_DRIVER_CALLS))
+def test_round_driver_releases_cache_and_superseded_rounds(
+        spark, tmp_path, case):
+    """Every user of the round driver leaves no CacheManager entry, keeps
+    at most the persisted RDDs its result reads (every superseded
+    round's checkpoint is released), and returns a frame that still
+    collects after the edge cache is gone."""
+    call, held = _DRIVER_CALLS[case]
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = call(spark, str(tmp_path))
     assert cm.isEmpty()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "a bigint, b bigint")
-    out = kcore_peel(edges, "a", "b", k=2, rounds=3)
-    assert cm.isEmpty()
-    assert {r["node"] for r in out.collect()} == {1, 2, 3}
+    grown = spark.sparkContext._jsc.getPersistentRDDs().size() - before
+    assert grown <= held, grown
+    assert out.collect()
 
-    w = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "node bigint, m bigint")
-    we = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "u bigint, v bigint")
-    out2 = kcore_peel_weighted(w, we, k=2, rounds=2)
-    assert cm.isEmpty()
-    assert out2.count() > 0
+
+def test_kcore_peel_weighted_rejects_edges_without_u_v(spark):
+    """The (u, v) column check is a ValueError raised before any plan is
+    built — not an assert, which ``python -O`` strips."""
+    w = spark.createDataFrame([(1, 2)], "node bigint, m bigint")
+    e = spark.createDataFrame([(1, 2)], "a bigint, b bigint")
+    with pytest.raises(ValueError, match=r"columns \(u, v\)"):
+        G.kcore_peel_weighted(w, e, k=2, rounds=2)

@@ -83,9 +83,9 @@ def test_simhash_components_equals_doc_level_pairs(docs):
 
     doc_level = {
         (r["node"], r["component"])
-        for r in G.components_of_pairs(
-            D.simhash_near_dup_pairs(docs, bits=32, max_hamming=3, blocks=4)
-            .select("id_a", "id_b")).collect()
+        for r in G.connected_components(
+            D.simhash_near_dup_pairs(docs, bits=32, max_hamming=3, blocks=4),
+            "id_a", "id_b").collect()
     }
     factored = {
         (r["node"], r["component"])

@@ -1502,7 +1502,7 @@ def test_golden_record_survivorship_rules(spark):
         "c_acctbal double, c_mktsegment string")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "id_a bigint, id_b bigint")
-    comp = G2.components_of_pairs(pairs)
+    comp = G2.connected_components(pairs, "id_a", "id_b")
     lab = (c.join(comp.withColumnRenamed("node", "c_custkey"),
                   "c_custkey", "left")
            .withColumn("cluster",
