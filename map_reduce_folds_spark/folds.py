@@ -32,17 +32,10 @@ aggregation stays possible — see SURVEY §4 "notably absent".
 from __future__ import annotations
 
 import functools
-import itertools
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_ids = itertools.count()
-
-
-def _gensym(prefix: str = "f") -> str:
-    return f"__{prefix}{next(_ids)}"
 
 
 def _to_col(c: str | Column) -> Column:

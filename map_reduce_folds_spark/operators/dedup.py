@@ -31,11 +31,6 @@ from map_reduce_folds_spark.operators.text import (
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — dropDuplicates (hash aggregation)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def exact_dedup_keep_first(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep the lowest-id row per exact text digest — deterministic
     representative selection (min_by), one shuffle on the digest."""

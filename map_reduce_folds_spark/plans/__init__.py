@@ -18,10 +18,6 @@ def executed_plan(df: DataFrame) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def initial_physical_plan(df: DataFrame) -> str:
     """Pre-AQE physical plan.  Use when AQE's runtime shortcuts (e.g. empty-
     relation propagation at tiny SF) hide the join strategies that would run

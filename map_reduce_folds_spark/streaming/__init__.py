@@ -20,11 +20,30 @@ State size is bounded by (#keys × #open windows), the quantity to watch at
 ``replay_to_memory`` is the one replay harness: it stages micro-batches
 as a file stream in pinned order and drains a stream built over it into
 a memory table.  The stateful stream twins run on it.
+
+``_keyed_fold`` is the one GroupState runtime of the per-key twins
+(``stateful_fold``, ``stream_funnel_depth``, ``stream_ewma``,
+``stream_holt``, ``stream_scd2``, ``stream_cusum``, ``stream_holtwinters``,
+``stream_confseq``): each supplies a projection, an initial state and an
+``advance(state, rows) -> (state, out_rows)`` step; the runtime owns the
+key DDL, the gathering of a key's micro-batch rows, the state codec and
+the emitted frames.  The codec is base64 of a pickle, so a state may hold
+timestamps, decimals and lists, which JSON cannot.  ``sessionize_stateful``
+keeps its own loop: it is the only event-time-timeout user.
+
+In-batch order: the event-ordered twins sort a key's micro-batch rows by
+(event time, tiebreak) before stepping, so a time-ordered replay equals
+the batch operator.  Across micro-batches the state is folded in arrival
+order: a late event that arrives in a later micro-batch than its
+successors folds into the state as of its arrival batch (the same
+first-writer-wins caveat as ``incremental_dedup``).
 """
 
 from __future__ import annotations
 
+import base64
 import os
+import pickle
 import shutil
 import tempfile
 import threading
@@ -34,7 +53,7 @@ from typing import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_folds_spark.core import Assign, FoldReduce, MapReduce, Unpack
+from map_reduce_folds_spark.core import FoldReduce, MapReduce, _key_fields
 from map_reduce_folds_spark.folds import Fold
 
 
@@ -275,6 +294,78 @@ def replay_to_memory(spark: SparkSession, batches, schema: str, build,
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _encode_state(state) -> str:
+    """The per-key twins' state codec: base64 of a pickle, stored in the
+    ``acc string`` state column.  :func:`_decode_state` unpickles only
+    what this wrote into the query's own state store."""
+    return base64.b64encode(pickle.dumps(state)).decode("ascii")
+
+
+def _decode_state(blob: str):
+    return pickle.loads(base64.b64decode(blob))
+
+
+# the gathered columns of an _event_rows projection
+_EVENT_COLS = ["__t", "__b", "__x"]
+
+
+def _event_rows(stream: DataFrame, key: str, ts_col: str,
+                tiebreak_col: str | None, value) -> DataFrame:
+    """The ``(key, __t, __b, __x)`` projection of the event-ordered twins:
+    event time in µs, the tiebreak (0 without one) and the value."""
+    from ..timeutil import epoch_us
+
+    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
+    return stream.select(F.col(key), epoch_us(F.col(ts_col)).alias("__t"),
+                         tb.alias("__b"), value.alias("__x"))
+
+
+def _keyed_fold(src: DataFrame, keys: list[str], cols: list[str], init,
+                advance, out_fields: dict[str, str],
+                output_mode: str) -> DataFrame:
+    """The one GroupState loop of the per-key twins
+    (``applyInPandasWithState``, no timeout).
+
+    Per key and micro-batch: the state (a fresh decoded copy of ``init``
+    for a new key), the batch's ``cols`` gathered as row tuples, then
+    ``advance(state, rows) -> (state, out_rows)``.  The new state is
+    stored; each out row (values for ``out_fields``, in order) is emitted
+    behind the key, in the output DDL's column order: the keys as ``src``
+    orders them, then ``out_fields``.
+    """
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    key_names = [f.name for f in src.schema.fields if f.name in keys]
+    out_schema = ", ".join(
+        _key_fields(src, keys) + [f"{n} {t}" for n, t in out_fields.items()])
+    columns = key_names + list(out_fields)
+    init_blob = _encode_state(init)
+
+    def update(key, pdf_iter, state: GroupState):
+        import pandas as pd  # local import: runs on executors
+
+        rows = []
+        for pdf in pdf_iter:
+            rows.extend(zip(*(pdf[c] for c in cols)))
+        # pdf_iter can yield chunks that are all zero-row
+        if not rows:
+            return
+        st, out = advance(
+            _decode_state(state.get[0] if state.exists else init_blob), rows)
+        state.update((_encode_state(st),))
+        by_name = dict(zip(keys, key))
+        k = tuple(by_name[n] for n in key_names)
+        yield pd.DataFrame([k + tuple(r) for r in out], columns=columns)
+
+    return src.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType="acc string",
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def stateful_fold(
     stream: DataFrame,
     keys: list[str],
@@ -290,51 +381,23 @@ def stateful_fold(
     The fold's ``(step, init, extract)`` triple — the reference's
     ``FL.Fold`` (Streamly.hs:140-141) — IS the state spec: state = acc,
     update = step over the micro-batch's rows, emit = extract(acc).  The
-    fold must be a ``CustomFold`` with picklable step/init/extract; state
-    is carried as JSON (custom fold states are small by definition).
+    fold must be a ``CustomFold`` with picklable step/init/extract and a
+    picklable accumulator, carried by the module's state codec.  ``step``
+    gets the value itself for one value column, else a tuple in
+    ``value_cols`` order.
 
     Each micro-batch emits one updated row per touched key (update mode).
     Unlike the windowed path this never drops state (no watermark): use it
     for per-key running aggregates, not unbounded-cardinality keys.
     """
-    import json
+    def advance(acc, rows):
+        for row in rows:
+            acc = fold.step(acc, row if len(value_cols) > 1 else row[0])
+        return acc, [(fold.extract(acc),)]
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.schema.fields if f.name in keys
-    )
-    out_schema = f"{key_fields}, {out_col} {out_dtype}"
-    state_schema = "acc string"
-
-    def update(key, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (acc_json,) = state.get
-            acc = json.loads(acc_json)
-        else:
-            acc = fold.init() if callable(fold.init) else fold.init
-        for pdf in pdf_iter:
-            for row in pdf[value_cols].itertuples(index=False):
-                arg = row if len(value_cols) > 1 else row[0]
-                acc = fold.step(acc, arg)
-        state.update((json.dumps(acc),))
-        row = dict(zip(keys, key))
-        row[out_col] = fold.extract(acc)
-        yield pd.DataFrame([row])
-
-    return (
-        stream.groupBy(*keys)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    init = fold.init() if callable(fold.init) else fold.init
+    return _keyed_fold(stream, keys, value_cols, init, advance,
+                       {out_col: out_dtype}, output_mode)
 
 
 def sessionize_stateful(
@@ -344,25 +407,27 @@ def sessionize_stateful(
     gap_seconds: int,
 ) -> DataFrame:
     """Timer-based session emission on ``applyInPandasWithState`` — the
-    same semantics as :func:`sessionize_tws` (one row per CLOSED session:
-    in-batch close by the gap rule, or event-time TIMEOUT close once the
-    watermark passes ``session_end + gap``) on the GroupState API, which
-    runs without the TWS protobuf channel.  Both delegate the session
-    arithmetic to :func:`_fold_session_times`.
+    streaming analog of operators/windows.sessionize that emits ONE row per
+    CLOSED session: (keys…, session_start_us, session_end_us, n_events).
 
-    The caller must set a watermark on ``ts_col`` (EventTimeTimeout
-    requires one); state per key is one open-session triple — O(keys).
+    Two close paths, both exact w.r.t. the gap rule:
+
+    * **in-batch close** — a later event more than ``gap_seconds`` after
+      the open session's end closes it immediately;
+    * **timeout close** — an EVENT-TIME timeout at ``session_end + gap``
+      fires once the watermark passes it, closing sessions that simply
+      stopped receiving events.
+
+    The session arithmetic is :func:`_fold_session_times`.  This twin keeps
+    its own loop instead of ``_keyed_fold``: it is the only user of
+    ``EventTimeTimeout``.  The caller must set a watermark on ``ts_col``
+    (EventTimeTimeout requires one); state per key is one open-session
+    triple — O(keys), not O(events).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.schema.fields if f.name in keys
-    )
-    out_schema = (
-        f"{key_fields}, session_start_us bigint, session_end_us bigint, "
-        "n_events bigint"
-    )
+    out_schema = ", ".join(_key_fields(stream, keys) + [
+        "session_start_us bigint", "session_end_us bigint", "n_events bigint"])
     state_schema = "start_us bigint, end_us bigint, n bigint"
     gap_us = gap_seconds * 1_000_000
 
@@ -515,70 +580,9 @@ def incremental_dedup(
     return write_foreach_batch(stream, process, checkpoint_dir)
 
 
-def stateful_fold_tws(
-    stream: DataFrame,
-    keys: list[str],
-    value_cols: list[str],
-    fold,
-    out_col: str = "result",
-    out_dtype: str = "double",
-):
-    """``stateful_fold`` on Spark 4's transformWithStateInPandas API.
-
-    Same semantics (the fold triple as per-key incremental state), but on
-    the newer StatefulProcessor runtime: typed ValueState instead of a
-    row-tuple, per-processor init/close hooks, and (in cluster deployments)
-    the RocksDB state store with changelog checkpointing — the
-    forward-looking choice for large state."""
-    import json
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.schema.fields if f.name in keys
-    )
-    out_schema = f"{key_fields}, {out_col} {out_dtype}"
-
-    class FoldProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("acc", "acc string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            exists = self._state.exists()
-            acc = (json.loads(self._state.get()[0]) if exists
-                   else (fold.init() if callable(fold.init) else fold.init))
-            for pdf in rows:
-                for row in pdf[value_cols].itertuples(index=False):
-                    arg = row if len(value_cols) > 1 else row[0]
-                    acc = fold.step(acc, arg)
-            self._state.update((json.dumps(acc),))
-            out = dict(zip(keys, key))
-            out[out_col] = fold.extract(acc)
-            yield pd.DataFrame([out])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.groupBy(*keys)
-        .transformWithStateInPandas(
-            FoldProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def _fold_session_times(times, state, gap_us):
-    """Pure session state machine shared by :func:`sessionize_tws` (and its
-    unit tests — the TWS runtime needs protobuf, absent in this container,
-    so the logic is verified here and only the plumbing is runtime-gated).
+    """Pure session state machine of :func:`sessionize_stateful`, unit
+    tested without a stream.
 
     ``times``: ascending event times (µs); ``state``: open (start, end, n)
     or None.  Returns (closed_sessions, new_open_state): sessions closed by
@@ -596,111 +600,6 @@ def _fold_session_times(times, state, gap_us):
             closed.append((start, end, n))
             start, end, n = t, t, 1
     return closed, (start, end, n)
-
-
-def sessionize_tws(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    gap_seconds: int,
-) -> DataFrame:
-    """Timer-based session emission on transformWithStateInPandas — the
-    streaming analog of operators/windows.sessionize that emits ONE row per
-    CLOSED session: (keys…, session_start_us, session_end_us, n_events).
-
-    Two close paths, both exact w.r.t. the gap rule:
-
-    * **in-batch close** — a later event more than ``gap_seconds`` after
-      the open session's end closes it immediately (emitted from
-      ``handleInputRows``);
-    * **timer close** — an EVENT-TIME timer registered at
-      ``session_end + gap`` fires once the watermark passes it
-      (``handleExpiredTimer``), closing sessions that simply stopped
-      receiving events.  This is the piece ``F.session_window`` gives you
-      only implicitly: here the state machine is explicit and extensible
-      (per-session custom folds, early emission policies).
-
-    The caller must set a watermark on ``ts_col`` (timeMode="EventTime"
-    requires it); state per key is ONE open session struct — O(keys), not
-    O(events).  At 100 TB/day the state store (RocksDB in cluster deploys)
-    holds one 24-byte row per active key.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.schema.fields if f.name in keys
-    )
-    out_schema = (
-        f"{key_fields}, session_start_us bigint, session_end_us bigint, "
-        "n_events bigint"
-    )
-    gap_us = gap_seconds * 1_000_000
-
-    def _emit(key, start_us, end_us, n):
-        import pandas as pd
-
-        out = dict(zip(keys, key))
-        out.update(session_start_us=int(start_us), session_end_us=int(end_us),
-                   n_events=int(n))
-        return pd.DataFrame([out])
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._state = handle.getValueState(
-                "sess", "start_us bigint, end_us bigint, n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            ts_us = []
-            for pdf in rows:
-                t = pd.to_datetime(pdf[ts_col])
-                if getattr(t.dt, "tz", None) is not None:
-                    t = t.dt.tz_convert("UTC").dt.tz_localize(None)
-                ts_us.append(t.to_numpy().astype("int64") // 1000)
-            # guard on the CONCATENATED array (all-zero-row chunks would
-            # slip past `if not ts_us`)
-            times = (np.sort(np.concatenate(ts_us)) if ts_us
-                     else np.array([], dtype="int64"))
-            if times.size == 0:
-                return
-            prev = self._state.get() if self._state.exists() else None
-            closed, (start, end, n) = _fold_session_times(times, prev, gap_us)
-            for s in closed:
-                yield _emit(key, *s)  # closed in-batch by a later event
-            self._state.update((start, end, n))
-            # one live timer per key: re-arm at the (possibly extended) end
-            for old in self._h.listTimers():
-                self._h.deleteTimer(old)
-            self._h.registerTimer((end + gap_us) // 1000)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._state.exists():
-                return
-            start, end, n = self._state.get()
-            # stale-timer guard: only close if the session really aged out
-            if expiredTimerInfo.getExpiryTimeInMs() >= (end + gap_us) // 1000:
-                yield _emit(key, start, end, n)
-                self._state.clear()
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.groupBy(*keys)
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )
 
 
 def stream_cms_cells(
@@ -814,66 +713,32 @@ def stream_funnel_depth(
     ``incremental_dedup`` (exactly-once per key, first-writer-wins).
     For time-ordered replay (the property tests' shape) the result
     equals the batch operator on the union of all batches."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     if len(set(steps)) != len(steps):
         raise ValueError(f"funnel steps must be distinct, got {steps}")
-    key_field = next(f for f in stream.schema.fields
-                     if f.name == user_col)
-    out_schema = f"{key_field.name} {key_field.dataType.simpleString()}, " \
-                 "depth int"
     horizon = None if within is None else int(within)
 
     # pre-map events to STEP INDICES (the batch twin's discipline) so the
     # in-batch sort key is (ts, tiebreak, index) — same-timestamp events
     # fold in the same order as batch funnel_depth's struct sort, never
     # by event-name lexicography
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
     idx_col = F.lit(0)
     for i_, step_ in reversed(list(enumerate(steps))):
         idx_col = F.when(F.col(event_col) == step_,
                          F.lit(i_ + 1)).otherwise(idx_col)
-    filtered = stream.where(F.col(event_col).isin(steps)).select(
-        F.col(user_col),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        idx_col.cast("int").alias("__i"),
-    )
+    src = _event_rows(stream.where(F.col(event_col).isin(steps)), user_col,
+                      ts_col, tiebreak_col, idx_col.cast("int"))
 
-    def update(key, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            depth, last_t = json.loads(st_json)
-        else:
-            depth, last_t = 0, 0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__i"]))
-        rows.sort()
-        for t, _b, i in rows:
+    def advance(st, rows):
+        depth, last_t = st
+        for t, _b, i in sorted(rows):
             if i == depth + 1 and (
                 horizon is None or depth == 0 or t - last_t <= horizon
             ):
                 depth, last_t = depth + 1, int(t)
-        state.update((json.dumps([depth, last_t]),))
-        yield pd.DataFrame([{user_col: key[0], "depth": depth}])
+        return (depth, last_t), [(depth,)]
 
-    return (
-        filtered.groupBy(user_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_fold(src, [user_col], _EVENT_COLS, (0, 0), advance,
+                       {"depth": "int"}, output_mode)
 
 
 def stream_ewma(
@@ -891,56 +756,23 @@ def stream_ewma(
     footprint.  Each micro-batch folds its rows in (ts, tiebreak)
     event-time order through the same α = 1/2^k power-of-two-exact
     recursion, so a time-ordered replay is BITWISE equal to the batch
-    operator (parity-tested).  Same arrival-order caveat as
-    ``stream_funnel_depth``: a cross-batch late event folds into the
-    state as of its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
+    operator (parity-tested).  Cross-batch arrival order as in the module
+    docstring."""
     if alpha_halves < 1:
         raise ValueError(f"alpha_halves must be >= 1, got {alpha_halves}")
     alpha = 1.0 / (1 << alpha_halves)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = f"{key} {fields[key]}, n_events bigint, ewma double"
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            n, e = json.loads(st_json)
-        else:
-            n, e = 0, 0.0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
+    def advance(st, rows):
+        n, e = st
+        for _t, _b, x in sorted(rows):
             e = float(x) if n == 0 else alpha * float(x) + (1 - alpha) * e
             n += 1
-        state.update((json.dumps([n, e]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "ewma": e}])
+        return (n, e), [(n, e)]
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = _event_rows(stream, key, ts_col, tiebreak_col,
+                      F.col(value_col).cast("double"))
+    return _keyed_fold(src, [key], _EVENT_COLS, (0, 0.0), advance,
+                       {"n_events": "bigint", "ewma": "double"}, output_mode)
 
 
 def stream_holt(
@@ -962,15 +794,8 @@ def stream_holt(
     see the batch operator's docstring), so a time-ordered replay is
     BITWISE equal to the batch operator (parity-tested), emitting the
     rolling ``horizon``-step forecast per key per micro-batch — the
-    live anomaly/forecast feed a monitoring pipeline consumes.  Same
-    arrival-order caveat as ``stream_ewma``: a cross-batch late event
-    folds into the state as of its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
+    live anomaly/forecast feed a monitoring pipeline consumes.
+    Cross-batch arrival order as in the module docstring."""
     if alpha_halves < 1 or beta_halves < 1:
         raise ValueError(
             f"alpha_halves/beta_halves must be >= 1, got "
@@ -978,30 +803,10 @@ def stream_holt(
     alpha = 1.0 / (1 << alpha_halves)
     beta = 1.0 / (1 << beta_halves)
     h = float(horizon)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, level double, "
-                  "trend double, forecast double")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            n, lv, tr = json.loads(st_json)
-        else:
-            n, lv, tr = 0, 0.0, 0.0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
+    def advance(st, rows):
+        n, lv, tr = st
+        for _t, _b, x in sorted(rows):
             x = float(x)
             if n == 0:
                 lv, tr = x, 0.0
@@ -1011,20 +816,14 @@ def stream_holt(
                        + (1 - beta) * tr)
                 lv, tr = nl, ntr
             n += 1
-        state.update((json.dumps([n, lv, tr]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "level": lv,
-                             "trend": tr, "forecast": lv + h * tr}])
+        return (n, lv, tr), [(n, lv, tr, lv + h * tr)]
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = _event_rows(stream, key, ts_col, tiebreak_col,
+                      F.col(value_col).cast("double"))
+    return _keyed_fold(
+        src, [key], _EVENT_COLS, (0, 0.0, 0.0), advance,
+        {"n_events": "bigint", "level": "double", "trend": "double",
+         "forecast": "double"}, output_mode)
 
 
 def stream_scd2(
@@ -1045,77 +844,40 @@ def stream_scd2(
     ``valid_to`` = the new run's start) and opens the next version.
     Update-mode consumers keep the LAST emission per (key, version) —
     closed runs are final, the open run's row grows its ``n_events`` and
-    carries ``valid_to`` NULL.  Same arrival-order caveat as
-    ``stream_funnel_depth``: cross-batch late events fold into the run
-    open at their arrival batch (time-ordered replay equals the batch
-    operator, parity-tested).
+    carries ``valid_to`` NULL.  Cross-batch arrival order as in the module
+    docstring: cross-batch late events fold into the run open at their
+    arrival batch (time-ordered replay equals the batch operator,
+    parity-tested).
 
-    State rides a base64-pickle (not JSON) so ``value_col`` may be ANY
-    type the batch twin accepts — timestamps, dates, decimals — not just
-    JSON-native scalars."""
-    import base64
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
+    ``value_col`` may be ANY type the batch twin accepts — timestamps,
+    dates, decimals — since the state codec carries it as is."""
     fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    val_t = fields[value_col]
-    out_schema = (
-        f"{key} {fields[key]}, version bigint, {value_col} {val_t}, "
-        "valid_from bigint, valid_to bigint, n_events bigint"
-    )
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).alias("__v"),
-    )
 
-    def update(k, pdf_iter, state: GroupState):
-        import pandas as pd
+    def advance(st, rows):
+        import pandas as pd  # local import: runs on executors
 
-        if state.exists:
-            (st_b64,) = state.get
-            cur_v, version, run_from, run_n = pickle.loads(
-                base64.b64decode(st_b64))
-        else:
-            cur_v, version, run_from, run_n = None, 0, None, 0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__v"]))
-        rows.sort(key=lambda r: (r[0], r[1]))
+        cur_v, version, run_from, run_n = st
         out = []
-        for t, _b, v in rows:
+        for t, _b, v in sorted(rows, key=lambda r: (r[0], r[1])):
             v = None if pd.isna(v) else v
             if version == 0:
                 version, cur_v, run_from, run_n = 1, v, int(t), 1
             elif (v is None and cur_v is None) or v == cur_v:
                 run_n += 1
             else:
-                out.append((k[0], version, cur_v, run_from, int(t), run_n))
+                out.append((version, cur_v, run_from, int(t), run_n))
                 version += 1
                 cur_v, run_from, run_n = v, int(t), 1
         if version:
-            out.append((k[0], version, cur_v, run_from, None, run_n))
-        state.update((base64.b64encode(pickle.dumps(
-            [cur_v, version, run_from, run_n])).decode("ascii"),))
-        yield pd.DataFrame(
-            out, columns=[key, "version", value_col,
-                          "valid_from", "valid_to", "n_events"])
+            out.append((version, cur_v, run_from, None, run_n))
+        return (cur_v, version, run_from, run_n), out
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = _event_rows(stream, key, ts_col, tiebreak_col, F.col(value_col))
+    return _keyed_fold(
+        src, [key], _EVENT_COLS, (None, 0, None, 0), advance,
+        {"version": "bigint", value_col: fields[value_col],
+         "valid_from": "bigint", "valid_to": "bigint", "n_events": "bigint"},
+        output_mode)
 
 
 def stream_hll_sliding(
@@ -1202,60 +964,27 @@ def stream_cusum(
     closed-form prefix windows; the recurrence and the closed form are
     property-tested equal), so a time-ordered replay is EXACTLY equal
     to the batch operator — integer state, no rounding to argue about.
-    Same arrival-order caveat as ``stream_ewma``: a cross-batch late
-    event folds in at its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
+    Cross-batch arrival order as in the module docstring."""
     k_, h_ = int(target_cents), int(alarm_cents)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, "
-                  "final_cusum bigint, max_cusum bigint, n_alarms bigint")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
-        .alias("__x"),
-    )
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            n, s, mx, a = json.loads(st_json)
-        else:
-            n = s = mx = a = 0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
+    def advance(st, rows):
+        n, s, mx, a = st
+        for _t, _b, x in sorted(rows):
             ns = max(0, s + (int(x) - k_))
             if s <= h_ < ns:
                 a += 1
             mx = max(mx, ns)
             s = ns
             n += 1
-        state.update((json.dumps([n, s, mx, a]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "final_cusum": s,
-                             "max_cusum": mx, "n_alarms": a}])
+        return (n, s, mx, a), [(n, s, mx, a)]
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = _event_rows(
+        stream, key, ts_col, tiebreak_col,
+        (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint"))
+    return _keyed_fold(
+        src, [key], _EVENT_COLS, (0, 0, 0, 0), advance,
+        {"n_events": "bigint", "final_cusum": "bigint", "max_cusum": "bigint",
+         "n_alarms": "bigint"}, output_mode)
 
 
 def stream_nb_score(
@@ -1366,13 +1095,7 @@ def stream_holtwinters(
     expanded-trend / power-of-two contract recursion, so a time-ordered
     replay is BITWISE equal to the batch operator (parity-tested),
     emitting the rolling seasonal forecast per key per micro-batch.
-    Same arrival-order caveat as ``stream_holt``."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
+    Cross-batch arrival order as in the module docstring."""
     if min(alpha_halves, beta_halves, gamma_halves) < 1:
         raise ValueError("alpha/beta/gamma halves must be >= 1")
     if period < 2:
@@ -1381,31 +1104,10 @@ def stream_holtwinters(
     beta = 1.0 / (1 << beta_halves)
     gamma = 1.0 / (1 << gamma_halves)
     m, h = period, horizon
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, level double, "
-                  "trend double, season_next double, forecast double")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            st = json.loads(st_json)
-            n, lv, tr, s = st[0], st[1], st[2], list(st[3])
-        else:
-            n, lv, tr, s = 0, 0.0, 0.0, [0.0] * m
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
+    def advance(st, rows):
+        n, lv, tr, s = st
+        for _t, _b, x in sorted(rows):
             x = float(x)
             if n == 0:
                 lv, tr = x, 0.0
@@ -1418,22 +1120,15 @@ def stream_holtwinters(
                 s[j] = gamma * (x - nl) + (1 - gamma) * sj
                 lv, tr = nl, ntr
             n += 1
-        state.update((json.dumps([n, lv, tr, s]),))
         sn = s[(n + h - 1) % m]
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "level": lv,
-                             "trend": tr, "season_next": sn,
-                             "forecast": (lv + float(h) * tr) + sn}])
+        return (n, lv, tr, s), [(n, lv, tr, sn, (lv + float(h) * tr) + sn)]
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = _event_rows(stream, key, ts_col, tiebreak_col,
+                      F.col(value_col).cast("double"))
+    return _keyed_fold(
+        src, [key], _EVENT_COLS, (0, 0.0, 0.0, [0.0] * m), advance,
+        {"n_events": "bigint", "level": "double", "trend": "double",
+         "season_next": "double", "forecast": "double"}, output_mode)
 
 
 def stream_bootstrap_moments(
@@ -1552,40 +1247,15 @@ def stream_confseq(
     by the SAME Spark expression the batch operator ends with
     (``evalstats.confseq_bounds``), so batch and stream agree bitwise
     by construction on equal counts."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.evalstats import confseq_bounds
 
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = f"{key} {fields[key]}, n_cum bigint, s_cum bigint"
-    src = stream.select(
-        F.col(key),
-        F.col(success_col).cast("bigint").alias("__y"))
+    def advance(st, rows):
+        # a null success (NaN) adds nothing to s, as a pandas sum skips it
+        n, s = st[0] + len(rows), st[1] + sum(int(y) for (y,) in rows if y == y)
+        return (n, s), [(n, s)]
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (st_json,) = state.get
-            n, s = json.loads(st_json)
-        else:
-            n = s = 0
-        for pdf in pdf_iter:
-            n += int(len(pdf))
-            s += int(pdf["__y"].sum())
-        state.update((json.dumps([n, s]),))
-        yield pd.DataFrame([{key: key_[0], "n_cum": n, "s_cum": s}])
-
-    out = (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    src = stream.select(F.col(key),
+                        F.col(success_col).cast("bigint").alias("__y"))
+    out = _keyed_fold(src, [key], ["__y"], (0, 0), advance,
+                      {"n_cum": "bigint", "s_cum": "bigint"}, output_mode)
     return confseq_bounds(out, alpha_permille=alpha_permille)

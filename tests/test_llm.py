@@ -4247,8 +4247,18 @@ def test_settle_cancels_queued_and_waits_for_running_futures():
 
     pool = llm._branch_pool()
     release = threading.Event()
-    busy = [pool.submit(release.wait, 30) for _ in range(3)]
+    started = threading.Semaphore(0)
+
+    def block():
+        started.release()
+        return release.wait(30)
+
+    busy = [pool.submit(block) for _ in range(3)]
     try:
+        # barrier: all three workers hold a blocking task before `queued`
+        # is submitted, so it stays queued and busy[0] is running
+        for _ in busy:
+            assert started.acquire(timeout=30)
         queued = pool.submit(lambda: 1)
         llm._settle(queued)
         assert queued.cancelled()

@@ -294,37 +294,8 @@ def test_stream_dedup(spark, events_batch, tmp_path_factory):
     assert len(got) == len(set(got)) == 200
 
 
-def test_stateful_fold_tws(spark, events_batch, events_stream_path):
-    """transformWithStateInPandas variant of the stateful fold — same
-    batch-equivalence contract as test_stateful_custom_fold.  Skipped when
-    google.protobuf (the TWS control channel) is absent."""
-    pytest.importorskip("google.protobuf.descriptor",
-                        reason="TWS needs protobuf; not in this container")
-    from map_reduce_folds_spark import folds as flds
-    from map_reduce_folds_spark.streaming import stateful_fold_tws
-
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    stream = read_parquet_stream(spark, events_stream_path, schema,
-                                 max_files_per_trigger=1)
-    fold = flds.fold_from_steps(
-        step=lambda acc, v: acc + 1,
-        init=lambda: 0,
-        extract=float,
-        dtype="double",
-    )
-    out = stateful_fold_tws(stream, ["event_type"], ["value"], fold, "n")
-    got = run_to_memory(out, "tws_fold", timeout_s=120, output_mode="update")
-    import collections
-    final: dict = collections.defaultdict(float)
-    for r in got.collect():
-        final[r.event_type] = max(final[r.event_type], r.n)
-    exp = {r.event_type: float(r.cnt) for r in
-           events_batch.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert dict(final) == exp
-
-
 def test_fold_session_times_state_machine():
-    """The pure session fold behind sessionize_tws (runtime-independent):
+    """The pure session fold behind sessionize_stateful (no stream):
     batch splits, cross-batch continuation, and the open-state carry."""
     from map_reduce_folds_spark.streaming import _fold_session_times
 
@@ -349,8 +320,8 @@ def test_fold_session_times_batch_split_invariance():
     """Property: however the (sorted) event stream is chopped into
     micro-batches, threading the open-session state through
     _fold_session_times yields EXACTLY the sessions of the one-shot batch
-    computation — the correctness core of sessionize_tws, checked without
-    the TWS runtime."""
+    computation — the correctness core of sessionize_stateful, checked
+    without a stream."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -382,57 +353,8 @@ def test_fold_session_times_batch_split_invariance():
     check()
 
 
-def test_sessionize_tws_timer_close(spark, tmp_path_factory):
-    """Timer-based session emission: synthetic two-batch replay where batch
-    1 carries two sessions per key (one closed in-batch by the gap rule,
-    one left open) and batch 2 is a single far-future event that advances
-    the watermark past every batch-1 timer — so the open sessions close by
-    TIMER.  Expected sessions come from the batch sessionizer on the same
-    data (streaming analog of the engine-vs-oracle differential)."""
-    pytest.importorskip("google.protobuf.descriptor",
-                        reason="TWS needs protobuf; not in this container")
-    import datetime as dt
-
-    from map_reduce_folds_spark.streaming import sessionize_tws
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ev(uid, sec):
-        return (uid, base + dt.timedelta(seconds=sec))
-
-    # user 1: events 0,10,20 | gap | 2000,2010  →  2 sessions
-    # user 2: events 5,25    →  1 session
-    batch1 = [ev(1, 0), ev(1, 10), ev(1, 20), ev(1, 2000), ev(1, 2010),
-              ev(2, 5), ev(2, 25)]
-    batch2 = [ev(99, 10**6)]  # watermark mover only
-    schema = "user_id bigint, ts timestamp"
-    p = str(tmp_path_factory.mktemp("sess_tws"))
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(p)
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(p)
-
-    stream = (
-        read_parquet_stream(spark, p, schema, max_files_per_trigger=1)
-        .withWatermark("ts", "0 seconds")
-    )
-    out = sessionize_tws(stream, ["user_id"], "ts", gap_seconds=60)
-    got = run_to_memory(out, "sess_tws", timeout_s=120, output_mode="append")
-    rows = {(r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in got.collect() if r.user_id != 99}
-
-    us = lambda sec: int((base + dt.timedelta(seconds=sec)).replace(
-        tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    expected = {
-        (1, us(0), us(20), 3),
-        (1, us(2000), us(2010), 2),
-        (2, us(5), us(25), 2),
-    }
-    assert rows == expected
-
-
 def test_sessionize_stateful_timer_close(spark, tmp_path_factory):
-    """End-to-end timer-based session close ON THE RUNNABLE GroupState API
-    (sessionize_tws's twin — same _fold_session_times core, same two-batch
-    replay shape as the TWS test, but executable in this container):
+    """End-to-end timer-based session close on the GroupState API:
     batch 1 sessions close in-batch (gap rule) or by event-time TIMEOUT
     once batch 2's far-future event advances the watermark."""
     import datetime as dt
@@ -1677,8 +1599,11 @@ def test_replay_to_memory_carries_state_in_batch_order(
     """Two one-file micro-batches (a Spark frame, then a pyarrow table)
     fold in batch order with state carried across them; the memory table
     stays readable after the staging directory is removed, and a failing
-    ``build`` or a misplaced path input leaves nothing behind."""
+    ``build`` or a misplaced path input leaves nothing behind.  The fold's
+    state is a ``Decimal``, which the state codec must carry across the
+    batches (JSON cannot encode one)."""
     import tempfile
+    from decimal import Decimal
 
     import pyarrow as pa
 
@@ -1687,7 +1612,8 @@ def test_replay_to_memory_carries_state_in_batch_order(
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     schema = "k bigint, x bigint"
-    digits = folds.CustomFold(step=lambda acc, x: acc * 10 + x, init=0)
+    digits = folds.CustomFold(step=lambda acc, x: acc * 10 + x,
+                              init=Decimal(0), extract=int)
     first = spark.createDataFrame([(1, 1), (2, 5)], schema)
     second = pa.table({"k": pa.array([1, 2], pa.int64()),
                        "x": pa.array([3, 6], pa.int64())})
@@ -1716,6 +1642,30 @@ def test_replay_to_memory_carries_state_in_batch_order(
         replay_to_memory(spark, [[first], [late]], schema, boom,
                          "replay_late_q", "update")
     assert os.listdir(tmp_path) == []
+
+
+def test_per_key_twins_share_one_group_state_loop():
+    """The module calls ``applyInPandasWithState`` at exactly two sites,
+    the per-key runtime and ``sessionize_stateful`` (the one event-time
+    timeout user), and never ``transformWithStateInPandas``: a new twin
+    that copies the GroupState loop fails here."""
+    import ast
+    import inspect
+
+    from map_reduce_folds_spark import streaming
+
+    def stateful_calls(node):
+        return [n.func.attr for n in ast.walk(node)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("applyInPandasWithState",
+                                    "transformWithStateInPandas")]
+
+    tree = ast.parse(inspect.getsource(streaming))
+    assert len(stateful_calls(tree)) == 2
+    sites = {fn.name: stateful_calls(fn) for fn in tree.body
+             if isinstance(fn, ast.FunctionDef) and stateful_calls(fn)}
+    assert sites == {"_keyed_fold": ["applyInPandasWithState"],
+                     "sessionize_stateful": ["applyInPandasWithState"]}
 
 
 def test_run_to_memory_raises_on_timeout(spark, tmp_path):
