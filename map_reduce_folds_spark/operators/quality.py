@@ -778,9 +778,8 @@ def nb_fit(
     counts (≤ B·K rows, lazily localCheckpoint'd so the corpus explode
     never re-evaluates through the model's lineage) and ``class_info =
     (cls, tot, dc, dt)`` class totals/priors.  Fit once, score many:
-    :func:`nb_score` applies the model to any relation — including each
-    micro-batch of a stream (``streaming.stream_nb_score``), where the
-    bounded model is exactly what survives a broadcast."""
+    :func:`nb_score` applies the model to any relation; the model is
+    bounded, so it is exactly what survives a broadcast."""
     from map_reduce_folds_spark.operators.text import hash60, tokenize
 
     B = int(n_buckets)

@@ -89,23 +89,6 @@ def hash_split_sql(id_expr: str, weights: Mapping[str, float] | None = None,
     return f"(CASE {arms} END)"
 
 
-def split_part(
-    df: DataFrame,
-    id_col: str,
-    part: str,
-    weights: Mapping[str, float] | None = None,
-    salt: str = "split",
-) -> DataFrame:
-    """Filter to one split — the scan-time form (the CASE never
-    materializes; the predicate pushes into the scan)."""
-    weights = weights or {"train": 0.98, "val": 0.01, "test": 0.01}
-    b = _bucket(id_col, salt)
-    for name, lo, hi in _thresholds(weights):
-        if name == part:
-            return df.filter((b >= lo) & (b < hi))
-    raise KeyError(f"unknown split {part!r}; have {list(weights)}")
-
-
 def mix_sources(
     df: DataFrame,
     source_col: str,

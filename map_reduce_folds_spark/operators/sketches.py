@@ -652,23 +652,6 @@ def hll_sliding_estimate(
     bucket = ((eus - eus % F.lit(bucket_us)) / F.lit(bucket_us)) \
         .cast("bigint")
     sk = hll_sketch(df.withColumn("__bkt", bucket), item, ["__bkt"], p=p)
-    return hll_registers_sliding_estimate(sk, bucket_us, k, p=p)
-
-
-def hll_registers_sliding_estimate(
-    sk: DataFrame,
-    bucket_us: int,
-    k: int,
-    p: int = 12,
-) -> DataFrame:
-    """The merge half of :func:`hll_sliding_estimate`, factored so a
-    PERSISTED register relation can feed it — e.g. the append-only
-    register store a streaming foreachBatch sink maintains
-    (``streaming.stream_hll_sliding``).  Input: ``(__bkt, reg, rank)``
-    rows (duplicates fine — register max is monotone, so stray
-    lower-rank rows are absorbed by the merge).  Output:
-    ``(win_start_us, nd_est)``, identical to the batch operator on the
-    same events."""
     # bucket b serves windows starting at b-k+1 .. b
     per_win = sk.select(
         F.explode(F.sequence(F.col("__bkt") - (k - 1),

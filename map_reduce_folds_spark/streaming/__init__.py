@@ -22,21 +22,22 @@ as a file stream in pinned order and drains a stream built over it into
 a memory table.  The stateful stream twins run on it.
 
 ``_keyed_fold`` is the one GroupState runtime of the per-key twins
-(``stateful_fold``, ``stream_funnel_depth``, ``stream_ewma``,
-``stream_holt``, ``stream_scd2``, ``stream_cusum``, ``stream_holtwinters``,
-``stream_confseq``): each supplies a projection, an initial state and an
-``advance(state, rows) -> (state, out_rows)`` step; the runtime owns the
-key DDL, the gathering of a key's micro-batch rows, the state codec and
-the emitted frames.  The codec is base64 of a pickle, so a state may hold
-timestamps, decimals and lists, which JSON cannot.  ``sessionize_stateful``
-keeps its own loop: it is the only event-time-timeout user.
+(``stateful_fold``, ``stream_holt``, ``stream_scd2``, ``stream_cusum``,
+``stream_holtwinters``, ``stream_confseq``): each supplies a projection,
+an initial state and an ``advance(state, rows) -> (state, out_rows)``
+step; the runtime owns the key DDL, the gathering of a key's micro-batch
+rows, the state codec and the emitted frames.  The codec is base64 of a
+pickle, so a state may hold timestamps, decimals and lists, which JSON
+cannot.  ``sessionize_stateful`` keeps its own loop: it is the only
+event-time-timeout user.
 
 In-batch order: the event-ordered twins sort a key's micro-batch rows by
 (event time, tiebreak) before stepping, so a time-ordered replay equals
 the batch operator.  Across micro-batches the state is folded in arrival
 order: a late event that arrives in a later micro-batch than its
-successors folds into the state as of its arrival batch (the same
-first-writer-wins caveat as ``incremental_dedup``).
+successors folds into the state as it stands at its arrival batch; the
+state its successors built is never re-folded in event-time order (first
+writer wins).
 """
 
 from __future__ import annotations
@@ -48,13 +49,11 @@ import shutil
 import tempfile
 import threading
 import time
-from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_folds_spark.core import FoldReduce, MapReduce, _key_fields
-from map_reduce_folds_spark.folds import Fold
 
 
 def read_parquet_stream(
@@ -111,23 +110,6 @@ def stream_mapreduce(
 
     aggs = [f.spark_agg().alias(name) for name, f in mr.reduce.folds.items()]
     return kv.groupBy(*group_cols).agg(*aggs)
-
-
-def session_windows(
-    stream: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    gap: str,
-    aggs: Mapping[str, Fold],
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session-window aggregation (dynamic gap-based windows) — the
-    streaming analog of operators/windows.sessionize."""
-    w = stream.withWatermark(ts_col, watermark)
-    agg_exprs = [f.spark_agg().alias(name) for name, f in aggs.items()]
-    return w.groupBy(F.session_window(F.col(ts_col), gap).alias("session"), *keys).agg(
-        *agg_exprs
-    )
 
 
 # replayed input rows per stateful-shuffle partition (reasoning in
@@ -196,10 +178,11 @@ _PIN_LOCK = threading.Lock()
 def run_to_memory(stream_df: DataFrame, name: str, timeout_s: float = 60,
                   output_mode: str = "complete",
                   state_partitions: int | None = None) -> DataFrame:
-    """Drain a (file-replay) stream into an in-memory table and return it —
-    test/debug sink only.  A stream still running after ``timeout_s``
-    seconds is stopped and raises ``TimeoutError``: the sink would hold
-    only part of the rows.
+    """Drain a (file-replay) stream into an in-memory table and return it:
+    the sink of every registered stream query (through
+    :func:`replay_to_memory`) and of the streaming tests.  A stream still
+    running after ``timeout_s`` seconds is stopped and raises
+    ``TimeoutError``: the sink would hold only part of the rows.
 
     ``state_partitions`` (e.g. from :func:`adaptive_state_partitions`)
     temporarily pins ``spark.sql.shuffle.partitions`` for the query's
@@ -374,7 +357,7 @@ def stateful_fold(
     out_col: str = "result",
     out_dtype: str = "double",
     output_mode: str = "update",
-) -> "StreamingFoldQuery":
+) -> DataFrame:
     """Arbitrary custom fold as an incrementally-maintained streaming state
     (``applyInPandasWithState``).
 
@@ -479,107 +462,6 @@ def sessionize_stateful(
     )
 
 
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream equi-join with a bounded time relation: right events
-    within [left_time - max_delay, left_time].
-
-    Both sides carry watermarks and the join condition bounds event-time
-    distance — together these let Spark expire join state (without them a
-    stream-stream join buffers forever).  State size ≈ rate × (watermark +
-    max_delay) per side: THE quantity to watch at production ingest rates.
-    """
-    lw = left.withWatermark(left_time, watermark)
-    rw = right.withWatermark(right_time, watermark)
-    cond = (
-        (lw[on] == rw[on])
-        & (rw[right_time] >= F.expr(f"{left_time} - INTERVAL {max_delay}"))
-        & (rw[right_time] <= lw[left_time])
-    )
-    return lw.join(rw, cond, how)
-
-
-def write_foreach_batch(
-    stream_df: DataFrame,
-    batch_fn,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """foreachBatch sink: apply an arbitrary BATCH writer to each
-    micro-batch (the idiomatic exactly-once-ish bridge to any batch sink —
-    upserts, bucketed tables, multiple destinations).  ``batch_fn(df,
-    batch_id)`` runs on the driver with a normal batch DataFrame."""
-    w = (
-        stream_df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def stream_dedup(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup on ``keys``.
-
-    With ``ts_col``: dropDuplicatesWithinWatermark — state for a key is
-    dropped once the watermark passes it (bounded state, the production
-    form for at-least-once sources that may redeliver).  Without: global
-    dropDuplicates (state grows with distinct keys — bounded domains only).
-    """
-    if ts_col is not None:
-        return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-    return stream.dropDuplicates(keys)
-
-
-def incremental_dedup(
-    stream: DataFrame,
-    digest_cols: list[str],
-    seen_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Delta-style incremental ingest dedup: each micro-batch anti-joins
-    against the PERSISTED digest table of everything already accepted, then
-    appends the survivors' digests back — so duplicates are dropped across
-    batches, restarts, AND separate runs (unlike dropDuplicates state,
-    which lives only inside one query's checkpoint).
-
-    Batch-local duplicates are collapsed first (keep-first by digest), so
-    the digest table stays unique.  At cluster scale ``seen_dir`` would be
-    a bucketed/Delta table with the anti join co-located on the digest; a
-    bloom-filter sidecar cuts the probe cost — the parquet form here
-    exercises the identical plan.
-    """
-
-    def process(df: DataFrame, batch_id: int):
-        spark = df.sparkSession
-        fresh = df.dropDuplicates(digest_cols)
-        try:
-            seen = spark.read.parquet(seen_dir)
-            new = fresh.join(seen, digest_cols, "left_anti")
-        except Exception:  # first batch: no digest table yet
-            new = fresh
-        new.persist()
-        new.write.mode("append").parquet(out_dir)
-        new.select(*digest_cols).write.mode("append").parquet(seen_dir)
-        new.unpersist()
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
 def _fold_session_times(times, state, gap_us):
     """Pure session state machine of :func:`sessionize_stateful`, unit
     tested without a stream.
@@ -600,179 +482,6 @@ def _fold_session_times(times, state, gap_us):
             closed.append((start, end, n))
             start, end, n = t, t, 1
     return closed, (start, end, n)
-
-
-def stream_cms_cells(
-    stream: DataFrame,
-    item_col: str,
-    d: int = 4,
-    w: int = 1024,
-) -> DataFrame:
-    """Streaming count-min sketch: maintain the d×w cell counts of
-    ``operators/sketches.cms_cells`` incrementally over an unbounded
-    stream (complete/update output modes).
-
-    Cell counts are ADDITIVE (the sketch monoid), so the batch groupBy
-    IS the streaming aggregation — no custom state machine: state is the
-    ≤ d·w non-empty cells regardless of key cardinality, which is the
-    whole point on a stream whose distinct-key space would make an exact
-    per-key count's state unbounded.  Downstream, point-estimate hot keys
-    with ``sketches.cms_estimate`` against any snapshot of the cells —
-    batch-vs-stream cell equality is property-tested
-    (tests/test_streaming.py)."""
-    from map_reduce_folds_spark.operators.sketches import _cms_rc
-
-    e = stream.select(
-        F.explode(_cms_rc(F.col(item_col), d, w)).alias("rc")
-    ).select(F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
-    return e.groupBy("r", "c").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def stream_hll_registers(
-    stream: DataFrame,
-    item_col,
-    p: int = 12,
-) -> DataFrame:
-    """Streaming HyperLogLog: maintain the ``(reg, rank)`` register
-    relation of ``operators/sketches.hll_sketch`` incrementally over an
-    unbounded stream (complete/update output modes).
-
-    Register max-rank is MONOTONE (the HLL merge is MAX), so — exactly
-    like :func:`stream_cms_cells` — the batch groupBy-max IS the
-    streaming aggregation: state is ≤ 2^p register rows no matter how
-    many distinct items flow past, which is the point when an exact
-    streaming count-distinct's state would be unbounded.  Estimate any
-    snapshot with ``sketches.hll_estimate`` (one aggregate over the
-    register rows); batch-vs-stream register equality is property-tested
-    (tests/test_streaming.py)."""
-    from map_reduce_folds_spark.operators.sketches import hll_register
-
-    reg, rank = hll_register(item_col, p)
-    return stream.select(reg, rank).groupBy("reg").agg(
-        F.max("rank").alias("rank"))
-
-
-def stream_hll_windowed(
-    stream: DataFrame,
-    ts_col: str,
-    item_col,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    p: int = 12,
-) -> DataFrame:
-    """WINDOWED streaming HyperLogLog: per event-time tumbling window,
-    maintain the ``(window, reg, rank)`` register relation — the
-    streaming twin of per-bucket :func:`sketches.hll_sketch` (and the
-    building block :func:`sketches.hll_sliding_estimate` merges for
-    sliding spans).  The exact streaming distinct-count's state grows
-    with item cardinality; the register relation is capped at
-    2^p rows per window, and the watermark lets Spark DROP closed
-    windows' state — bounded memory over an unbounded stream.
-
-    Register max is monotone, so the built-in windowed groupBy-max IS
-    the incremental aggregation (no custom state handler).  Estimate
-    with ``sketches.hll_estimate`` grouped by the window column;
-    batch-vs-stream register equality is property-tested
-    (tests/test_streaming.py)."""
-    from map_reduce_folds_spark.operators.sketches import hll_register
-
-    reg, rank = hll_register(item_col, p)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .select(F.window(F.col(ts_col), window).alias("win"), reg, rank)
-        .groupBy("win", "reg").agg(F.max("rank").alias("rank"))
-    )
-
-
-def stream_funnel_depth(
-    stream: DataFrame,
-    user_col: str,
-    ts_col: str,
-    event_col: str,
-    steps: list[str],
-    within: int | None = None,
-    tiebreak_col: str | None = None,
-    output_mode: str = "update",
-) -> DataFrame:
-    """Streaming conversion funnel: incrementally-maintained per-user
-    greedy in-order depth (the streaming twin of
-    ``windows.funnel_depth``, same strict-order semantics and the same
-    optional ``within=`` µs horizon).
-
-    State per user is TWO integers — (depth, last-matched-step time) —
-    regardless of how many events the user ever produces: the greedy
-    fold is associative-enough to run incrementally because a prefix's
-    result is exactly the fold state.  Non-step events are filtered
-    BEFORE the stateful operator (pushes into the source scan), the
-    steps-only discipline of the batch twin.
-
-    Events are folded in EVENT-TIME order within each micro-batch (the
-    batch's rows are sorted before stepping); late events that arrive in
-    a later micro-batch than a successor step are ignored by the greedy
-    state — the documented arrival-order caveat shared by
-    ``incremental_dedup`` (exactly-once per key, first-writer-wins).
-    For time-ordered replay (the property tests' shape) the result
-    equals the batch operator on the union of all batches."""
-    if len(set(steps)) != len(steps):
-        raise ValueError(f"funnel steps must be distinct, got {steps}")
-    horizon = None if within is None else int(within)
-
-    # pre-map events to STEP INDICES (the batch twin's discipline) so the
-    # in-batch sort key is (ts, tiebreak, index) — same-timestamp events
-    # fold in the same order as batch funnel_depth's struct sort, never
-    # by event-name lexicography
-    idx_col = F.lit(0)
-    for i_, step_ in reversed(list(enumerate(steps))):
-        idx_col = F.when(F.col(event_col) == step_,
-                         F.lit(i_ + 1)).otherwise(idx_col)
-    src = _event_rows(stream.where(F.col(event_col).isin(steps)), user_col,
-                      ts_col, tiebreak_col, idx_col.cast("int"))
-
-    def advance(st, rows):
-        depth, last_t = st
-        for t, _b, i in sorted(rows):
-            if i == depth + 1 and (
-                horizon is None or depth == 0 or t - last_t <= horizon
-            ):
-                depth, last_t = depth + 1, int(t)
-        return (depth, last_t), [(depth,)]
-
-    return _keyed_fold(src, [user_col], _EVENT_COLS, (0, 0), advance,
-                       {"depth": "int"}, output_mode)
-
-
-def stream_ewma(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    tiebreak_col: str | None = None,
-    alpha_halves: int = 1,
-    output_mode: str = "update",
-) -> DataFrame:
-    """Streaming per-key exponential smoothing: the incremental twin of
-    ``windows.ewma_last`` — state is TWO scalars per key (count,
-    current ewma) at any event volume, the smallest possible stateful
-    footprint.  Each micro-batch folds its rows in (ts, tiebreak)
-    event-time order through the same α = 1/2^k power-of-two-exact
-    recursion, so a time-ordered replay is BITWISE equal to the batch
-    operator (parity-tested).  Cross-batch arrival order as in the module
-    docstring."""
-    if alpha_halves < 1:
-        raise ValueError(f"alpha_halves must be >= 1, got {alpha_halves}")
-    alpha = 1.0 / (1 << alpha_halves)
-
-    def advance(st, rows):
-        n, e = st
-        for _t, _b, x in sorted(rows):
-            e = float(x) if n == 0 else alpha * float(x) + (1 - alpha) * e
-            n += 1
-        return (n, e), [(n, e)]
-
-    src = _event_rows(stream, key, ts_col, tiebreak_col,
-                      F.col(value_col).cast("double"))
-    return _keyed_fold(src, [key], _EVENT_COLS, (0, 0.0), advance,
-                       {"n_events": "bigint", "ewma": "double"}, output_mode)
 
 
 def stream_holt(
@@ -880,71 +589,6 @@ def stream_scd2(
         output_mode)
 
 
-def stream_hll_sliding(
-    stream: DataFrame,
-    ts_col: str,
-    item_col,
-    bucket_us: int,
-    store_dir: str,
-    checkpoint_dir: str,
-    p: int = 12,
-):
-    """Sliding-window distinct counts over an unbounded stream, the
-    sketch-reuse way: each micro-batch folds its events into per-bucket
-    HLL registers (batch-local groupBy-max — ≤ #buckets × 2^p rows) and
-    APPENDS them to a persistent register store.  Register max is
-    monotone, so the append-only store needs no read-modify-write, no
-    dedup, and is idempotent under micro-batch replay: stray lower-rank
-    rows from a re-delivered batch are absorbed by the max at read time.
-    Any consumer turns the store into sliding estimates with
-    :func:`hll_sliding_snapshot` — merging k bucket sketches per window,
-    never rescanning events (the batch twin is
-    ``sketches.hll_sliding_estimate``; equality is tested).
-
-    State: the streaming query itself is STATELESS (the store is the
-    state, bounded by buckets × 2^p); at cluster scale the store would
-    be a Delta/Iceberg table compacted periodically with the same
-    groupBy-max."""
-    from map_reduce_folds_spark.operators.sketches import hll_register
-    from map_reduce_folds_spark.timeutil import epoch_us
-
-    reg, rank = hll_register(item_col, p)
-    eus = epoch_us(F.col(ts_col))
-    bucket = ((eus - eus % F.lit(int(bucket_us))) / F.lit(int(bucket_us))) \
-        .cast("bigint")
-
-    def _append(df: DataFrame, batch_id: int):
-        (
-            df.select(bucket.alias("__bkt"), reg, rank)
-            .groupBy("__bkt", "reg").agg(F.max("rank").alias("rank"))
-            .write.mode("append").parquet(store_dir)
-        )
-
-    return write_foreach_batch(stream, _append, checkpoint_dir)
-
-
-def hll_sliding_snapshot(
-    spark,
-    store_dir: str,
-    bucket_us: int,
-    k: int,
-    p: int = 12,
-) -> DataFrame:
-    """Sliding distinct-count estimates from a :func:`stream_hll_sliding`
-    register store: compact the appended register rows (groupBy-max)
-    and merge each window's k bucket sketches
-    (``sketches.hll_registers_sliding_estimate``).  Output
-    ``(win_start_us, nd_est)`` — bitwise-equal to the batch
-    ``hll_sliding_estimate`` over the same events."""
-    from map_reduce_folds_spark.operators.sketches import (
-        hll_registers_sliding_estimate,
-    )
-
-    sk = spark.read.parquet(store_dir) \
-        .groupBy("__bkt", "reg").agg(F.max("rank").alias("rank"))
-    return hll_registers_sliding_estimate(sk, bucket_us, k, p=p)
-
-
 def stream_cusum(
     stream: DataFrame,
     key: str,
@@ -985,93 +629,6 @@ def stream_cusum(
         src, [key], _EVENT_COLS, (0, 0, 0, 0), advance,
         {"n_events": "bigint", "final_cusum": "bigint", "max_cusum": "bigint",
          "n_alarms": "bigint"}, output_mode)
-
-
-def stream_nb_score(
-    stream: DataFrame,
-    model,
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 4096,
-    alpha: float = 1.0,
-):
-    """Model-scoring stream: classify each arriving document batch under
-    a PRE-FITTED Naive Bayes model (``quality.nb_fit``) and append
-    ``(id, pred, score)`` to ``out_dir`` — the trained quality/domain
-    gate applied at ingest time instead of as a later batch pass.
-
-    Scoring is per-document (no cross-batch state), so per-micro-batch
-    application of the batch operator is EXACT, not an approximation:
-    stream output over any batch split equals the batch scores row for
-    row (pinned in tests).  The model relations are bounded (≤ B·K +
-    K rows, ``nb_fit``), i.e. exactly the shape that broadcasts to
-    every executor on a real cluster; the corpus never re-shuffles into
-    model lineage."""
-    from map_reduce_folds_spark.operators.quality import nb_score
-
-    def process(df: DataFrame, batch_id: int):
-        nb_score(df, model, id_col, text_col, n_buckets, alpha) \
-            .write.mode("append").parquet(out_dir)
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
-def stream_kmeans_assign(
-    stream: DataFrame,
-    centroids: "list[list[float]]",
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
-    """Cluster-assignment stream under a PRE-FITTED k-means model
-    (``similarity.kmeans_fit_distributed``): each arriving vector batch
-    is assigned to its nearest centroid and ``(id, cid)`` appends to
-    ``out_dir`` — routing fresh embeddings into an existing IVF/cluster
-    layout at ingest time.  Per-vector assignment has no cross-batch
-    state, so per-micro-batch application of the batch rule is EXACT
-    (the batch operator ``similarity.kmeans_assign`` applied verbatim
-    per micro-batch); the model is a K×dim literal table — nothing
-    shuffles."""
-    from ..operators.similarity import kmeans_assign
-
-    def process(df: DataFrame, batch_id: int):
-        kmeans_assign(df, centroids, id_col, vec_col) \
-            .write.mode("append").parquet(out_dir)
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
-def stream_pca_score(
-    stream: DataFrame,
-    components: "list[list[float]]",
-    means: "list[float]",
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """PCA outlier-scoring stream under a PRE-FITTED model
-    (``similarity.pca_power_fit`` + ``pca_means``): each arriving
-    vector batch is scored with its residual energy outside the fitted
-    subspace and ``(id, resid)`` appends to ``out_dir`` — the
-    off-manifold anomaly gate applied AT INGEST, next to
-    ``stream_kmeans_assign`` and ``stream_nb_score`` in the
-    trained-model-on-a-stream family.  Per-vector scoring has no
-    cross-batch state, so per-micro-batch application of the batch
-    operator (``similarity.pca_residual_scores``, applied verbatim) is
-    EXACT; the model is a K×dim + dim literal set — nothing
-    shuffles."""
-    from ..operators.similarity import pca_residual_scores
-
-    def process(df: DataFrame, batch_id: int):
-        pca_residual_scores(df, components, means, id_col, vec_col) \
-            .write.mode("append").parquet(out_dir)
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
 
 
 def stream_holtwinters(
@@ -1129,101 +686,6 @@ def stream_holtwinters(
         src, [key], _EVENT_COLS, (0, 0.0, 0.0, [0.0] * m), advance,
         {"n_events": "bigint", "level": "double", "trend": "double",
          "season_next": "double", "forecast": "double"}, output_mode)
-
-
-def stream_bootstrap_moments(
-    stream: DataFrame,
-    value_col: str,
-    id_col: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    keys=(),
-    n_boot: int = 200,
-    salt: str = "boot",
-):
-    """INCREMENTAL-INFERENCE stream: append each arriving micro-batch's
-    Poisson-bootstrap MOMENT relation
-    (``sampling.poisson_bootstrap_moments`` — the additive-monoid
-    (keys, replicate) weighted sums, base moments on the b = −1
-    sentinel) to ``out_dir``.  Because replicate weights are a pure
-    function of the row id and integer sums are a monoid, finalizing
-    the accumulated directory —
-    ``poisson_bootstrap_ci_from_moments(poisson_bootstrap_merge(
-    spark.read.parquet(out_dir)))`` — yields BITWISE the whole-corpus
-    CI at any point in the stream's life: confidence intervals over an
-    ingest stream without ever rescanning history (the digest-table
-    ingest pattern applied to statistical inference)."""
-    from map_reduce_folds_spark.operators.sampling import (
-        poisson_bootstrap_moments,
-    )
-
-    def process(df: DataFrame, batch_id: int):
-        poisson_bootstrap_moments(
-            df, value_col, id_col, keys=keys, n_boot=n_boot, salt=salt,
-        ).write.mode("append").parquet(out_dir)
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
-def stream_conformal_flag(
-    stream: DataFrame,
-    threshold_q: "int | None",
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    score_col: str = "qr",
-):
-    """CALIBRATED-GATE stream: flag each arriving scored batch against a
-    PRE-FITTED split-conformal threshold (the ``threshold_q`` order
-    statistic from the batch calibration — see
-    ``queries.llm.conformal_novelty_gate``) and append
-    ``(id, score, flagged)`` to ``out_dir``.  Per-row thresholding has
-    no cross-batch state, so micro-batch application of the batch rule
-    is EXACT; ``threshold_q=None`` (k > m at calibration: τ = ∞) flags
-    nothing — the conservative conformal convention, preserved here by
-    an explicit False rather than a NULL comparison."""
-    def process(df: DataFrame, batch_id: int):
-        flagged = (F.lit(False) if threshold_q is None
-                   else F.col(score_col) > F.lit(int(threshold_q)))
-        (df.select(id_col, score_col, flagged.alias("flagged"))
-         .write.mode("append").parquet(out_dir))
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
-def stream_daily_counts(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    keys=(),
-):
-    """TREND-MONITOR ingest stream: append each arriving micro-batch's
-    per-(keys, day) count relation to ``out_dir``.  Counts are an
-    additive monoid, so finalizing the accumulated directory — re-sum
-    per (keys, day), then ``evalstats.mann_kendall(keys=)`` /
-    ``theil_sen`` / the BH-FDR composition — yields BITWISE the batch
-    drift screen at any point in the stream's life (the fifth
-    mergeable-relation-on-a-stream twin: digest/HLL/moments/bootstrap,
-    now daily counts).  The per-batch relation is bounded by
-    keys × days touched, not batch rows."""
-    kcols = list(keys)
-
-    def process(df: DataFrame, batch_id: int):
-        (df.groupBy(*kcols, F.to_date(ts_col).alias("d"))
-         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-         .write.mode("append").parquet(out_dir))
-
-    return write_foreach_batch(stream, process, checkpoint_dir)
-
-
-def daily_counts_finalize(spark, out_dir: str, keys=()):
-    """Merge an accumulated ``stream_daily_counts`` directory back to
-    the exact whole-history per-(keys, day) counts (pure additive
-    union — re-sum)."""
-    df = spark.read.parquet(out_dir)
-    return (df.groupBy(*list(keys), "d")
-            .agg(F.sum("n_events").cast("bigint").alias("n_events")))
 
 
 def stream_confseq(

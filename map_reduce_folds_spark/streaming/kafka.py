@@ -14,7 +14,7 @@ north-star production surface.  The design splits each wrapper into
   identical in batch and streaming (tests/test_streaming.py).
 
 Every downstream operator (``stream_mapreduce``, ``sessionize_stateful``,
-``stream_dedup`` …) consumes the parsed frame, so the file-replay source
+``stateful_fold`` …) consumes the parsed frame, so the file-replay source
 used in tests (``read_parquet_stream``) and a Kafka topic drive literally
 the same plans — swapping the source is a one-call change.
 
