@@ -626,8 +626,9 @@ def concat(result: DataFrame, folds: Mapping[str, Fold]) -> DataFrame:
 
 def shared_scan(df: DataFrame, *pipelines: MapReduce) -> list[DataFrame]:
     """Applicative FOLD composition (``(,) <$> sumsF <*> meansF``,
-    ListStats.hs:36): N pipelines over one cached scan.  The reference
-    guarantees one pass; Spark may rescan, so we cache — a perf property,
-    not a semantic one (SURVEY §3 entry 3)."""
-    df = df.cache()
+    ListStats.hs:36): N pipelines over one input frame.  The reference
+    guarantees one pass; here each pipeline plans its own scan of ``df``
+    — a perf property, not a semantic one (SURVEY §3 entry 3).  No cache
+    is taken: a cache-manager entry would redirect every other reader of
+    the same frame to an ``InMemoryRelation`` until it is dropped."""
     return [p.run(df) for p in pipelines]

@@ -57,73 +57,6 @@ def materialize_stage(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
-def shingle_sets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    token_pattern: str | None = None,
-    materialize_path: str | None = None,
-) -> DataFrame:
-    """The SHARED gram-index stage: ``(id, sh array<bigint>)`` distinct
-    shingle sets, computable once and fed to every set-similarity
-    consumer via their ``sets=`` parameter (:func:`ngram_jaccard_pairs`,
-    :func:`shingle_containment_pairs`,
-    :func:`ngram_jaccard_pairs_prefix`).
-
-    A production dedup pass runs the whole family over the SAME corpus
-    (Jaccard for symmetric near-dups, containment for quote/subset
-    pairs, the prefix-filtered form at high thresholds); without this
-    stage each operator re-tokenizes, re-shingles, and re-hashes the
-    full text — at 100 TB that is the dominant scan repeated k times.
-    ``materialize_path`` writes the sets once as a parquet table
-    (:func:`materialize_stage`) so every consumer starts from a skinny
-    (id, array<bigint>) scan instead of the raw corpus.  Measured at the
-    10× corpus (sf1.0, jaccard+containment+prefix trio, best-of-2):
-    26.3 s re-derived vs 11.2 s shared INCLUDING the stage write —
-    2.3×; the text scan was the family's dominant repeated cost.
-
-    The (n, token_pattern) parameters are stamped into the ``sh``
-    column's metadata (they survive Spark parquet round-trips), and
-    every consumer validates them against its own arguments — mixing a
-    3-gram index into a 5-gram query fails loudly, not silently."""
-    from map_reduce_folds_spark.operators.text import (
-        distinct_shingle_hashes,
-    )
-
-    meta = {"shingle_n": n, "token_pattern": token_pattern or ""}
-    out = docs.select(
-        F.col(id_col),
-        distinct_shingle_hashes(text_col, n, token_pattern=token_pattern)
-        .alias("sh", metadata=meta),
-    ).filter(F.size("sh") > 0)
-    if materialize_path is not None:
-        return materialize_stage(out, materialize_path)
-    return out
-
-
-def _check_sets(sets: DataFrame, id_col: str, n: int,
-                token_pattern: str | None) -> None:
-    """Loud mismatch guard for a caller-supplied :func:`shingle_sets`
-    frame: columns must be (id_col, sh) and any stamped metadata must
-    match the consuming operator's (n, token_pattern)."""
-    if set(sets.columns) != {id_col, "sh"}:
-        raise ValueError(
-            f"sets= must be a shingle_sets frame with columns "
-            f"({id_col}, sh); got {sets.columns}")
-    meta = next((f.metadata for f in sets.schema.fields
-                 if f.name == "sh"), None) or {}
-    if meta.get("shingle_n") is not None:
-        want = {"shingle_n": n, "token_pattern": token_pattern or ""}
-        got = {"shingle_n": meta.get("shingle_n"),
-               "token_pattern": meta.get("token_pattern", "")}
-        if got != want:
-            raise ValueError(
-                f"sets= was built with {got} but this operator was "
-                f"called with {want} — rebuild the shared stage with "
-                "matching parameters (shingle_sets)")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -392,7 +325,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
     token_pattern: str | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """ALL pairs with Jaccard ≥ threshold, exactly — via the inverted index:
     explode shingles, self-join on shingle hash, count common shingles per
@@ -408,21 +340,12 @@ def ngram_jaccard_pairs(
     identical to the uncapped computation — the only semantic change is
     recall: a pair whose overlap consists ENTIRELY of hot shingles is
     missed (such pairs share only boilerplate, which is exactly what the
-    cap is meant to discount).
-
-    ``sets=`` accepts a precomputed :func:`shingle_sets` frame (built
-    once, ideally materialized) so a multi-operator dedup pass pays the
-    tokenize+shingle+hash scan exactly once."""
-    if sets is not None:
-        _check_sets(sets, id_col, n, token_pattern)
-        sh = sets
-    else:
-        sh = docs.select(
-            F.col(id_col),
-            distinct_shingle_hashes(text_col, n,
-                                    token_pattern=token_pattern)
-            .alias("sh"),
-        ).filter(F.size("sh") > 0)
+    cap is meant to discount)."""
+    sh = docs.select(
+        F.col(id_col),
+        distinct_shingle_hashes(text_col, n, token_pattern=token_pattern)
+        .alias("sh"),
+    ).filter(F.size("sh") > 0)
     sizes = sh.select(F.col(id_col), F.size("sh").alias("sz"))
     inv = sh.select(F.col(id_col), F.explode("sh").alias("h"))
 
@@ -717,7 +640,6 @@ def shingle_containment_pairs(
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
     token_pattern: str | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """ALL ordered-by-id pairs where either document's shingle set is
     ``threshold``-contained in the union — ASYMMETRIC near-duplication:
@@ -734,23 +656,12 @@ def shingle_containment_pairs(
     (surviving pairs re-score against full sets, so emitted values are
     exact).  Output: ``(id_a, id_b, common, sz_a, sz_b, containment)``
     with containment = max of the two directions (= common / min size),
-    one integer division — bitwise portable, no rounding needed.
-    ``sets=`` accepts a precomputed :func:`shingle_sets` frame (the
-    shared gram-index stage)."""
-    from map_reduce_folds_spark.operators.text import (
-        distinct_shingle_hashes,
-    )
-
-    if sets is not None:
-        _check_sets(sets, id_col, n, token_pattern)
-        sh = sets
-    else:
-        sh = docs.select(
-            F.col(id_col),
-            distinct_shingle_hashes(text_col, n,
-                                    token_pattern=token_pattern)
-            .alias("sh"),
-        ).filter(F.size("sh") > 0)
+    one integer division — bitwise portable, no rounding needed."""
+    sh = docs.select(
+        F.col(id_col),
+        distinct_shingle_hashes(text_col, n, token_pattern=token_pattern)
+        .alias("sh"),
+    ).filter(F.size("sh") > 0)
     sizes = sh.select(F.col(id_col), F.size("sh").alias("sz"))
     inv = sh.select(F.col(id_col), F.explode("sh").alias("h"))
     if max_shingle_df is not None:
@@ -1922,7 +1833,6 @@ def ngram_jaccard_pairs_prefix(
     n: int = 3,
     threshold: float = 0.5,
     token_pattern: str | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """IDENTICAL output to :func:`ngram_jaccard_pairs` (no df cap) via
     PREFIX FILTERING (Bayardo et al. 2007 / PPJoin's candidate rule):
@@ -1966,21 +1876,12 @@ def ngram_jaccard_pairs_prefix(
     grow exactly 10× per decade (counted: 134k/1.34M/13.4M raw
     candidate rows, 256/2 560/25 600 output pairs at 1×/10×/100×,
     SCALE_BENCH_r12) — the operator is linear in the corpus, and the
-    per-10× wall ratio dropped 6.77× → 4.56×.
-
-    ``sets=`` accepts a precomputed :func:`shingle_sets` frame (the
-    shared gram-index stage; supply it MATERIALIZED — this operator
-    consumes it on three paths)."""
-    if sets is not None:
-        _check_sets(sets, id_col, n, token_pattern)
-        sh = sets.localCheckpoint(eager=False)
-    else:
-        sh = docs.select(
-            F.col(id_col),
-            distinct_shingle_hashes(text_col, n,
-                                    token_pattern=token_pattern)
-            .alias("sh"),
-        ).filter(F.size("sh") > 0).localCheckpoint(eager=False)
+    per-10× wall ratio dropped 6.77× → 4.56×."""
+    sh = docs.select(
+        F.col(id_col),
+        distinct_shingle_hashes(text_col, n, token_pattern=token_pattern)
+        .alias("sh"),
+    ).filter(F.size("sh") > 0).localCheckpoint(eager=False)
     inv = sh.select(F.col(id_col), F.explode("sh").alias("h"))
     df_ = inv.groupBy("h").agg(F.count(F.lit(1)).alias("__df"))
     from pyspark.sql.window import Window

@@ -18,12 +18,12 @@ accumulation-order discipline.
 Scale discipline: rank statistics never compile to a global-ORDER-BY
 window (the single-task shape the ``scale_audit`` fat-sort rule flags).
 Both AUC and Spearman aggregate to the DISTINCT-value relation first,
-then use the monotone-integer-bucket decomposition proven by
-``windows.group_ranksum_hist``: a row's exclusive cumulative = (sum over
-strictly lower buckets, a window over the per-group ≤ ``nbuckets``
-bucket-summary rows) + (a window partitioned by (group, bucket) over
-~n/nbuckets rows).  Every window is partitioned; every join after the
-distinct-value aggregation is against a bucket-summary relation.
+then use the monotone-integer-bucket decomposition of :func:`cum_below`:
+a row's exclusive cumulative = (sum over strictly lower buckets, a
+window over the per-group ≤ ``nbuckets`` bucket-summary rows) + (a
+window partitioned by (group, bucket) over ~n/nbuckets rows).  Every
+window is partitioned; every join after the distinct-value aggregation
+is against a bucket-summary relation.
 
 Reference anchor: the reference engine (map-reduce-folds, Core.hs:96-189)
 has no statistics layer at all; this module extends the fold vocabulary
@@ -49,7 +49,6 @@ __all__ = [
     "spearman_rho",
     "spearman_rho_sql",
     "cohens_kappa",
-    "cohens_kappa_sql",
     "chao1_richness",
     "chao1_richness_sql",
     "two_proportion_ztest",
@@ -88,10 +87,11 @@ def cum_below(
     unique within each group, integer-valued) — without a per-group
     global sort.
 
-    The ``group_ranksum_hist`` decomposition (windows.py): integer
-    bucketing is monotone, so cumulative-below = (strictly lower buckets'
-    totals: a window over the per-group bucket summary, ≤ ``nbuckets``
-    rows per group) + (within-bucket exclusive window, partitioned by
+    Bucket decomposition: integer bucketing is monotone (all of a
+    value's rows land in one bucket, lower buckets hold strictly smaller
+    values), so cumulative-below = (strictly lower buckets' totals: a
+    window over the per-group bucket summary, ≤ ``nbuckets`` rows per
+    group) + (within-bucket exclusive window, partitioned by
     (group, bucket)).  Adds ``below_<c>`` for each value column; all
     arithmetic bigint-exact.  ``keys`` must be non-empty — ungrouped
     callers pass the constant key from :func:`_with_group` (the grouped
@@ -392,46 +392,6 @@ def cohens_kappa(
         / (F.col("n") * F.col("n") - F.col("__pe_n2")).cast("double"),
     )
     return out.select(*(list(keys) or []), kappa.alias("kappa"), "n", "agree")
-
-
-def cohens_kappa_sql(
-    table: str,
-    a_expr: str,
-    b_expr: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB mirror of :func:`cohens_kappa` — same n²-scaled integer
-    identity, same single double division."""
-    kcols = ", ".join(keys)
-    kpref = f"{kcols}, " if keys else ""
-    on = f"USING ({kcols.replace(' ', '')}, l)" if keys else "USING (l)"
-    grp = f"GROUP BY {kcols}" if keys else "GROUP BY ()"
-    return f"""
-    WITH pts AS (
-      SELECT {kpref}{a_expr} AS a, {b_expr} AS b FROM {table}
-    ),
-    conf AS (
-      SELECT {kpref}a, b, COUNT(*) AS c FROM pts GROUP BY {kpref}a, b
-    ),
-    ra AS (SELECT {kpref}a AS l, SUM(c) AS ra FROM conf GROUP BY {kpref}a),
-    rb AS (SELECT {kpref}b AS l, SUM(c) AS rb FROM conf GROUP BY {kpref}b),
-    pe AS (
-      SELECT {kpref}CAST(SUM(ra * rb) AS BIGINT) AS pe_n2
-      FROM ra JOIN rb {on} {grp}
-    ),
-    po AS (
-      SELECT {kpref}CAST(SUM(c) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT) AS agree
-      FROM conf {grp}
-    )
-    SELECT {kpref}
-           CASE WHEN n * n <> pe_n2 THEN
-             CAST(n * agree - pe_n2 AS DOUBLE)
-             / CAST(n * n - pe_n2 AS DOUBLE)
-           END AS kappa,
-           n, agree
-    FROM po {"JOIN pe USING (" + kcols.replace(" ", "") + ")" if keys else "CROSS JOIN pe"}
-    """
 
 
 def chao1_richness(

@@ -5,7 +5,7 @@ the lakehouse-standard layout (one row per asset; bytes inline below the
 parquet row-group threshold, URI reference above it).  All Spark-side
 plumbing here is real and tested: schemas, Arrow batch shape, partitioning,
 UDF signatures.  Only the codec calls themselves are stubbed (the container
-has no image/audio libraries): ``decode_image``/``decode_audio`` raise
+has no image library): ``decode_image`` raises
 ``NotImplementedError`` unless ``fake=True``, where a deterministic fake
 decoder (derived from the bytes, stable across engines/runs) stands in so
 the pipeline shape is exercisable end-to-end.
@@ -79,17 +79,6 @@ def image_codec_available() -> bool:
         return False
 
 
-def audio_codec_available() -> bool:
-    """Runtime capability probe: True when a real audio codec
-    (soundfile) is importable."""
-    try:
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def decode_image(content: bytes, fake: bool = False) -> list[float]:
     """Image decode → 8 luminance-histogram features.  Uses Pillow when
     the environment provides it (see :func:`image_codec_available`);
@@ -109,31 +98,6 @@ def decode_image(content: bytes, fake: bool = False) -> list[float]:
     raise NotImplementedError(
         "image codec not available in this environment (pip install "
         "Pillow to light up the real path, or pass fake=True)")
-
-
-def decode_audio(content: bytes, fake: bool = False) -> list[float]:
-    """Audio decode → 8 coarse RMS-envelope features.  Uses soundfile
-    when available (see :func:`audio_codec_available`); otherwise the
-    deterministic ``fake`` stand-in or a LOUD error."""
-    if fake:
-        return _fake_decode(content)
-    if audio_codec_available():
-        import io
-
-        import numpy as np
-        import soundfile as sf
-
-        data, _sr = sf.read(io.BytesIO(content), dtype="float64")
-        if data.ndim > 1:
-            data = data.mean(axis=1)
-        if len(data) == 0:
-            return [0.0] * 8
-        chunks = np.array_split(data, 8)
-        return [float(np.sqrt(np.mean(c * c))) if len(c) else 0.0
-                for c in chunks]
-    raise NotImplementedError(
-        "audio codec not available in this environment (pip install "
-        "soundfile to light up the real path, or pass fake=True)")
 
 
 def extract_features(assets: DataFrame, n_feat: int = 8, fake: bool = True) -> DataFrame:

@@ -7,7 +7,6 @@ compile into ONE aggregation pass per table (applicative fold composition
 
 from __future__ import annotations
 
-import warnings
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -35,15 +34,6 @@ def expect(df: DataFrame, expectations: Mapping[str, Column]) -> DataFrame:
         for name, cond in expectations.items()
     ]
     return df.agg(*aggs)
-
-
-def gate(df: DataFrame, expectations: Mapping[str, Column]) -> None:
-    """Raise ValueError if any expectation is violated (driver-side gate
-    for pipeline orchestration)."""
-    row = expect(df, expectations).collect()[0]
-    bad = {k: v for k, v in row.asDict().items() if v}
-    if bad:
-        raise ValueError(f"data-quality gate failed: {bad}")
 
 
 def drift_psi(
@@ -338,135 +328,6 @@ def observe(df: DataFrame, name: str, metrics: Mapping[str, Column]):
 
     obs = Observation(name)
     return df.observe(obs, *[c.alias(n) for n, c in metrics.items()]), obs
-
-
-def _winsorize_hist_pass(
-    df: DataFrame, col: str, lo: float, hi: float, nbuckets: int,
-    lo_frac: float, hi_frac: float,
-) -> tuple[float, float, int, int, int, int, int]:
-    """One histogram pass over the non-null values of ``col``: returns
-    ``(ql, qh, b_lo, b_hi, n, below, above)`` where ``b_lo``/``b_hi``
-    are the PICKED bucket indices (for range refinement) and
-    ``below``/``above`` count values outside [lo, hi] (clamped into the
-    edge buckets by ``hist_bucket`` — mass-correct for the cumulative
-    quantile scan, since all below-range mass sits in bucket 0).  The
-    per-bucket and the scalar aggregate are ONE job (the bucket relation
-    is never materialized)."""
-    from map_reduce_folds_spark.operators.sketches import (
-        hist_bucket, hist_quantile,
-    )
-
-    x = F.col(col).cast("double")
-    counts = (
-        df.where(x.isNotNull())
-        .groupBy(hist_bucket(col, lo, hi, nbuckets).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"),
-             F.sum((x < F.lit(lo)).cast("long")).alias("below"),
-             F.sum((x > F.lit(hi)).cast("long")).alias("above"))
-    )
-    row = counts.agg(
-        hist_quantile(lo_frac, lo, hi, nbuckets).alias("ql"),
-        hist_quantile(hi_frac, lo, hi, nbuckets).alias("qh"),
-        F.sum("cnt").alias("n"),
-        F.sum("below").alias("below"),
-        F.sum("above").alias("above"),
-    ).first()
-    if row["n"] is None or row["n"] == 0:
-        raise ValueError(f"winsorize: column {col!r} has no non-null values")
-    ql, qh = float(row["ql"]), float(row["qh"])
-    w = (hi - lo) / nbuckets
-    b_lo = int(round((ql - lo) / w - 0.5))
-    b_hi = int(round((qh - lo) / w - 0.5))
-    return ql, qh, b_lo, b_hi, int(row["n"]), int(row["below"]), int(row["above"])
-
-
-def winsorize(
-    df: DataFrame,
-    col: str,
-    lo_frac: float = 0.01,
-    hi_frac: float = 0.99,
-    lo: float | None = None,
-    hi: float | None = None,
-    nbuckets: int = 64,
-    out_col: str | None = None,
-    out_of_range: str = "error",
-    refine: int = 2,
-) -> DataFrame:
-    """Clamp a numeric column to its [lo_frac, hi_frac] quantile band —
-    the robust-normalization pass that stops a handful of outliers from
-    dominating scaled features.  Quantiles come from the deterministic
-    equi-width histogram sketch (``sketches.hist_bucket`` /
-    ``hist_quantile``); they are collected as ONE driver row (the
-    bounded-scalar idiom of ``gate``) and applied as literals, keeping
-    the clamp itself a pure scan expression.
-
-    Range discipline.  ``lo``/``hi`` default to the column's exact
-    min/max, then the histogram is REFINED: when the picked quantile
-    band occupies a sliver of the buckets (the signature of an
-    outlier-stretched range — winsorize's core use case, where one 1e6
-    outlier over a [0, 1000] bulk makes every bucket 15 000 wide), up to
-    ``refine`` extra passes re-histogram just the picked band with the
-    out-of-band mass clamped into the edge buckets (mass-correct for the
-    cumulative scan), shrinking the bucket width — and hence the
-    quantile error — by ~nbuckets× per pass.
-
-    When ``lo``/``hi`` are passed explicitly there is NO pre-scan: the
-    histogram pass itself counts out-of-range values.  With the default
-    ``out_of_range="error"`` any such value raises (the refuse-loudly
-    discipline of the pagerank weight cap); ``out_of_range="clamp"``
-    instead folds them into the edge buckets and WARNS with the exact
-    count — the deliberate escape hatch for tight quantiles over a known
-    bulk range when outliers exist (their mass still counts toward the
-    cumulative quantile position, and the final clamp bounds them)."""
-    if out_of_range not in ("error", "clamp"):
-        raise ValueError(
-            f"winsorize: out_of_range must be 'error' or 'clamp', "
-            f"got {out_of_range!r}")
-    explicit = lo is not None and hi is not None
-    if not explicit:
-        if lo is not None or hi is not None:
-            raise ValueError(
-                "winsorize: pass BOTH lo and hi explicitly, or neither — "
-                "a half-declared range cannot be validated")
-        mn, mx = df.agg(
-            F.min(F.col(col).cast("double")),
-            F.max(F.col(col).cast("double")),
-        ).first()
-        if mn is None:
-            raise ValueError(
-                f"winsorize: column {col!r} has no non-null values")
-        lo, hi = float(mn), float(mx)
-    if hi <= lo:  # constant (or empty-declared) range: clamp is the identity
-        return df.withColumn(out_col or f"{col}_winsorized",
-                             F.col(col).cast("double"))
-    ql, qh, b_lo, b_hi, _n, below, above = _winsorize_hist_pass(
-        df, col, lo, hi, nbuckets, lo_frac, hi_frac)
-    if explicit and (below or above):
-        if out_of_range == "error":
-            raise ValueError(
-                f"winsorize: {below + above} value(s) of {col!r} fall "
-                f"outside the declared range [{lo}, {hi}] ({below} below, "
-                f"{above} above) — pass out_of_range='clamp' to fold them "
-                "into the edge buckets (counted, mass-correct), or widen "
-                "lo/hi, or omit them to derive the range from min/max")
-        warnings.warn(
-            f"winsorize: clamped {below + above} out-of-range value(s) of "
-            f"{col!r} into the edge buckets ({below} below {lo}, {above} "
-            f"above {hi}); their mass still counts toward the quantile "
-            "positions", stacklevel=2)
-    # Outlier-stretched range: the quantile band landed in a sliver of the
-    # buckets, so bucket width (= quantile error) dwarfs the bulk spread.
-    # Re-histogram the picked band (edge-clamped, mass-correct) to shrink it.
-    for _ in range(max(0, refine)):
-        if b_hi - b_lo + 1 >= max(2, nbuckets // 4):
-            break
-        w = (hi - lo) / nbuckets
-        lo, hi = lo + b_lo * w, lo + (b_hi + 1) * w
-        ql, qh, b_lo, b_hi, _n, _bel, _abv = _winsorize_hist_pass(
-            df, col, lo, hi, nbuckets, lo_frac, hi_frac)
-    clamped = F.greatest(F.least(F.col(col).cast("double"), F.lit(qh)),
-                         F.lit(ql))
-    return df.withColumn(out_col or f"{col}_winsorized", clamped)
 
 
 def mad_outliers(

@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (north-star GAP ops).
 
-* :func:`cosine` builds the dot/norm arithmetic as an explicit left-
-  associated chain of per-element terms — bitwise-reproducible in any
-  engine that evaluates ``+`` left-to-right (DuckDB oracle parity), and
-  still whole-stage-codegen'd by Catalyst.
+* :func:`dot` / :func:`norm` build the cosine arithmetic as a strict
+  left fold of per-element terms — bitwise-reproducible in any engine
+  that evaluates ``+`` left-to-right (DuckDB oracle parity), and still
+  whole-stage-codegen'd by Catalyst.
 * :func:`brute_force_topk` is the exactness baseline: queries × corpus
   join, per-query top-k window.  Right answer, O(|Q|·N) — fine when |Q|
   is small or N fits a broadcast.
@@ -39,10 +39,6 @@ def norm(a: Column, dim: int) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
 def dot_sql(a: str, b: str, dim: int) -> str:
     """DuckDB SQL mirroring :func:`dot` term-for-term (oracle generator)."""
     return " + ".join(
@@ -75,7 +71,8 @@ def brute_force_topk(
 
     # norms are per-vector: compute them once per side before the join
     # (identical chain expression, so the factored form is still bitwise
-    # equal to cosine() inline — and the join-side codegen shrinks 3x)
+    # equal to dot / (norm·norm) inline — and the join-side codegen
+    # shrinks 3x)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         norm(F.col(vec_col), dim).alias("qn"),
@@ -1566,418 +1563,6 @@ def int8_topk_sql(
     QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
                                ORDER BY qdot DESC, neighbor_id) <= {k}
     """
-
-
-# ---------------------------------------------------------------------------
-# PCA embedding compression (train small, broadcast, project at scale —
-# the same pattern as the IVF coarse quantizer's _train_centroids)
-# ---------------------------------------------------------------------------
-
-def pca_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 16,
-    sample_limit: int = 8192,
-) -> tuple[list[float], list[list[float]], list[float]]:
-    """Fit a ``k``-component PCA on a DETERMINISTIC bounded sample (lowest
-    ids — same convention as :func:`_train_centroids`): returns
-    ``(mean[dim], components[k][dim], explained_variance[k])``.
-
-    The model is tiny (k·dim floats) and trains driver-side; at 100 TB
-    the fit cost is a bounded ``limit`` collect, and the corpus-wide work
-    is only the projection scan (:func:`pca_project`).  Eigenvector signs
-    are canonicalized (largest-|coordinate| positive) so the model — and
-    every downstream projection — is reproducible across runs.
-
-    Reference analog: none (north-star LLM-pipeline surface): dimension
-    reduction ahead of ANN indexing / clustering, where a 64→16 cut is a
-    4× byte cut on the dominant storage and often raises IVF recall.
-    For the FULL-CORPUS fit under the bitwise oracle gate (exact
-    integer scatter matrix + unrolled power iteration) see
-    :func:`pca_power_fit`."""
-    import numpy as np
-
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col)
-        .limit(sample_limit).collect()
-    )
-    x = np.array([list(r[1]) for r in sample], dtype=np.float64)
-    if len(x) < 2:
-        raise ValueError("pca_fit needs at least 2 sample vectors")
-    mu = x.mean(axis=0)
-    xc = x - mu
-    cov = (xc.T @ xc) / (len(x) - 1)
-    vals, vecs = np.linalg.eigh(cov)          # ascending eigenvalues
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T.copy()           # (k, dim)
-    for row in comps:
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1.0
-    return (
-        [float(v) for v in mu],
-        [[float(v) for v in row] for row in comps],
-        [float(vals[i]) for i in order],
-    )
-
-
-def pca_project(
-    df: DataFrame,
-    mean: list[float],
-    components: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pvec",
-) -> DataFrame:
-    """Project every vector onto the fitted components:
-    ``p = components @ (x - mean)`` — one vectorized Arrow stage
-    (batch matmul), scan-shaped, zero shuffles at any corpus size."""
-    import numpy as np
-
-    mu = np.asarray(mean, dtype=np.float64)
-    C = np.asarray(components, dtype=np.float64)   # (k, dim)
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, {out_col} array<double>"
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            p = (x - mu) @ C.T
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                out_col: list(p),
-            })
-
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)
-
-
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.95,
-    n_planes: int | str = "auto",
-    n_tables: int | str = "auto",
-    corpus_count: int | None = None,
-    **cc_kw,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
-    literature): keep ONE canonical row per embedding near-dup CLUSTER —
-    the transitive closure of the cosine-similarity pair graph, not a
-    pairwise rule (A≈B and B≈C collapse to one cluster even when A·C
-    fell below threshold).  The embedding analog of the SimHash
-    ``dedup.simhash_components`` → ``graph.dedup_by_components`` pipeline:
-    SRP-LSH candidate pairs (linear, bucketed, auto-sized geometry) →
-    distributed connected components → drop every non-min-id cluster
-    member.  ``cc_kw`` passes through to
-    :func:`graph.connected_components` (``checkpoint_dir=``,
-    ``max_iter=``)."""
-    from map_reduce_folds_spark.operators.graph import dedup_by_components
-
-    pairs = embedding_near_dup_pairs_lsh(
-        df, id_col, vec_col, dim, threshold,
-        n_planes=n_planes, n_tables=n_tables, corpus_count=corpus_count,
-    )
-    return dedup_by_components(df, pairs.select("id_a", "id_b"), id_col,
-                               **cc_kw)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (Jégou, Douze & Schmid, "Product Quantization for
-# Nearest Neighbor Search", TPAMI 2011 — public literature): split each
-# vector into m subvectors, k-means each subspace, store one byte-ish code
-# per subspace.  Same train-small/broadcast/scan-at-scale shape as PCA and
-# the IVF coarse quantizer; the asymmetric-distance (ADC) top-k reads ONLY
-# the m-byte codes, an 8x-32x byte cut on the scan that dominates ANN cost.
-# ---------------------------------------------------------------------------
-
-def pq_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    m: int = 8,
-    k: int = 16,
-    sample_limit: int = 8192,
-    n_iter: int = 10,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks on a DETERMINISTIC bounded sample (lowest ids —
-    the ``pca_fit`` convention): returns ``codebooks[m][k][dim/m]``.
-
-    Per-subspace Lloyd k-means with DETERMINISTIC seeding (the first
-    ``k`` sample vectors' subvectors — no RNG state, reproducible across
-    runs/engines) and a fixed iteration count; empty clusters keep their
-    previous centroid (standard fix, deterministic).  The model is tiny
-    (m·k·dim/m = dim·k floats); corpus-scale work is only the encode
-    scan."""
-    import numpy as np
-
-    if dim % m != 0:
-        raise ValueError(f"pq_fit: dim={dim} not divisible by m={m}")
-    sub = dim // m
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col)
-        .limit(sample_limit).collect()
-    )
-    x = np.array([list(r[1]) for r in sample], dtype=np.float64)
-    if len(x) < k:
-        raise ValueError(f"pq_fit needs at least k={k} sample vectors")
-    books = []
-    for s in range(m):
-        xs = x[:, s * sub:(s + 1) * sub]
-        cent = xs[:k].copy()
-        for _ in range(n_iter):
-            d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = xs[mask].mean(axis=0)
-        books.append([[float(v) for v in row] for row in cent])
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Encode every vector to its ``m`` nearest-centroid subspace codes —
-    one vectorized Arrow stage (batch distance matmuls), scan-shaped,
-    zero shuffles at any corpus size.  Output: ``(id, out_col:
-    array<int>)`` — the m-byte representation ADC scoring reads."""
-    import numpy as np
-
-    B = np.asarray(codebooks, dtype=np.float64)     # (m, k, sub)
-    m, _k, sub = B.shape
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, {out_col} array<int>"
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for s in range(m):
-                xs = x[:, s * sub:(s + 1) * sub]
-                # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin drops ||x||^2
-                d = -2.0 * (xs @ B[s].T) + (B[s] ** 2).sum(axis=1)[None, :]
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                out_col: [list(map(int, row)) for row in codes],
-            })
-
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)
-
-
-def pq_topk(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    query_id: str = "vec_id",
-    query_vec: str = "embedding",
-    code_id: str = "vec_id",
-    code_col: str = "pq_code",
-    max_queries: int = 4096,
-    max_cells: int = 4_000_000,
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance (ADC): each query
-    precomputes its m×k subspace distance table driver-side (tiny), the
-    corpus pass reads ONLY the m-int codes and sums m table lookups per
-    row — a pure scan over the compressed representation, batch-local
-    top-k per query, one final per-query reduction.  Raises when the
-    query side exceeds ``max_queries`` (the ``blocked_matmul_topk``
-    no-silent-caps discipline).  Output: ``(query_id, neighbor_id,
-    adc_dist)`` ascending by distance, deterministic (distance,
-    neighbor_id) tie-break; a query drawn from the corpus never returns
-    itself (the module-wide top-k convention)."""
-    import numpy as np
-
-    B = np.asarray(codebooks, dtype=np.float64)     # (m, K, sub)
-    m, K, sub = B.shape
-    qrows = (queries.select(query_id, query_vec)
-             .orderBy(query_id).limit(max_queries + 1).collect())
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk: query side exceeds max_queries={max_queries}; "
-            "loop over id-ordered blocks or raise the cap deliberately")
-    qids = np.array([r[0] for r in qrows])
-    qx = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    # distance tables: (nq, m, K)
-    tables = np.empty((len(qx), m, K), dtype=np.float64)
-    for s in range(m):
-        xs = qx[:, s * sub:(s + 1) * sub]           # (nq, sub)
-        d = ((xs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-        tables[:, s, :] = d
-    id_type = dict(codes.dtypes)[code_id]
-
-    def gen(batches):
-        import pandas as pd
-
-        # per-query candidate lists pruned to k on overflow — generic over
-        # id types (the (dist, id) sort IS the operator's tie-break), no
-        # numeric-negation trick that would crash on string ids
-        best: list[list] = [[] for _ in range(len(qids))]
-
-        def prune(h):
-            h.sort()
-            del h[k:]
-
-        # max_cells caps the dense (n_queries × rows) distance block
-        # (default ~32 MB of float64) regardless of max_queries — at the
-        # 4096-query cap a default 10k-row Arrow batch would otherwise
-        # stage ~330 MB of transient memory per concurrent task
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C_all = np.stack([np.asarray(c, dtype=np.int64)
-                              for c in pdf[code_col]])      # (n, m)
-            ids_all = pdf[code_id].to_numpy()
-            step = max(1, max_cells // max(1, len(qids)))
-            for lo in range(0, len(ids_all), step):
-                C = C_all[lo:lo + step]
-                ids = ids_all[lo:lo + step]
-                # ADC: dist[q, n] = sum_s tables[q, s, C[n, s]] — m
-                # column gathers (m is small; the gather is the whole
-                # read path)
-                d = np.zeros((len(qids), len(ids)), dtype=np.float64)
-                for s in range(m):
-                    d += tables[:, s, :][:, C[:, s]]
-                for qi in range(len(qids)):
-                    h = best[qi]
-                    qid = qids[qi]
-                    for ni in range(len(ids)):
-                        if ids[ni] == qid:  # never return the query itself
-                            continue
-                        h.append((float(d[qi, ni]), ids[ni]))
-                    if len(h) > 4 * k:
-                        prune(h)
-        out = []
-        for qi, h in enumerate(best):
-            prune(h)
-            for dist_, nid in h:
-                out.append((qids[qi], nid, dist_))
-        yield pd.DataFrame(out, columns=["__qid", "__nid", "adc_dist"])
-
-    # internal names: query and corpus commonly share an id column name,
-    # and a duplicate-named output schema is unresolvable downstream
-    part = codes.mapInPandas(
-        gen, schema=f"__qid {id_type}, __nid {id_type}, adc_dist double")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("adc_dist"), F.col("__nid"))
-    return (
-        part.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k).drop("__rn")
-        .select(F.col("__qid").alias("query_id"),
-                F.col("__nid").alias("neighbor_id"), "adc_dist")
-    )
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 10,
-    n_bits: int = 4,
-    n_probe: int = 2,
-    table: int = 9,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-PQ approximate top-k — the standard billion-scale ANN layout
-    (Jégou et al. 2011): the SRP coarse quantizer restricts each query to
-    ``n_probe`` cells, and within them candidates are ranked by
-    asymmetric PQ distance over their m-int codes — the scan reads
-    CODES, never vectors.
-
-    Fully relational scoring: each query row carries its m×K distance
-    table as ONE Catalyst array expression over the codebook literals,
-    and each candidate costs m ``element_at`` lookups inside an
-    ``aggregate`` fold — no Python anywhere in the per-candidate path
-    (the Arrow stage appears only in the index build,
-    :func:`pq_encode`).  ``codes``: pass the stored index table
-    ``(id, cell, pq_code)`` (built once via :func:`pq_encode` + the cell
-    expression, the ``materialize_path`` discipline) to skip re-encoding;
-    else it is derived here in one scan.
-
-    Output: ``(query_id, neighbor_id, adc_dist)`` ascending, k per
-    query, deterministic (adc_dist, neighbor_id) tie-break.  Approximate
-    on BOTH axes (cell recall × PQ distortion) — recall-tested against
-    the exact scan in tests."""
-    import numpy as np
-
-    B = np.asarray(codebooks, dtype=np.float64)
-    m, K, sub = B.shape
-    if m * sub != dim:
-        raise ValueError(
-            f"ivf_pq_topk: codebooks ({m}x{K}x{sub}) do not cover "
-            f"dim={dim}")
-    if codes is None:
-        enc = pq_encode(corpus, codebooks, id_col, vec_col)
-        cells = corpus.select(
-            F.col(id_col),
-            srp_signature(F.col(vec_col), dim, n_bits, table).alias("cell"),
-        )
-        codes = enc.join(cells, id_col)
-    masks = _probe_masks(n_bits, n_probe)
-    # per-query m×K ADC table as a literal-codebook Catalyst expression
-    qv = F.col(vec_col)
-
-    def cell_dist(s: int, c: int):
-        e = F.lit(0.0)
-        for d in range(sub):
-            t = F.element_at(qv, s * sub + d + 1) - F.lit(float(B[s][c][d]))
-            e = e + t * t
-        return e
-
-    qtab = F.array(*[
-        F.array(*[cell_dist(s, c) for c in range(K)]) for s in range(m)
-    ])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), qtab.alias("qtab"),
-        srp_signature(qv, dim, n_bits, table).alias("sig"),
-    ).select(
-        "query_id", "qtab",
-        F.explode(F.array(*[F.col("sig").bitwiseXOR(F.lit(mk))
-                            for mk in masks])).alias("cell"),
-    )
-    c = codes.select(F.col(id_col).alias("neighbor_id"), "cell",
-                     F.col("pq_code").alias("code"))
-    cand = c.join(
-        F.broadcast(q),
-        (q.cell == c.cell) & (F.col("query_id") != F.col("neighbor_id")),
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)), F.lit(0.0),
-        lambda acc, s: acc + F.element_at(
-            F.element_at(F.col("qtab"), s + 1),
-            F.element_at(F.col("code"), s + 1) + 1),
-    )
-    scored = cand.select("query_id", "neighbor_id", adc.alias("adc_dist"))
-    from map_reduce_folds_spark.operators.relational import topk_per_group
-
-    return topk_per_group(
-        scored, ["query_id"], [F.col("adc_dist"), F.col("neighbor_id")], k)
 
 
 def _int8_dot(a: Column, b: Column) -> Column:

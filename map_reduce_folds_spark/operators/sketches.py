@@ -379,8 +379,8 @@ def bloom_bits(
 ) -> DataFrame:
     """Build a bloom filter as a ``(word, bits)`` relation: word = bit
     position // 64, bits = OR of the member bits in that word.  One
-    narrow aggregation (≤ n_bits/64 output rows); merge two filters of
-    the same (n_bits, k) geometry with ``bloom_merge``."""
+    narrow aggregation (≤ n_bits/64 output rows); two filters of the
+    same (n_bits, k) geometry merge by BIT_OR per word."""
     if n_bits & (n_bits - 1) or n_bits < 64:
         raise ValueError(f"n_bits must be a power of two >= 64, got {n_bits}")
     c = F.col(item) if isinstance(item, str) else item
@@ -395,12 +395,6 @@ def bloom_bits(
         )
         .groupBy("word").agg(F.bit_or("b").alias("bits"))
     )
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union of two bloom filters with identical geometry: BIT_OR the
-    word relations (the monoid merge, exactly like CMS cnt-SUM)."""
-    return a.unionByName(b).groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_mask(bits_df: DataFrame, n_bits: int) -> list[int]:
@@ -474,7 +468,8 @@ def bloom_prune_join(
 #   distinct:      D̂ = (k-1) · 2^60 / h_(k)      (exact count when |set| < k)
 #   union:         k smallest of the concatenated sketches (re-min)
 #   intersection:  ρ = |union-sketch values present in BOTH sides| / k,
-#                  Î = round(ρ · D̂_union)  — the standard theta estimator.
+#                  Î = round(ρ · D̂_union)  — the standard theta estimator
+#                  (:func:`kmv_pairwise_jaccard`, per group pair).
 #
 # Relation form: (group…, h) rows, ≤ k per group; merge = union + re-min,
 # the same monoid shape as the HLL/CMS/bloom relations.
@@ -504,19 +499,6 @@ def kmv_sketch(
     return hashes.orderBy("h").limit(k)
 
 
-def kmv_merge(a: DataFrame, b: DataFrame, k: int = 256,
-              group_cols: list[str] | None = None) -> DataFrame:
-    """Union of two KMV sketches (same k): concatenate, dedup, re-min —
-    the sketch monoid (distinct hashes of A∪B's k smallest)."""
-    from map_reduce_folds_spark.operators.relational import topk_per_group
-
-    both = a.unionByName(b).distinct()
-    g = list(group_cols or [])
-    if g:
-        return topk_per_group(both, g, [F.col("h")], k)
-    return both.orderBy("h").limit(k)
-
-
 #: hash60 value space (the D̂ normalizer)
 _H60_M = float(1 << 60)
 
@@ -539,34 +521,6 @@ def kmv_distinct_estimate_sql(k: int = 256) -> str:
             "END)")
 
 
-def kmv_intersection_estimate(
-    a: DataFrame, b: DataFrame, k: int = 256
-) -> DataFrame:
-    """One-row ``(est_a, est_b, est_union, jaccard, est_intersection)``
-    from two GLOBAL KMV sketches: the union sketch's values present in
-    both sides estimate the Jaccard similarity, scaled by the union
-    estimate — sets too large to intersect exactly get an estimated
-    overlap from two k-row artifacts.  Pure arithmetic over the
-    deterministic sketches → oracle-exact."""
-    u = kmv_merge(a, b, k).persist()
-    try:
-        n_u = u.count()
-        both = u.join(a, "h", "left_semi").join(b, "h", "left_semi").count()
-        est_a = a.agg(kmv_distinct_estimate(k).alias("e")).first()["e"]
-        est_b = b.agg(kmv_distinct_estimate(k).alias("e")).first()["e"]
-        est_u = u.agg(kmv_distinct_estimate(k).alias("e")).first()["e"]
-    finally:
-        u.unpersist()
-    jac = both / n_u if n_u else 0.0
-    spark = a.sparkSession
-    return spark.createDataFrame(
-        [(float(est_a), float(est_b), float(est_u), round(jac, 9),
-          round(jac * est_u, 9))],
-        "est_a double, est_b double, est_union double, jaccard double, "
-        "est_intersection double",
-    )
-
-
 def kmv_pairwise_jaccard(
     sketches: DataFrame,
     group_col: str,
@@ -575,9 +529,7 @@ def kmv_pairwise_jaccard(
     """RELATIONAL pairwise intersection estimates from grouped KMV
     sketches: for every unordered group pair (a < b), the union sketch's
     both-members fraction (the theta Jaccard estimator) and the scaled
-    intersection estimate — one plan, no driver arithmetic (the
-    driver-side :func:`kmv_intersection_estimate` is the two-set
-    convenience form).
+    intersection estimate — one plan, no driver arithmetic.
 
     Input: a ``(group, h)`` sketch relation (:func:`kmv_sketch` with
     ``group_cols=[group_col]``).  Shape: pair union sketches are ≤ k rows

@@ -342,8 +342,8 @@ def winnow_fingerprints(
     fingerprints (the paper's domain: n_grams >= 1).
 
     ``materialize_path`` writes the fingerprint index once as parquet
-    and returns a fresh scan (``dedup.materialize_stage`` — the
-    shared-stage discipline of ``shingle_sets``): at corpus scale the
+    and returns a fresh scan (``dedup.materialize_stage``, the
+    shared-stage discipline): at corpus scale the
     index feeds every downstream audit (overlap pairs, cross-corpus
     contamination), and re-deriving it per consumer repeats the
     dominant text scan."""
@@ -445,8 +445,8 @@ def winnow_overlap_pairs(
     ``max_df · |fingerprints|`` rather than Σd² (the
     ``max_shingle_df`` discipline from the Jaccard family).  Pass a
     precomputed ``fps=`` (e.g. a :func:`winnow_fingerprints` table
-    materialized once) to skip re-fingerprinting — the shared-stage
-    pattern of ``dedup.shingle_sets``.  At the 100M-fingerprint scale
+    materialized once) to skip re-fingerprinting.  At the
+    100M-fingerprint scale
     pass ``fps=`` a parquet index (``winnow_fingerprints
     materialize_path``): a disk-backed stage boundary — an in-memory
     localCheckpoint of the fingerprint relation was measured to OOM

@@ -1006,61 +1006,6 @@ def group_percentiles_hist(
     )
 
 
-def group_ranksum_hist(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    id_col: str,
-    nbuckets: int = 8192,
-) -> DataFrame:
-    """Exact per-group rank-sum ``Σ rankᵢ·xᵢ`` (rank = ``row_number``
-    over the ascending ``(value, id)`` total order) WITHOUT a per-group
-    global sort — the histogram-refinement companion to
-    :func:`group_percentiles_hist`, and the distributed shape of every
-    rank-statistic built on Σ i·x₍ᵢ₎ (Gini/Lorenz, Wilcoxon-style
-    rank sums).
-
-    Decomposition: a row's global rank = (rows in strictly lower
-    buckets) + (its local rank within its bucket), which is exact
-    because integer bucketing is monotone — all of a value's ties land
-    in ONE bucket and lower buckets hold strictly smaller values.  So
-    ``Σ rank·x = Σ below_b·x  +  Σ local_rank·x``: the first term is a
-    broadcast join of per-bucket offsets (no sort at all), the second a
-    window over (group, bucket) partitions of ~n/nbuckets rows.  All
-    integer until the caller divides.
-
-    Output: one row per group — ``n``, ``sum_x`` (bigint),
-    ``ranksum`` (bigint; stage through DECIMAL upstream if n·x can
-    exceed int64 for your data).  NULL values are excluded (the
-    portable-median policy)."""
-    base = (df.select(*keys, F.col(value_col).alias("__v"),
-                      F.col(id_col).alias("__id"))
-            .where(F.col("__v").isNotNull())
-            .localCheckpoint(eager=False))
-    stats = base.groupBy(*keys).agg(
-        F.min("__v").alias("__lo"), F.max("__v").alias("__hi"))
-    j = (base.join(F.broadcast(stats), list(keys))
-         .withColumn("__b", F.expr(f"(__v - __lo) div "
-                                   f"((__hi - __lo) div {int(nbuckets)} + 1)"))
-         .select(*keys, "__v", "__id", "__b"))
-    counts = j.groupBy(*keys, "__b").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = Window.partitionBy(*keys).orderBy("__b") \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    below = counts.select(
-        *keys, "__b",
-        (F.sum("__c").over(wcum) - F.col("__c")).alias("__below"))
-    wloc = Window.partitionBy(*keys, "__b").orderBy("__v", "__id")
-    ranked = (
-        j.join(F.broadcast(below), [*keys, "__b"])
-        .withColumn("__lr", F.row_number().over(wloc))
-    )
-    return ranked.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("__v").cast("bigint").alias("sum_x"),
-        F.sum((F.col("__below") + F.col("__lr")) * F.col("__v"))
-        .cast("bigint").alias("ranksum"))
-
-
 def cusum_per_key(
     df: DataFrame,
     key: str,

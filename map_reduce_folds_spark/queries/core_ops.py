@@ -260,7 +260,7 @@ def mr_product_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mr_shared_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Applicative FOLD composition over ONE cached scan (ListStats.hs:36:
+    """Applicative FOLD composition over ONE input frame (ListStats.hs:36:
     ``(,) <$> sumsF <*> meansF``): two independent pipelines share the
     input, results joined back on the key."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -277,13 +277,7 @@ def mr_shared_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         }),
     )
     df_sums, df_means = shared_scan(li, sums, means)
-    out = df_sums.join(df_means, "k")
-    # drop the cache entry immediately: leaving lineitem in the session
-    # cache manager would silently redirect every LATER query's scan to the
-    # full-column InMemoryRelation (killing parquet column pruning).  The
-    # lazy consumers then just rescan — semantics unchanged.
-    li.unpersist()
-    return out
+    return df_sums.join(df_means, "k")
 
 
 _ORD_SQL = "(l_orderkey * 10 + l_linenumber) * 64 + CAST(l_quantity AS BIGINT)"

@@ -2045,11 +2045,11 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cosine ≥ 0.4; ``"auto"`` shrinking-occupancy geometry, which resolves
     to the oracle's pinned base planes/tables at every fixture sf — see
     the _SRP_PLANES comment) → distributed connected components →
-    ``(vec_id, canonical component)``.  The embedding analog of dedup_cc_clusters — transitive
-    closure, not a pairwise rule.  The operator form
-    (:func:`similarity.semantic_dedup`) additionally anti-joins the losers
-    off the corpus; the registered query returns the cluster labels so the
-    closure itself is what the oracle hashes."""
+    ``(vec_id, canonical component)``.  The embedding analog of
+    dedup_cc_clusters — transitive closure, not a pairwise rule.  The
+    query returns the cluster labels so the closure itself is what the
+    oracle hashes; ``graph.dedup_by_components`` turns such labels into
+    the kept corpus."""
     e = load_table(spark, sf_dir, "embeddings")
     from map_reduce_folds_spark.sources import table_rowcount
 
@@ -2385,7 +2385,7 @@ def sketch_kmv_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sketches.kmv_sketch) — the k-smallest-hash sketch whose
     estimates are EXACT arithmetic over a deterministic artifact, and
     which (unlike HLL) also supports intersection estimation between
-    slices (kmv_intersection_estimate, error-bound tested).  Sketch ≤ k
+    slices (kmv_pairwise_jaccard, see sketch_kmv_jaccard_sources).  Sketch ≤ k
     rows per source at any corpus size; merge = union + re-min."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("source", F.explode(T.tokenize("text")).alias("tok"))
@@ -3542,10 +3542,9 @@ def gini_doclen_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     are swap-invariant in Σ i·x, every sum is a bigint, and the ONLY
     float operation is the single terminal division (the
     moments_per_event_type discipline).  The per-source rank window
-    serializes per source at extreme scale — the sortless form exists
-    as windows.group_ranksum_hist (bucket-offset rank-sum decomposition,
-    property-identical); at |sources| ≈ 20 the sort path is the honest
-    default."""
+    serializes per source at extreme scale — the sortless form is the
+    bucket-offset decomposition of evalstats.cum_below; at |sources| ≈ 20
+    the sort path is the honest default."""
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")

@@ -2447,8 +2447,7 @@ def funnel_step_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Table-maintenance ops with exact oracles (r6 verdict Next #7): the snapshot
-# diff and the CDC upsert are relational at heart — only compaction/Z-order
-# stay unit-tested (pure filesystem-layout effects no SQL mirror can see).
+# diff and the CDC upsert are relational at heart, so both get exact oracles.
 # ---------------------------------------------------------------------------
 
 

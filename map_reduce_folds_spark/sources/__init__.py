@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -264,41 +264,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    range_cols: list[str],
-    n_files: int | None = None,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partitioned sorted parquet write — the data-skipping layout.
-
-    ``repartitionByRange`` gives each output file one contiguous slice of
-    the ``range_cols`` key space (sampled range boundaries, equal keys
-    co-located), and ``sortWithinPartitions`` orders rows inside the file.
-    Every parquet footer then carries TIGHT, NON-OVERLAPPING min/max stats
-    on the key, so any reader — Spark, DuckDB, Trino — skips whole files
-    and row groups for selective predicates: the zone-map effect, paid
-    once at write time, free on every subsequent read.  On 100 TB of
-    time-keyed data this is the difference between scanning a day and
-    scanning the corpus.
-
-    Unsorted writes scatter each key across all files (min≈global min,
-    max≈global max in every footer) and skip nothing.
-
-    ``n_files`` controls output file count (default: current shuffle
-    parallelism); size it so files land near the rolled parquet block
-    size (~128 MB–1 GB at scale).
-    """
-    part = (
-        df.repartitionByRange(n_files, *range_cols)
-        if n_files
-        else df.repartitionByRange(*range_cols)
-    )
-    part.sortWithinPartitions(*(sort_cols or range_cols)).write.mode(mode).parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -329,127 +294,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def zorder_key(scaled_cols: list[Column], bits: int = 16) -> Column:
-    """Bit-interleaved Z-value (Morton code) of ``len(scaled_cols)``
-    already-scaled non-negative integer columns (each < 2^``bits``):
-    bit ``i`` of column ``j`` lands at position ``i·N + j``.  Pure
-    shift/and/or Catalyst arithmetic — whole-stage-codegen'd, no UDF."""
-    if len(scaled_cols) * bits > 63:
-        raise ValueError(
-            f"zorder_key: {len(scaled_cols)} cols x {bits} bits = "
-            f"{len(scaled_cols) * bits} interleaved bit positions; only 63 "
-            "fit a signed bigint (position 63 is the sign bit and the JVM "
-            "masks shifts mod 64, silently corrupting the code) — lower "
-            "bits or drop columns")
-
-    n = len(scaled_cols)
-    parts = []
-    for j, c in enumerate(scaled_cols):
-        for i in range(bits):
-            parts.append(
-                F.shiftleft(
-                    F.shiftrightunsigned(c.cast("long"), i).bitwiseAND(F.lit(1)),
-                    i * n + j,
-                )
-            )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p  # disjoint bit positions: + == |
-    return out.cast("long")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-ORDER clustered parquet write — multi-dimensional data skipping.
-
-    :func:`write_sorted` gives tight footer min/max on ONE leading key;
-    a second predicate column stays scattered.  Z-ordering interleaves
-    the bits of ``cols`` (each rescaled to a ``bits``-wide integer via
-    its global min/max — one tiny aggregate) and range-partitions + sorts
-    on the Morton code, so every file covers a small HYPER-RECTANGLE of
-    the key space: footer min/max stay tight on EVERY z-ordered column
-    at once, and selective predicates on any of them skip files.  The
-    standard lakehouse layout trick (Delta/Iceberg `OPTIMIZE ZORDER BY`),
-    done here with plain Catalyst bit arithmetic.  At 100 TB: pay one
-    extra shuffle at write, skip most of the corpus on every multi-column
-    point/box query after.
-
-    Timestamp columns z-order on their epoch_us value.  NULLs scale to
-    bucket 0 (they sort first, as in a plain sort layout)."""
-    from ..timeutil import epoch_us
-
-    def _numf(c: str) -> Column:
-        return (epoch_us(F.col(c))
-                if "timestamp" in dict(df.dtypes)[c] else F.col(c)) \
-            .cast("double")
-
-    stats = df.agg(*[f(_numf(c)).alias(f"{t}_{c}")
-                     for c in cols
-                     for t, f in (("min", F.min), ("max", F.max))]).first()
-    lim = float((1 << bits) - 1)
-    scaled = []
-    for c in cols:
-        lo, hi = stats[f"min_{c}"], stats[f"max_{c}"]
-        if lo is None or hi is None or hi == lo:
-            scaled.append(F.lit(0).cast("long"))
-            continue
-        frac = (_numf(c) - F.lit(float(lo))) / F.lit(float(hi - lo))
-        scaled.append(
-            F.coalesce(F.round(frac * F.lit(lim)).cast("long"), F.lit(0)))
-    z = df.withColumn("__z", zorder_key(scaled, bits))
-    part = (z.repartitionByRange(n_files, "__z") if n_files
-            else z.repartitionByRange("__z"))
-    part.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet table into
-    ``ceil(total_bytes / target_file_bytes)`` files at ``dst_path``.
-    Returns the output file count.
-
-    The operational 100 TB concern this answers: streaming sinks and
-    per-micro-batch writes leave thousands of KB-sized files whose
-    per-file open/footer/listing overhead dominates subsequent scans
-    (and crushes the driver's listing).  Compaction is a rewrite to a
-    NEW path — never in place (readers of ``src_path`` stay correct;
-    atomic promotion is a metastore/rename concern above this layer).
-    Sizing reads the source files' actual on-disk bytes via the Hadoop
-    FS API (works for any supported filesystem, no local-path
-    assumption).  ``sort_within_by`` optionally sorts rows within each
-    output file (better row-group stats without a global sort);
-    repartition count scales the parallelism either way."""
-    import math
-
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = jpath.getFileSystem(hconf)
-    it = fs.listFiles(jpath, True)
-    total = 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += f.getLen()
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src_path).repartition(n_files)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    df.write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -473,8 +317,7 @@ def merge_upsert(
     a broadcast covers for typical CDC batch sizes) plus a union — the
     target is SCANNED once for the write and never rewritten in place,
     so readers of ``target_path`` stay correct and promotion (rename /
-    metastore pointer swap) stays a layer above, exactly like
-    :func:`compact_parquet`.  Stats ride the write job itself
+    metastore pointer swap) stays a layer above.  Stats ride the write job itself
     (``quality.observe`` — no dst re-read, no anti-join re-run); the one
     extra job is the tiny batch count.  If ``updates`` carries several
     rows per key, deduplicate upstream (e.g.

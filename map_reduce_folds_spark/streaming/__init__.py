@@ -60,7 +60,8 @@ def read_parquet_stream(
     spark: SparkSession, path: str, schema: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-source stream: replays a parquet directory as micro-batches
-    (the fixture-friendly source; swap for kafka in production)."""
+    (the fixture-friendly source: every registered stream query reads
+    through it)."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

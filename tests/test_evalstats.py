@@ -21,6 +21,39 @@ def _rows(df, *cols):
 
 
 # ---------------------------------------------------------------------------
+# cum_below: the bucket decomposition under AUC, Spearman and the rank tests
+
+
+def test_cum_below_equals_exclusive_window_sum(spark):
+    """Every ``below_<c>`` equals the exclusive running sum of ``c`` over
+    one (group, order) window, null as 0, on random distinct-value
+    integer groups: negatives, a 2e8-wide range, a single-row group, and
+    nbuckets small enough that many buckets carry mass."""
+    import random
+
+    from pyspark.sql.window import Window
+
+    rng = random.Random(77)
+    rows = []
+    for g, lo, hi, n in [("u", -40, 40, 60), ("t", 0, 200, 90),
+                         ("w", -10**8, 10**8, 41), ("one", 5, 5, 1)]:
+        rows += [(g, v, rng.randint(0, 9), rng.randint(-50, 50))
+                 for v in rng.sample(range(lo, hi + 1), n)]
+    df = spark.createDataFrame(rows, "g string, v long, a long, b long")
+    w = (Window.partitionBy("g").orderBy("v")
+         .rowsBetween(Window.unboundedPreceding, -1))
+    below = [F.coalesce(F.sum(c).over(w), F.lit(0)).cast("bigint")
+             .alias(f"below_{c}") for c in ("a", "b")]
+    want = set(_rows(df.select("g", "v", *below),
+                     "g", "v", "below_a", "below_b"))
+    assert len(want) == len(rows)
+    for nb in (4, 8192):
+        got = _rows(E.cum_below(df, ["g"], "v", ["a", "b"], nbuckets=nb),
+                    "g", "v", "below_a", "below_b")
+        assert len(got) == len(rows) and set(got) == want, nb
+
+
+# ---------------------------------------------------------------------------
 # ROC-AUC
 
 

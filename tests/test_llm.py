@@ -725,58 +725,6 @@ def test_cms_merge_equals_whole(spark, docs):
     assert merged == whole
 
 
-def test_pca_fit_project_matches_numpy(spark, emb):
-    """pca_fit on the deterministic sample must reproduce numpy PCA on
-    the same rows (components up to the canonical sign), and pca_project
-    must equal the batch matmul — plus the models of two runs are
-    identical (sign canonicalization removes eigh's sign freedom)."""
-    import numpy as np
-
-    mu, comps, var = S.pca_fit(emb, dim=64, k=8)
-    mu2, comps2, var2 = S.pca_fit(emb, dim=64, k=8)
-    assert (mu, comps, var) == (mu2, comps2, var2)  # reproducible model
-
-    rows = sorted(emb.select("vec_id", "embedding").collect(),
-                  key=lambda r: r["vec_id"])[:8192]
-    x = np.array([list(r["embedding"]) for r in rows])
-    np.testing.assert_allclose(np.asarray(mu), x.mean(axis=0), rtol=1e-12)
-    xc = x - x.mean(axis=0)
-    vals, vecs = np.linalg.eigh(xc.T @ xc / (len(x) - 1))
-    order = np.argsort(vals)[::-1][:8]
-    np.testing.assert_allclose(np.asarray(var), vals[order], rtol=1e-9)
-    C = np.asarray(comps)
-    ref = vecs[:, order].T
-    for got, want in zip(C, ref):
-        # same axis up to sign; fit canonicalizes the sign
-        assert (np.allclose(got, want, atol=1e-9)
-                or np.allclose(got, -want, atol=1e-9))
-    # orthonormal components
-    np.testing.assert_allclose(C @ C.T, np.eye(8), atol=1e-9)
-
-    proj = {r["vec_id"]: np.asarray(r["pvec"])
-            for r in S.pca_project(emb, mu, comps).collect()}
-    want = (x - np.asarray(mu)) @ C.T
-    for r, w in zip(rows, want):
-        np.testing.assert_allclose(proj[r["vec_id"]], w, atol=1e-12)
-    assert all(len(v) == 8 for v in proj.values())
-
-
-def test_pca_projection_preserves_topk_neighbors(spark, emb):
-    """Compression sanity: top-k cosine in the 32-dim PCA space keeps a
-    healthy overlap with full-space top-k on the fixture corpus (random
-    data = hardest case; the assertion is about machinery + variance
-    capture, not embedding quality)."""
-    mu, comps, var = S.pca_fit(emb, dim=64, k=32)
-    p = S.pca_project(emb, mu, comps).withColumnRenamed("pvec", "embedding")
-    q_full = emb.filter("vec_id < 5")
-    q_proj = p.filter("vec_id < 5")
-    full = S.brute_force_topk(q_full, emb, k=10).collect()
-    red = S.brute_force_topk(q_proj, p, dim=32, k=10).collect()
-    f = {(r["query_id"], r["neighbor_id"]) for r in full}
-    g = {(r["query_id"], r["neighbor_id"]) for r in red}
-    assert len(f & g) / len(f) >= 0.3, len(f & g) / len(f)
-
-
 def test_sketch_union_hll_bounds(spark):
     """Merged per-slice HLL sketches must estimate within HLL(lgk=12)
     error of the exact distinct count (union-merge loses no accuracy)."""
@@ -1375,19 +1323,6 @@ def test_bloom_no_false_negatives_and_prunes(spark):
     assert len(kept) < 20000 * 0.05
 
 
-def test_bloom_merge_is_union(spark):
-    from map_reduce_folds_spark.operators import sketches as K
-    from pyspark.sql import functions as F
-
-    a = spark.range(0, 100).select(F.col("id").alias("k"))
-    b = spark.range(50, 180).select(F.col("id").alias("k"))
-    merged = K.bloom_merge(K.bloom_bits(a, "k"), K.bloom_bits(b, "k"))
-    direct = K.bloom_bits(a.union(b), "k")
-    m = {(r["word"], r["bits"]) for r in merged.collect()}
-    d = {(r["word"], r["bits"]) for r in direct.collect()}
-    assert m == d
-
-
 def test_bloom_prune_join_equals_plain_join(spark):
     from map_reduce_folds_spark.operators import sketches as K
     from pyspark.sql import functions as F
@@ -1436,27 +1371,6 @@ def test_unigram_logprob_partitioning_invariant(spark):
     b = {(r["doc_id"], r["mean_logprob"])
          for r in Q.unigram_logprob(d.repartition(13)).collect()}
     assert a == b
-
-
-def test_semantic_dedup_transitive_and_keeps_singletons(spark):
-    """SemDeDup clusters are the transitive closure: a chain A≈B≈C keeps
-    only A even when A·C is below threshold; vectors in no pair survive."""
-    import math
-
-    from map_reduce_folds_spark.operators import similarity as S
-
-    def unit(angle):
-        return [math.cos(angle), math.sin(angle)] + [0.0] * 6
-
-    # chain: 0 ~ 1 ~ 2 at ~25° steps (cos 25° ≈ 0.906 > 0.9) but
-    # cos(50°) ≈ 0.64 < 0.9 — pairwise rules would keep 2; closure drops it
-    rows = [(0, unit(0.0)), (1, unit(0.44)), (2, unit(0.88)),
-            (9, [0.0] * 7 + [1.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    kept = {r["vec_id"] for r in
-            S.semantic_dedup(df, dim=8, threshold=0.9, n_planes=4,
-                             n_tables=24).collect()}
-    assert kept == {0, 9}
 
 
 def test_observe_metrics_ride_the_action(spark):
@@ -1529,27 +1443,17 @@ def test_decontaminate_drops_eval_copies_keeps_rest(spark):
 # ---------------------------------------------------------------------------
 
 def test_kmv_distinct_and_intersection_estimates(spark):
-    """Distinct estimates within the KMV error bound (~1/sqrt(k)); the
-    intersection estimate recovers a planted 50% overlap; merge = sketch
-    of the union exactly."""
+    """Distinct estimates within the KMV error bound (~1/sqrt(k)).  The
+    intersection estimates are checked relationally by
+    sketch_kmv_jaccard_sources (kmv_pairwise_jaccard)."""
     from map_reduce_folds_spark.operators import sketches as K
     from pyspark.sql import functions as F
 
     k = 256
     a_items = spark.range(0, 4000).select(F.col("id").cast("string").alias("x"))
-    b_items = spark.range(2000, 6000).select(F.col("id").cast("string").alias("x"))
-    sa = K.kmv_sketch(a_items, "x", k=k).persist()
-    sb = K.kmv_sketch(b_items, "x", k=k).persist()
+    sa = K.kmv_sketch(a_items, "x", k=k)
     est_a = sa.agg(K.kmv_distinct_estimate(k).alias("e")).first()["e"]
     assert abs(est_a - 4000) / 4000 < 3 / (k ** 0.5)
-    merged = {r["h"] for r in K.kmv_merge(sa, sb, k).collect()}
-    direct = {r["h"] for r in
-              K.kmv_sketch(a_items.union(b_items), "x", k=k).collect()}
-    assert merged == direct
-    row = K.kmv_intersection_estimate(sa, sb, k).first()
-    true_inter = 2000
-    assert abs(row["est_intersection"] - true_inter) / true_inter < 0.35
-    assert abs(row["est_union"] - 6000) / 6000 < 3 / (k ** 0.5)
 
 
 def test_kmv_short_sketch_is_exact(spark):
@@ -1560,95 +1464,6 @@ def test_kmv_short_sketch_is_exact(spark):
     s = K.kmv_sketch(small, "x", k=256)
     est = s.agg(K.kmv_distinct_estimate(256).alias("e")).first()["e"]
     assert est == 50.0
-
-
-def test_winsorize_clamps_outliers_only(spark):
-    from map_reduce_folds_spark.operators import quality as Q
-    from pyspark.sql import functions as F
-
-    # 1000 values in [100, 200] plus extreme outliers on both ends
-    base = spark.range(1000).select(
-        (F.lit(100.0) + (F.col("id") % 101)).alias("v"))
-    out_rows = spark.createDataFrame(
-        [(0.001,), (99999.0,)], ["v"])
-    df = base.union(out_rows)
-    w = Q.winsorize(df, "v", 0.01, 0.99, lo=0.0, hi=100000.0, nbuckets=10000)
-    got = w.agg(F.min("v_winsorized"), F.max("v_winsorized"),
-                F.avg("v_winsorized")).first()
-    # outliers pulled into the band; the bulk untouched within bucket width
-    assert 90 <= got[0] <= 110
-    assert 195 <= got[1] <= 215
-    mid = w.where("v = 150").select("v_winsorized").first()[0]
-    assert mid == 150.0
-
-
-def test_winsorize_range_discipline(spark):
-    """Declared [lo, hi] that does not cover the data RAISES (edge-bucket
-    clamping silently corrupts the quantile bounds — r6 ADVICE); omitted
-    lo/hi derive the exact min/max; a constant column is the identity."""
-    import pytest
-    from map_reduce_folds_spark.operators import quality as Q
-    from pyspark.sql import functions as F
-
-    df = spark.range(100).select((F.col("id") + 2000.0).alias("v"))
-    with pytest.raises(ValueError, match="outside the declared"):
-        Q.winsorize(df, "v", lo=0.0, hi=1000.0)  # data entirely above hi
-
-    with pytest.raises(ValueError, match="BOTH lo and hi"):
-        Q.winsorize(df, "v", lo=0.0)  # half-declared range
-
-    # auto-derived range: clamp band sits inside [min, max]
-    w = Q.winsorize(df, "v", 0.05, 0.95, nbuckets=100)
-    got = w.agg(F.min("v_winsorized"), F.max("v_winsorized")).first()
-    assert 2000.0 <= got[0] <= 2010.0 and 2090.0 <= got[1] <= 2099.0
-
-    const = spark.range(10).select(F.lit(7.0).alias("v"))
-    vals = {r[0] for r in
-            Q.winsorize(const, "v").select("v_winsorized").collect()}
-    assert vals == {7.0}
-
-
-def test_winsorize_outlier_refinement(spark):
-    """A single extreme outlier used to stretch the default min/max range
-    so every histogram bucket was 15 625 wide and the quantile bounds
-    landed at bucket-0's midpoint (~7 813) — clamping the ENTIRE bulk
-    upward (r7 ADVICE).  Refinement re-histograms the picked band, so
-    the bounds now land within a few units of the true quantiles."""
-    from map_reduce_folds_spark.operators import quality as Q
-    from pyspark.sql import functions as F
-
-    bulk = spark.range(1001).select(F.col("id").cast("double").alias("v"))
-    df = bulk.union(spark.createDataFrame([(1_000_000.0,)], ["v"]))
-    w = Q.winsorize(df, "v", 0.01, 0.99)  # default range + nbuckets=64
-    got = w.agg(F.min("v_winsorized").alias("lo"),
-                F.max("v_winsorized").alias("hi")).first()
-    # true q01 ~ 10, true q99 ~ 991; refined bucket width ~ 19
-    assert 0.0 <= got["lo"] <= 30.0
-    assert 960.0 <= got["hi"] <= 1010.0
-    mid = w.where("v = 500").select("v_winsorized").first()[0]
-    assert mid == 500.0
-
-
-def test_winsorize_clamp_escape_hatch(spark):
-    """An explicitly narrow range with out_of_range='clamp' keeps tight
-    quantiles over the bulk, folds the outlier into the edge bucket
-    (counted, warned), and the final clamp still bounds it."""
-    import warnings as _w
-
-    from map_reduce_folds_spark.operators import quality as Q
-    from pyspark.sql import functions as F
-
-    bulk = spark.range(1000).select(F.col("id").cast("double").alias("v"))
-    df = bulk.union(spark.createDataFrame([(1_000_000.0,)], ["v"]))
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        w = Q.winsorize(df, "v", 0.01, 0.99, lo=0.0, hi=1000.0,
-                        nbuckets=100, out_of_range="clamp")
-        got = w.agg(F.min("v_winsorized").alias("lo"),
-                    F.max("v_winsorized").alias("hi")).first()
-    assert any("1 out-of-range" in str(r.message) for r in rec)
-    assert 0.0 <= got["lo"] <= 20.0
-    assert 975.0 <= got["hi"] <= 1000.0
 
 
 def test_kmv_pairwise_jaccard_relational(spark):
@@ -1786,67 +1601,6 @@ def test_bpe_early_stop_and_guard(spark):
         B.bpe_learn_merges(df, "text", 0)
 
 
-def test_pq_roundtrip_and_recall(spark, emb):
-    """PQ fit/encode/ADC-top-k: codes in range, encode is deterministic,
-    and ADC top-k overlaps the exact L2 top-k well on the fixture
-    (compressed search is approximate by design)."""
-    import numpy as np
-
-    from map_reduce_folds_spark.operators import similarity as S
-
-    books = S.pq_fit(emb, dim=64, m=8, k=16)
-    assert np.asarray(books).shape == (8, 16, 8)
-
-    codes = S.pq_encode(emb, books)
-    rows = codes.collect()
-    assert all(len(r["pq_code"]) == 8 for r in rows)
-    assert all(0 <= c < 16 for r in rows for c in r["pq_code"])
-    again = {r["vec_id"]: r["pq_code"] for r in S.pq_encode(emb, books).collect()}
-    assert {r["vec_id"]: r["pq_code"] for r in rows} == again
-
-    q = emb.filter("vec_id < 5")
-    got = S.pq_topk(q, codes, books, k=10)
-    res = {}
-    for r in got.collect():
-        res.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    assert set(res) == {0, 1, 2, 3, 4}
-    assert all(len(v) == 10 for v in res.values())
-
-    # exact L2 top-10 via numpy on the collected fixture (small here)
-    x = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-         for r in emb.collect()}
-    ids = sorted(x)
-    M = np.stack([x[i] for i in ids])
-    overlaps = []
-    for qid in range(5):
-        d = ((M - x[qid]) ** 2).sum(axis=1)
-        # exact top-10 EXCLUDING the query itself (pq_topk's convention)
-        exact = set([ids[j] for j in np.argsort(d, kind="stable")
-                     if ids[j] != qid][:10])
-        overlaps.append(len(exact & res[qid]) / 10)
-    # fixture embeddings are RANDOM vectors — the hardest case for PQ
-    # (no cluster structure to quantize); ~0.25 mean overlap vs exact is
-    # the expected regime, same bar as the ivf_pq test
-    assert sum(overlaps) / len(overlaps) >= 0.2, overlaps
-
-
-def test_pq_topk_chunked_equals_unchunked(spark, emb):
-    """The max_cells memory cap (chunking the dense distance block along
-    the row axis) must not change a single result row — force many tiny
-    chunks and compare to the default path."""
-    from map_reduce_folds_spark.operators import similarity as S
-
-    books = S.pq_fit(emb, dim=64, m=8, k=16, sample_limit=256)
-    codes = S.pq_encode(emb, books)
-    q = emb.filter("vec_id < 5")
-    whole = {(r["query_id"], r["neighbor_id"], r["adc_dist"])
-             for r in S.pq_topk(q, codes, books, k=10).collect()}
-    tiny = {(r["query_id"], r["neighbor_id"], r["adc_dist"])
-            for r in S.pq_topk(q, codes, books, k=10,
-                               max_cells=7).collect()}
-    assert tiny == whole and len(whole) == 50
-
-
 def test_simhash_khop_empty_corpus(spark):
     """A pair-free corpus (every doc a unique far-apart signature) must
     yield an empty hops frame with the right schema, not a crash — the
@@ -1858,27 +1612,6 @@ def test_simhash_khop_empty_corpus(spark):
     out = D.simhash_khop_hops(df, max_hamming=0, blocks=4)
     assert out.columns == ["node", "hops"]
     assert out.count() == 0
-
-
-def test_pq_fit_guards(spark, emb):
-    import pytest
-
-    from map_reduce_folds_spark.operators import similarity as S
-
-    with pytest.raises(ValueError, match="not divisible"):
-        S.pq_fit(emb, dim=64, m=7)
-    with pytest.raises(ValueError, match="max_queries"):
-        books = S.pq_fit(emb, dim=64, m=8, k=16, sample_limit=64)
-        codes = S.pq_encode(emb.limit(50), books)
-        S.pq_topk(emb, codes, books, k=5, max_queries=10)
-
-
-def test_pq_encode_zero_exchanges(spark, emb):
-    from map_reduce_folds_spark.operators import similarity as S
-    from map_reduce_folds_spark.plans import count_exchanges
-
-    books = S.pq_fit(emb, dim=64, m=8, k=16, sample_limit=256)
-    assert count_exchanges(S.pq_encode(emb, books)) == 0
 
 
 def test_ngram_jaccard_factored_equals_unfactored(spark, docs):
@@ -1996,55 +1729,6 @@ def test_triangle_list_enumerates_sorted_triples(spark):
     assert got == {(1, 2, 3), (1, 2, 4), (1, 3, 4), (2, 3, 4)}
 
 
-def test_ivf_pq_topk_recall_and_jvm_path(spark, emb, tmp_path_factory):
-    """IVF-PQ: k results per query, reasonable overlap with the exact
-    L2 scan, and — with a stored codes table — ZERO Python nodes in the
-    query-time plan (the ADC fold is pure Catalyst)."""
-    import numpy as np
-
-    from map_reduce_folds_spark.operators import similarity as S
-    from map_reduce_folds_spark.plans import executed_plan
-
-    books = S.pq_fit(emb, dim=64, m=8, k=16)
-    q = emb.filter("vec_id < 5")
-    got = S.ivf_pq_topk(q, emb, books, k=10, n_bits=3, n_probe=4)
-    res = {}
-    for r in got.collect():
-        res.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    assert set(res) == {0, 1, 2, 3, 4}
-    assert all(len(v) == 10 for v in res.values())
-
-    x = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-         for r in emb.collect()}
-    ids = sorted(x)
-    M = np.stack([x[i] for i in ids])
-    overlaps = []
-    for qid in range(5):
-        d = ((M - x[qid]) ** 2).sum(axis=1)
-        exact = [ids[i] for i in np.argsort(d, kind="stable")
-                 if ids[i] != qid][:10]
-        overlaps.append(len(set(exact) & res[qid]) / 10)
-    assert sum(overlaps) / len(overlaps) >= 0.2, overlaps
-
-    # stored index: query-time plan is Python-free
-    p = str(tmp_path_factory.mktemp("ivfpq")) + "/codes.parquet"
-    from pyspark.sql import functions as F
-
-    enc = S.pq_encode(emb, books)
-    cells = emb.select(
-        "vec_id", S.srp_signature(F.col("embedding"), 64, 3, 9).alias("cell"))
-    enc.join(cells, "vec_id").write.parquet(p)
-    codes = spark.read.parquet(p)
-    got2 = S.ivf_pq_topk(q, emb, books, k=10, n_bits=3, n_probe=4,
-                         codes=codes)
-    plan = executed_plan(got2)
-    assert "Python" not in plan and "Pandas" not in plan, plan
-    # stored-index results equal the inline-encode results
-    a = {(r["query_id"], r["neighbor_id"]) for r in got.collect()}
-    b = {(r["query_id"], r["neighbor_id"]) for r in got2.collect()}
-    assert a == b
-
-
 def test_cluster_savings_accounting(spark):
     """Rep election keeps the LARGEST doc (ties → smallest id); the
     per-source accounting balances: n_docs = n_kept + n_dropped and
@@ -2090,32 +1774,6 @@ def test_jaccard_prefix_filter_equals_unfiltered(spark, docs):
     assert (1, 5) in {(r.id_a, r.id_b) for r in
                       D.ngram_jaccard_pairs_prefix(
                           hand, threshold=0.8).collect()}
-
-
-def test_shared_shingle_sets_stage(spark, docs, tmp_path):
-    """The shared gram-index stage (round 12, roadmap #2): every
-    consumer fed a precomputed (materialized) shingle_sets frame must
-    return IDENTICAL rows to its self-derived form, and a parameter
-    mismatch (different n) must fail loudly via the metadata stamp —
-    including after a parquet round-trip."""
-    import pytest
-
-    sets = D.shingle_sets(docs, materialize_path=str(tmp_path / "sets"))
-    for fn, kw, key in (
-        (D.ngram_jaccard_pairs, {"threshold": 0.5}, "jaccard"),
-        (D.shingle_containment_pairs, {"threshold": 0.8}, "containment"),
-        (D.ngram_jaccard_pairs_prefix, {"threshold": 0.5}, "jaccard"),
-    ):
-        want = {(r.id_a, r.id_b): r[key]
-                for r in fn(docs, **kw).collect()}
-        got = {(r.id_a, r.id_b): r[key]
-               for r in fn(docs, sets=sets, **kw).collect()}
-        assert got == want and want, fn.__name__
-    # metadata survives the parquet round-trip and mismatches are loud
-    with pytest.raises(ValueError, match="rebuild the shared stage"):
-        D.ngram_jaccard_pairs(docs, n=5, sets=sets)
-    with pytest.raises(ValueError, match="shingle_sets frame"):
-        D.ngram_jaccard_pairs(docs, sets=docs)
 
 
 def test_bm25_hand_corpus(spark, monkeypatch, tmp_path):
@@ -3123,7 +2781,7 @@ def test_bigram_logprob_short_docs_drop(spark):
 def test_winnow_materialize_path_roundtrip(docs, tmp_path_factory):
     """materialize_path= writes the fingerprint index once and the
     re-read scan is row-identical to the derived relation (the
-    shingle_sets shared-stage discipline)."""
+    materialize_stage shared-stage discipline)."""
     path = str(tmp_path_factory.mktemp("winnow_idx") / "fp")
     derived = T.winnow_fingerprints(docs, k=3, w=4)
     stored = T.winnow_fingerprints(docs, k=3, w=4, materialize_path=path)

@@ -242,13 +242,15 @@ def test_cms_build_single_shuffle(spark):
 
 
 def test_pca_projection_scan_shaped(spark):
-    """pca_project is a zero-shuffle Arrow scan."""
+    """pca_power_project is a zero-shuffle scan: the components are
+    literals, so projecting needs no join and no aggregation."""
     from map_reduce_folds_spark.operators import similarity as S
     from map_reduce_folds_spark.sources import load_table
 
     e = load_table(spark, SF_DIR, "embeddings")
-    mu, comps, _ = S.pca_fit(e, k=8)
-    p = S.pca_project(e, mu, comps)
+    comps = [[1.0 if i % 8 == c else -0.5 for i in range(64)]
+             for c in range(8)]
+    p = S.pca_power_project(e, comps)
     p.collect()
     assert P.count_exchanges(p) == 0, P.executed_plan(p)
 
@@ -668,12 +670,12 @@ def test_interarrival_hist_no_per_type_sort(spark):
 
 def test_no_cache_manager_leaks_across_cached_query_families(spark):
     """Every DataFrame.persist() in the package is paired with a
-    try/finally unpersist (CC, pagerank, BFS, KMV intersection) or
-    replaced by GC-cleaned lazy localCheckpoint.  A persist() on a
-    lazily-returned frame leaks a CacheManager entry that silently
-    recomputes-into-cache on the consumer's first pass (the r8 bench
-    artifact) — sweep the persist-using query families and pin the
-    CacheManager empty."""
+    try/finally unpersist (the iterative graph round driver behind CC,
+    pagerank and BFS) or replaced by GC-cleaned lazy localCheckpoint.
+    A persist() on a lazily-returned frame leaks a CacheManager entry
+    that silently recomputes-into-cache on the consumer's first pass
+    (the r8 bench artifact) — sweep the persist-using query families
+    and pin the CacheManager empty."""
     spark.catalog.clearCache()
     for name in ("dedup_cc_clusters", "dedup_embedding_clusters",
                  "pagerank_event_types", "khop_doc_neighborhood",

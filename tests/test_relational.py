@@ -1318,34 +1318,6 @@ def test_hhi_known_values(spark):
     assert got[300] == (3, 0.375)
 
 
-def test_group_ranksum_hist_equals_window_form(spark):
-    """Σ rank·x from the bucket-offset decomposition must equal the
-    single-window row_number form on random integer groups (ties,
-    negatives, tiny nbuckets so multiple buckets carry mass)."""
-    import random
-
-    from pyspark.sql.window import Window
-
-    rng = random.Random(77)
-    rows = []
-    for g, lo, hi, n in [("u", -40, 40, 120), ("t", 0, 3, 90),
-                         ("w", -10**8, 10**8, 41), ("one", 5, 5, 7)]:
-        rows += [(g, i, rng.randint(lo, hi)) for i in range(n)]
-    df = spark.createDataFrame(rows, "g string, id long, v long")
-    wr = Window.partitionBy("g").orderBy("v", "id")
-    want = {tuple(r) for r in df
-            .withColumn("rk", F.row_number().over(wr))
-            .groupBy("g").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("v").cast("bigint").alias("sum_x"),
-                F.sum(F.col("rk") * F.col("v")).cast("bigint")
-                .alias("ranksum")).collect()}
-    for nb in (4, 8192):
-        got = {tuple(r) for r in W.group_ranksum_hist(
-            df, ["g"], "v", "id", nbuckets=nb).collect()}
-        assert got == want, nb
-
-
 def test_ols2_recovers_planted_coefficients(spark):
     """On noiseless integer data y = 3 + 2*x1 - 5*x2 the closed-form
     normal-equation solve returns the planted coefficients (to the

@@ -77,43 +77,6 @@ def test_register_views(spark):
     assert isinstance(ts_dt, TimestampType), ts_dt
 
 
-def test_write_sorted_zone_maps(spark, tmp_path_factory):
-    """write_sorted's whole point: every output file's parquet footer holds
-    a tight, non-overlapping [min, max] on the range key — the property any
-    engine's zone-map skipping needs.  Checked directly on the footers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    li = sources.load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_shipdate", "l_quantity")
-    p = str(tmp_path_factory.mktemp("sorted")) + "/li"
-    sources.write_sorted(li, p, range_cols=["l_shipdate"], n_files=4)
-
-    ranges = []
-    for f in glob.glob(p + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(md.row_group(rg).column(i)
-                       for i in range(md.num_columns)
-                       if md.row_group(rg).column(i).path_in_schema == "l_shipdate")
-            assert col.statistics is not None and col.statistics.has_min_max
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) == 4
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, ranges  # non-overlapping file ranges
-
-    # round-trip correctness under a selective predicate
-    back = sources.read_parquet(spark, p)
-    cut = ranges[1][0]
-    assert back.filter(F.col("l_shipdate") < cut).count() == \
-        li.filter(F.col("l_shipdate") < cut).count()
-
-
 def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
     """Co-located bucketed join: both sides bucketed on the key → the join
     plan contains zero shuffle Exchanges."""
@@ -142,100 +105,6 @@ def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
         spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_zorder_write_skips_files_on_both_dimensions(spark, tmp_path_factory):
-    """Z-order layout: parquet footer min/max must be tight on BOTH
-    z-ordered columns, so a 2-D box predicate overlaps only a small
-    fraction of files — measured directly from the footers (engine-
-    independent), against a shuffled baseline layout where every file
-    overlaps every box."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    root = str(tmp_path_factory.mktemp("zorder"))
-    df = spark.range(200_000).select(
-        F.col("id"),
-        (F.col("id") % 1000).cast("double").alias("x"),
-        F.floor(F.col("id") / 1000).cast("double").alias("y"),
-    )
-    zpath, rpath = os.path.join(root, "z"), os.path.join(root, "r")
-    sources.write_zordered(df, zpath, ["x", "y"], n_files=16)
-    df.repartition(16).write.parquet(rpath)  # hash-scattered baseline
-
-    def overlap_fraction(path):
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        assert len(files) >= 8
-        boxes = [(100.0, 150.0, 20.0, 60.0), (800.0, 850.0, 120.0, 160.0),
-                 (0.0, 50.0, 0.0, 40.0)]
-        hit = total = 0
-        for lox, hix, loy, hiy in boxes:
-            for f in files:
-                md = pq.ParquetFile(f).metadata
-                idx = {md.schema.column(i).name: i
-                       for i in range(md.num_columns)}
-                xs = [md.row_group(g).column(idx["x"]).statistics
-                      for g in range(md.num_row_groups)]
-                ys = [md.row_group(g).column(idx["y"]).statistics
-                      for g in range(md.num_row_groups)]
-                xmin, xmax = min(s.min for s in xs), max(s.max for s in xs)
-                ymin, ymax = min(s.min for s in ys), max(s.max for s in ys)
-                total += 1
-                if xmin <= hix and xmax >= lox and ymin <= hiy and ymax >= loy:
-                    hit += 1
-        return hit / total
-
-    z_frac, r_frac = overlap_fraction(zpath), overlap_fraction(rpath)
-    assert r_frac == 1.0          # scattered layout can skip nothing
-    assert z_frac <= 0.5, z_frac  # z-order skips most files per box
-    # layout must not change the data
-    back = spark.read.parquet(zpath)
-    assert back.count() == 200_000
-    assert back.agg(F.sum("x"), F.sum("y")).first() == \
-        df.agg(F.sum("x"), F.sum("y")).first()
-
-
-def test_zorder_timestamp_and_degenerate_columns(spark, tmp_path_factory):
-    import os
-
-    root = str(tmp_path_factory.mktemp("zorder_ts"))
-    e = sources.load_table(spark, SF_DIR, "events")
-    p = os.path.join(root, "ev")
-    sources.write_zordered(e, p, ["ts", "user_id"], n_files=4)
-    back = spark.read.parquet(p)
-    assert back.count() == e.count()
-    # constant column degenerates to bucket 0 without error
-    sources.write_zordered(e.withColumn("k", F.lit(1.0)),
-                           os.path.join(root, "c"), ["k", "user_id"],
-                           n_files=2)
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """64 tiny files compact to the computed file count with identical
-    data; sort_within_by orders rows inside each output file."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_folds_spark.sources import compact_parquet
-
-    src = str(tmp_path / "small")
-    dst = str(tmp_path / "compacted")
-    spark.range(10_000).withColumn("v", F.col("id") % 97) \
-        .repartition(64).write.parquet(src)
-    import glob
-    n_src = len(glob.glob(f"{src}/*.parquet"))
-    assert n_src == 64
-
-    n_out = compact_parquet(spark, src, dst, target_file_bytes=1 << 30,
-                            sort_within_by=["id"])
-    assert n_out == 1
-    assert len(glob.glob(f"{dst}/*.parquet")) == 1
-    a = spark.read.parquet(src).agg(
-        F.count(F.lit(1)), F.sum("id"), F.sum("v")).collect()
-    b = spark.read.parquet(dst).agg(
-        F.count(F.lit(1)), F.sum("id"), F.sum("v")).collect()
-    assert a == b
 
 
 def test_merge_upsert_semantics(spark, tmp_path):

@@ -933,51 +933,3 @@ def test_sessionize_stream_stateful_reads_directory_shaped_events(
     want = QUERIES["sessionize_events"](spark, str(tmp_path))
     got_sizes = sizes(got.collect(), "session_start_us")
     assert got_sizes and got_sizes == sizes(want.collect(), "session_id")
-
-
-def test_every_public_stream_function_is_reached_or_kept():
-    """Every public top-level function of ``streaming`` is reached from
-    package code (another module, module-level code, or a reached function
-    of ``streaming`` itself) or is kept on purpose below.  References are
-    names, attributes and imports found by AST, so a name in a docstring
-    or a call from an unreached function does not count: a twin that only
-    its own tests call fails here."""
-    import ast
-    import pathlib
-
-    from map_reduce_folds_spark import streaming
-
-    kept = {
-        "stream_mapreduce": "the windowed streaming-engine entry point",
-        "stateful_fold": "the custom-fold streaming-engine entry point",
-        "stream_scd2": "its tests are the runtime's multi-row-emission tests",
-        "stream_holtwinters": "its test is the runtime's list-valued-state test",
-    }
-
-    def refs(node):
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                yield n.id
-            elif isinstance(n, ast.Attribute):
-                yield n.attr
-            elif isinstance(n, ast.ImportFrom):
-                yield from (a.name for a in n.names)
-
-    mod = pathlib.Path(streaming.__file__)
-    tree = ast.parse(mod.read_text())
-    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
-    used = {r for n in tree.body if not isinstance(n, ast.FunctionDef)
-            for r in refs(n)}
-    for path in mod.parents[1].rglob("*.py"):
-        if path != mod:
-            used.update(refs(ast.parse(path.read_text())))
-    live = set(kept) | (used & defs.keys())
-    todo = list(live)
-    while todo:
-        for r in refs(defs[todo.pop()]):
-            if r in defs and r not in live:
-                live.add(r)
-                todo.append(r)
-    unreached = sorted(n for n in defs
-                       if not n.startswith("_") and n not in live)
-    assert not unreached, f"unreached and not kept: {unreached}"

@@ -212,16 +212,25 @@ def main():
         import subprocess
 
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        try:
-            head = subprocess.run(
-                ["git", "rev-parse", "HEAD"], cwd=repo, timeout=30,
-                capture_output=True, text=True).stdout.strip()
-        except Exception:  # noqa: BLE001 — evidence field is best-effort
-            head = None
+
+        def git(*args: str) -> str | None:
+            try:
+                r = subprocess.run(["git", *args], cwd=repo, timeout=30,
+                                   capture_output=True, text=True)
+            except Exception:  # noqa: BLE001 — evidence is best-effort
+                return None
+            return r.stdout.strip() if r.returncode == 0 else None
+
+        head = git("rev-parse", "HEAD")
+        # head_commit names the checked tree only when no tracked file
+        # differs from it
+        status = git("status", "--porcelain", "--untracked-files=no")
         with open(os.path.join(repo, "LOCAL_CORRECTNESS.json"), "w") as f:
             json.dump({"sf_dir": sf_dir, "n_queries": len(results),
                        "pass": n_pass, "fail": n_fail, "rows_only": n_weak,
                        "head_commit": head,
+                       "worktree_clean": None if status is None
+                       else status == "",
                        "queries": results}, f, indent=1)
     sys.exit(1 if n_fail else 0)
 
